@@ -25,16 +25,34 @@ Plan shape / scale notes:
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from engine.analysis import tokens
+from engine.codecs import decode_doc_ids_batch, decode_posting_blocks_batch
 from engine.config import SCORE_DECIMALS, TOKEN_PATTERN, IndexConfig, DEFAULT_CONFIG
+from engine.wand import _idf, bm25_tf_norm, keep_not_in, sorted_ids, spark_round
 
 # Largest superseded-doc set expressed as a literal NOT IN filter; beyond
 # this the exact path switches to a broadcast anti-join (a plan with 10^5+
 # literals chokes Catalyst long before max_deleted_driver's 10^6 cap).
 MAX_EXCLUDED_LITERALS = 10_000
+
+# Most candidate blocks IndexReader gathers to the driver for one query
+# (~7.7M postings at block_size 128); a query with more blocks runs the
+# distributed exact / WAND plans instead. On a 1M-doc store at local[4]
+# (4-core host) driver scoring beat both distributed plans at every size
+# measured, 64 to 60,172 blocks (2.5 s vs 4.2 s exact at the top), so the
+# crossover was not reached and the cap sits at the largest size measured.
+# It also bounds what one query holds on the driver: peak driver RSS grew
+# ~0.7 GB at 60,172 blocks.
+GATHER_MAX_BLOCKS = 60_000
+
+# block columns the driver scorer reads
+_GATHER_COLS = ("term", "n", "doc_bytes", "tf_bytes", "dl_bytes")
 
 
 def corpus_tokens(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -433,16 +451,94 @@ def search_via_alias(
     )
 
 
+def topk_rounded(doc_ids: np.ndarray, raw: np.ndarray, k: int) -> pd.DataFrame:
+    """(doc_id, score) top-k by (rounded score desc, doc_id asc), the order
+    the Spark plans produce. `doc_ids` must be ascending (np.unique order),
+    so of the docs tied at the k-th rounded score the first ones win."""
+    scores = spark_round(raw)
+    if k <= 0:
+        doc_ids, scores = doc_ids[:0], scores[:0]
+    elif len(scores) > k:
+        kth = np.partition(scores, len(scores) - k)[len(scores) - k]
+        above = np.flatnonzero(scores > kth)
+        ties = np.flatnonzero(scores == kth)[: k - len(above)]
+        sel = np.concatenate([above, ties])
+        doc_ids, scores = doc_ids[sel], scores[sel]
+    order = np.lexsort((doc_ids, -scores))
+    return pd.DataFrame(
+        {"doc_id": doc_ids[order].astype(np.int64), "score": scores[order]}
+    )
+
+
+def exact_topk_blocks(
+    blocks: pd.DataFrame,
+    n_docs: int,
+    avgdl: float,
+    query_terms: list[str],
+    k: int = 10,
+    cfg: IndexConfig = DEFAULT_CONFIG,
+    excluded: np.ndarray | None = None,
+    codec: str = "varint",
+    min_should_match: int | None = None,
+    must_not_terms: list[str] | None = None,
+) -> pd.DataFrame:
+    """bm25_topk_from_index over block rows already on the driver, in
+    numpy: decode, score, drop `excluded` (sorted superseded ids), sum per
+    doc, apply min_should_match and must_not, rank. Same df, formula,
+    rounding and tie-break as the Spark plan, so results are identical.
+    `blocks` must hold every block of the query and must_not terms."""
+    pos = blocks[blocks["term"].isin(set(query_terms))]
+    ns = pos["n"].to_numpy(np.int64)
+    docs, tfs, dls = decode_posting_blocks_batch(
+        pos["doc_bytes"], pos["tf_bytes"], pos["dl_bytes"], ns, codec=codec
+    )
+    # df = summed block n: the same pre-live-filter count as term_stats
+    # over the candidate blocks
+    df = pos.groupby("term")["n"].sum()
+    idf = {t: _idf(float(n_docs), float(d)) for t, d in df.items()}
+    contrib = np.repeat(pos["term"].map(idf).to_numpy(np.float64), ns) * bm25_tf_norm(
+        tfs, dls.astype(np.float64), cfg.k1, cfg.b, float(avgdl)
+    )
+    keep = keep_not_in(docs, excluded)
+    uids, inv = np.unique(docs[keep], return_inverse=True)
+    raw = np.bincount(inv, weights=contrib[keep], minlength=len(uids))
+    # doc ids are unique per term, so postings per doc = distinct terms matched
+    if min_should_match:
+        hit = np.bincount(inv, minlength=len(uids)) >= int(min_should_match)
+        uids, raw = uids[hit], raw[hit]
+    if must_not_terms:
+        neg = blocks[blocks["term"].isin(set(must_not_terms))]
+        neg_ids = decode_doc_ids_batch(
+            neg["doc_bytes"], neg["n"].to_numpy(np.int64), codec=codec
+        )
+        hit = keep_not_in(uids, np.unique(neg_ids))
+        uids, raw = uids[hit], raw[hit]
+    return topk_rounded(uids, raw, k)
+
+
 class IndexReader:
     """Query-server view of a persisted index: the index is opened ONCE
-    (postings/docs cached, stats + per-term df and the deleted-doc set
-    resolved up front) and then serves many queries without re-reading
-    parquet footers or re-deriving live-docs per query.
+    (postings/docs cached, stats and the deleted-doc set resolved up front)
+    and then serves many queries without re-reading parquet footers or
+    re-deriving live docs per query.
 
     This is the searcher/reader split Lucene makes (ES holds an
-    IndexSearcher open across requests); per-query work reduces to
-    filter + decode + score on cached data. Re-open after a merge/ingest
-    commit to see new segments (call `refresh()`)."""
+    IndexSearcher open across requests). A `search` / `search_wand` call
+    gathers its candidate blocks (query and must_not terms) from the cached
+    postings in ONE Spark action, `where(term IN ...).limit(cap + 1)
+    .toArrow()`, then decodes, scores and ranks them exactly in numpy on
+    the driver (exact_topk_blocks) and returns the rows as an Arrow-built
+    local DataFrame: one Spark job per search. df comes from the gathered
+    blocks and superseded docs drop out by a binary search over the sorted
+    deleted set. Two cases keep the distributed plans (bm25_topk_from_index
+    / wand_topk, as search_store* run them): a query with more than
+    GATHER_MAX_BLOCKS blocks, and a deleted set that overflowed
+    cfg.max_deleted_driver (a live-docs join, cached once).
+
+    Concurrent callers (bench/soak.py threads) are safe: a call keeps its
+    gathered blocks in locals, and the only shared mutable state is the
+    per-term df memo. Re-open after a merge/ingest commit to see new
+    segments (call `refresh()`)."""
 
     def __init__(self, spark: SparkSession, store, cfg: IndexConfig = DEFAULT_CONFIG):
         self.spark = spark
@@ -474,12 +570,13 @@ class IndexReader:
             cap = self.cfg.max_deleted_driver
             rows = deleted.select("doc_id").limit(cap + 1).collect()
             if len(rows) > cap:
-                # too many superseded docs to ship to every task — WAND
-                # queries fall back to the distributed exact path until the
-                # next merge shrinks the set
+                # too many superseded docs to hold on the driver — queries
+                # run the distributed exact path until the next merge
+                # shrinks the set
                 self._deleted_overflow = True
             else:
                 self.deleted = frozenset(r["doc_id"] for r in rows)
+        self._deleted_sorted = sorted_ids(self.deleted)
         self.postings.count()  # materialize the caches
         self._term_stats.count()
 
@@ -509,6 +606,28 @@ class IndexReader:
                 c.unpersist()
                 setattr(self, attr, None)
 
+    def _gather(self, terms: set[str]) -> pd.DataFrame | None:
+        """The blocks of `terms` from the cached postings in one Spark
+        action, or None when the deleted set overflowed or there are more
+        than GATHER_MAX_BLOCKS blocks (the caller then runs the
+        distributed plan)."""
+        if self._deleted_overflow:
+            return None
+        tbl = (
+            self.postings.where(F.col("term").isin(sorted(terms)))
+            .select(*_GATHER_COLS)
+            .limit(GATHER_MAX_BLOCKS + 1)
+            .toArrow()
+        )
+        if tbl.num_rows > GATHER_MAX_BLOCKS:
+            return None
+        return tbl.to_pandas()
+
+    def _local(self, pdf: pd.DataFrame) -> DataFrame:
+        # built from an Arrow table: a local relation, so collect() runs no
+        # job (an EMPTY pandas frame would become an RDD scan, one job)
+        return self.spark.createDataFrame(pa.Table.from_pandas(pdf, preserve_index=False))
+
     def search(
         self,
         query_terms: list[str],
@@ -517,19 +636,44 @@ class IndexReader:
         min_should_match: int | None = None,
         must_not_terms: list[str] | None = None,
     ) -> DataFrame:
-        """Exact BM25 top-k from the cached index.
-
-        Superseded docs are excluded via the bounded driver-side set (a
-        NOT IN literal, same as the WAND path) — NOT a per-query window
-        over the whole docs table; the distributed live-docs join only
-        appears when the set overflowed, and then from a cache built once.
+        """Exact BM25 top-k: one gather of the query's (and must_not)
+        blocks, scored on the driver (exact_topk_blocks).
         `min_should_match` / `must_not_terms`: ES bool semantics (see
-        bm25_topk); the must_not blocks come from the CACHED postings."""
+        bm25_topk)."""
+        q_terms = sorted(set(query_terms))
+        neg = sorted(set(must_not_terms or ()))
+        blocks = self._gather(set(q_terms) | set(neg))
+        if blocks is None:
+            return self._search_distributed(
+                q_terms, k, conjunctive, min_should_match, neg
+            )
+        return self._local(self._exact_blocks(
+            blocks, q_terms, k, conjunctive, min_should_match, neg
+        ))
+
+    def _exact_blocks(
+        self, blocks, q_terms, k, conjunctive=False, min_should_match=None,
+        must_not_terms=None,
+    ) -> pd.DataFrame:
+        return exact_topk_blocks(
+            blocks, self.stats["n_docs"], self.stats["avgdl"], q_terms, k=k,
+            cfg=self.cfg, excluded=self._deleted_sorted, codec=self._codec,
+            min_should_match=len(q_terms) if conjunctive else min_should_match,
+            must_not_terms=must_not_terms,
+        )
+
+    def _search_distributed(
+        self, q_terms, k, conjunctive=False, min_should_match=None,
+        must_not_terms=None,
+    ) -> DataFrame:
+        """bm25_topk_from_index on the cached postings. Superseded docs are
+        excluded via the bounded driver-side set (a NOT IN literal) or, when
+        it overflowed, by a live-docs join built once and cached."""
         return bm25_topk_from_index(
             self.postings,
             self.stats["n_docs"],
             self.stats["avgdl"],
-            query_terms,
+            q_terms,
             k=k,
             cfg=self.cfg,
             conjunctive=conjunctive,
@@ -537,7 +681,7 @@ class IndexReader:
             excluded_doc_ids=None if self._deleted_overflow else self.deleted,
             codec=self._codec,
             min_should_match=min_should_match,
-            must_not_terms=must_not_terms,
+            must_not_terms=must_not_terms or None,
         )
 
     def _live_docs_df(self):
@@ -559,43 +703,59 @@ class IndexReader:
         stats_out: dict | None = None,
         strategy: str = "wand",
     ) -> DataFrame:
-        """Block-max WAND top-k from the cached index.
+        """BM25 top-k, rank-identical to `search`. Below GATHER_MAX_BLOCKS
+        it scores like `search`: one gather, exact numpy scoring on the
+        driver. With every candidate block already on the driver, the
+        vectorized exact scorer beat the block-max scan at every block
+        count measured (see GATHER_MAX_BLOCKS), so the scan (wand_topk) and
+        the `strategy="auto"` cost model (engine.wand.wand_is_cheaper) run
+        only in the distributed fallbacks (see the class docstring).
 
-        When the superseded-doc set exceeds cfg.max_deleted_driver, falls
-        back to the exact path (distributed live-docs anti-join) — same
-        results, no giant broadcast set. `strategy="auto"` is the
-        cost-based plan choice (engine.wand.wand_is_cheaper over the
-        memoized per-term dfs): few-term long-postings queries run WAND,
-        everything else the vectorized exact path — rank-identical either
-        way. `stats_out` (evidence/debug): candidate/scored block counts
-        (see wand_topk) plus "strategy" = which plan actually ran."""
-        from engine.wand import wand_is_cheaper, wand_topk
-
+        `stats_out` (evidence/debug) is filled from the same execution. On
+        the driver: candidate_blocks = candidate_block_ranges =
+        blocks_scored (every gathered block is scored), num_ranges 1,
+        candidate_postings, and "strategy" = "exact_driver" ("exact_auto"
+        under strategy="auto")."""
         if strategy not in ("wand", "auto"):
             raise ValueError(f"strategy must be 'wand' or 'auto', got {strategy!r}")
+        st = stats_out if stats_out is not None else {}
+        q_terms = sorted(set(query_terms))
         if self._deleted_overflow:
-            if stats_out is not None:
-                stats_out["fallback_exact"] = True
-                stats_out["strategy"] = "exact_fallback"
-            return self.search(query_terms, k=k)
-        if strategy == "auto":
-            df_map = self.df_for_terms(query_terms)
-            if stats_out is not None:
-                stats_out["candidate_postings"] = int(sum(df_map.values()))
-            if not wand_is_cheaper(df_map, self.cfg):
-                if stats_out is not None:
-                    stats_out["strategy"] = "exact_auto"
-                return self.search(query_terms, k=k)
-            if stats_out is not None:
-                stats_out["strategy"] = "wand_auto"
+            st["fallback_exact"] = True
+            st["strategy"] = "exact_fallback"
+            return self._search_distributed(q_terms, k)
+        blocks = self._gather(set(q_terms))
+        if blocks is None:
+            return self._wand_distributed(q_terms, k, stats_out, strategy)
+        n = len(blocks)
+        # on the driver the cost-based choice is always the exact scorer
+        st.update(
+            strategy="exact_auto" if strategy == "auto" else "exact_driver",
+            candidate_blocks=n, candidate_block_ranges=n, blocks_scored=n,
+            num_ranges=1, candidate_postings=int(blocks["n"].sum()),
+        )
+        return self._local(self._exact_blocks(blocks, q_terms, k))
 
+    def _wand_distributed(self, q_terms, k, stats_out, strategy) -> DataFrame:
+        """wand_topk over the cached postings, with dfs from the memoized
+        term stats (the auto choice too)."""
+        from engine.wand import wand_is_cheaper, wand_topk
+
+        st = stats_out if stats_out is not None else {}
+        df_map = self.df_for_terms(q_terms)
+        if strategy == "auto":
+            st["candidate_postings"] = int(sum(df_map.values()))
+            if not wand_is_cheaper(df_map, self.cfg):
+                st["strategy"] = "exact_auto"
+                return self._search_distributed(q_terms, k)
+            st["strategy"] = "wand_auto"
         return wand_topk(
             self.spark,
             self.postings,
             self.stats["n_docs"],
             self.stats["avgdl"],
-            self.df_for_terms(query_terms),
-            query_terms,
+            df_map,
+            q_terms,
             k=k,
             cfg=self.cfg,
             doc_id_hwm=self.doc_id_hwm,

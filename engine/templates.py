@@ -11,10 +11,10 @@ settings without the caller repeating them.
 Storage: one `_templates.json` per index root (the cluster-state analog),
 written atomically like every other manifest. Matching: ES 5.x orders by
 the template's `order` value (higher wins per-setting); this engine keeps
-the subset that matters for its settings surface: templates sorted by
-(order desc, name asc), FIRST match supplies defaults, and explicit
-create-time settings always win (exactly ES's request-over-template
-precedence).
+the subset that matters for its settings surface: every matching
+template applies, lowest `order` first (ties by name), so a higher-order
+template overrides per setting; explicit create-time settings always win
+(exactly ES's request-over-template precedence).
 """
 
 from __future__ import annotations
@@ -25,12 +25,28 @@ import os
 
 from engine.segments import _atomic_write_json
 
+
+def _is_num(v) -> bool:
+    return isinstance(v, (int, float)) and not isinstance(v, bool)
+
+
+def _is_pos_int(v) -> bool:
+    return isinstance(v, int) and not isinstance(v, bool) and v > 0
+
+
 # the settings a template may carry — the IndexConfig surface that is
-# recorded at create time (segments.py _meta.json + store behavior flags)
-TEMPLATE_SETTINGS = (
-    "codec", "routing_col", "store_positions", "store_source",
-    "block_size", "k1", "b",
-)
+# recorded at create time (segments.py _meta.json + store behavior flags) —
+# each with its value check and what it accepts, mirroring index_admin's
+# argparse choices and the IndexConfig field types
+TEMPLATE_SETTINGS = {
+    "codec": (lambda v: v in ("varint", "pfor"), "'varint' or 'pfor'"),
+    "routing_col": (lambda v: v is None or isinstance(v, str), "a str or null"),
+    "store_positions": (lambda v: isinstance(v, bool), "a bool"),
+    "store_source": (lambda v: isinstance(v, bool), "a bool"),
+    "block_size": (_is_pos_int, "an int > 0"),
+    "k1": (_is_num, "a number"),
+    "b": (_is_num, "a number"),
+}
 
 
 def _path(root: str) -> str:
@@ -40,13 +56,20 @@ def _path(root: str) -> str:
 def put_template(
     root: str, name: str, pattern: str, settings: dict, order: int = 0
 ) -> dict:
-    """Create/replace template `name`. Unknown settings are rejected up
-    front (a typo'd template would otherwise silently do nothing)."""
+    """Create/replace template `name`. Unknown settings and bad values
+    are rejected up front (a typo'd template would otherwise silently do
+    nothing, and a bad value would only fail at ingest or decode time)."""
     bad = sorted(set(settings) - set(TEMPLATE_SETTINGS))
     if bad:
         raise ValueError(
             f"unknown template settings {bad}; allowed: {list(TEMPLATE_SETTINGS)}"
         )
+    for key, value in settings.items():
+        ok, want = TEMPLATE_SETTINGS[key]
+        if not ok(value):
+            raise ValueError(
+                f"template setting {key}={value!r}: expected {want}"
+            )
     tpls = get_templates(root)
     tpls = [t for t in tpls if t["name"] != name]
     entry = {

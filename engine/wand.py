@@ -36,6 +36,7 @@ from __future__ import annotations
 
 import heapq
 import math
+from decimal import ROUND_HALF_UP, Decimal
 from typing import Iterator
 
 import numpy as np
@@ -53,6 +54,8 @@ _EPS = 1e-9
 # then keep any window whose raw upper bound could still ROUND UP into a
 # tie with θ: margin = half the rounding quantum.
 _PRUNE_MARGIN = 0.5 * 10**-SCORE_DECIMALS + _EPS
+_SCALE = 10.0**SCORE_DECIMALS
+_QUANTUM = Decimal(1).scaleb(-SCORE_DECIMALS)
 
 # Blocks spanning at most this many doc-id ranges replicate via
 # explode(sequence(...)) (zero decode); wider blocks decode their doc ids
@@ -62,6 +65,49 @@ SPAN_EXPLODE_MAX = 64
 
 def _idf(n_docs: float, df: float) -> float:
     return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+
+
+def bm25_tf_norm(tf, dl, k1: float, b: float, avgdl: float):
+    """tf / (tf + k1*(1 - b + b*dl/avgdl)): the numpy BM25 tf saturation (a
+    posting contributes idf * this). The one numpy copy of the formula,
+    shared by the block bounds, the block-max scan and IndexReader's driver
+    scorer; the same operation order as the Spark expression in
+    engine.query.index_term_contribs, so scores agree bit for bit."""
+    return tf / (tf + k1 * (1.0 - b + b * dl / avgdl))
+
+
+def spark_round(x) -> np.ndarray:
+    """Spark's round(x, SCORE_DECIMALS) over doubles, as a 1-d array:
+    HALF_UP on each double's shortest decimal form. Away from a decimal
+    half that is rint(x * 10^d) / 10^d; a double whose shortest form ends
+    in a 5 right after the last kept decimal (where rint, half-even on the
+    binary value, may differ) takes the Decimal path."""
+    x = np.array(x, dtype=np.float64, ndmin=1)
+    y = x * _SCALE
+    out = np.rint(y) / _SCALE
+    ay = np.abs(y)
+    for i in np.flatnonzero(np.abs(ay - np.floor(ay) - 0.5) <= 1e-3):
+        out.flat[i] = float(
+            Decimal(repr(float(x.flat[i]))).quantize(_QUANTUM, rounding=ROUND_HALF_UP)
+        )
+    return out
+
+
+def sorted_ids(ids) -> np.ndarray | None:
+    """A doc-id set as a sorted int64 array (None when empty), for
+    keep_not_in's binary-search membership."""
+    if not ids:
+        return None
+    return np.sort(np.fromiter(ids, dtype=np.int64, count=len(ids)))
+
+
+def keep_not_in(ids: np.ndarray, excl: np.ndarray | None) -> np.ndarray:
+    """Boolean mask of `ids` NOT in the sorted array `excl`."""
+    if excl is None or not len(excl):
+        return np.ones(len(ids), dtype=bool)
+    pos = np.searchsorted(excl, ids)
+    pos[pos == len(excl)] = 0
+    return excl[pos] != ids
 
 
 def _block_upper_bounds(
@@ -82,13 +128,13 @@ def _block_upper_bounds(
     )
     mt = pdf["max_tf"].to_numpy(np.float64)
     md = pdf["min_dl"].to_numpy(np.float64)
-    ubs = idf_arr * (mt / (mt + k1 * (1.0 - b + b * md / avgdl)))
+    ubs = idf_arr * bm25_tf_norm(mt, md, k1, b, avgdl)
     if valid.any():
         sub = pdf.loc[valid]
         cnts = np.fromiter((len(v) for v in sub["imp_tf"]), np.int64, len(sub))
         ftf = np.concatenate([np.asarray(v, np.float64) for v in sub["imp_tf"]])
         fdl = np.concatenate([np.asarray(v, np.float64) for v in sub["imp_dl"]])
-        s = ftf / (ftf + k1 * (1.0 - b + b * fdl / avgdl))
+        s = bm25_tf_norm(ftf, fdl, k1, b, avgdl)
         seg = np.concatenate(([0], np.cumsum(cnts[:-1])))
         ubs[valid] = idf_arr[valid] * np.maximum.reduceat(s, seg)
     return ubs
@@ -111,10 +157,7 @@ def _scan_partition(
     # materialize + sort the exclusion set ONCE per partition: the window
     # loop runs many times and list(frozenset) + isin's internal sort per
     # window is O(|excluded| log |excluded|) each time
-    excl_arr = (
-        np.sort(np.fromiter(excluded, dtype=np.int64, count=len(excluded)))
-        if excluded else None
-    )
+    excl_arr = sorted_ids(excluded)
 
     terms = pdf["term"].to_numpy()
     mins = np.maximum(pdf["min_doc"].to_numpy(np.int64), lo)
@@ -123,7 +166,7 @@ def _scan_partition(
 
     edges = np.unique(np.concatenate([mins, maxs + 1]))
     heap: list[tuple[float, int]] = []  # (score, -doc_id): weakest first
-    decoded: dict[int, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
+    decoded: dict[int, tuple[np.ndarray, np.ndarray]] = {}
     n_blocks_scored = 0
 
     for wi in range(len(edges) - 1):
@@ -145,8 +188,7 @@ def _scan_partition(
                 dl = decode_value_stream(
                     bytes(r["dl_bytes"]), rn, codec
                 ).astype(np.float64)
-                idf = idf_map[r["term"]]
-                contrib = idf * (t / (t + k1 * (1.0 - b + b * dl / avgdl)))
+                contrib = idf_map[terms[i]] * bm25_tf_norm(t, dl, k1, b, avgdl)
                 decoded[i] = (d, contrib)
                 n_blocks_scored += 1
             d, contrib = decoded[i]
@@ -159,19 +201,15 @@ def _scan_partition(
         ids = np.concatenate(ids_parts)
         scs = np.concatenate(sc_parts)
         if excl_arr is not None:
-            # ids may repeat across terms but each is in-range; searchsorted
-            # membership against the pre-sorted exclusion array
-            pos = np.searchsorted(excl_arr, ids)
-            pos[pos == len(excl_arr)] = 0
-            keep = excl_arr[pos] != ids if len(excl_arr) else np.ones(len(ids), bool)
+            keep = keep_not_in(ids, excl_arr)
             ids, scs = ids[keep], scs[keep]
             if ids.size == 0:
                 continue
         uids, inv = np.unique(ids, return_inverse=True)
         tot = np.zeros(len(uids))
         np.add.at(tot, inv, scs)
-        for doc, s in zip(uids, tot):
-            cand = (round(float(s), SCORE_DECIMALS), -int(doc))
+        for doc, s in zip(uids.tolist(), spark_round(tot).tolist()):
+            cand = (s, -doc)
             if len(heap) < k:
                 heapq.heappush(heap, cand)
             elif cand > heap[0]:

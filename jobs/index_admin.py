@@ -337,8 +337,9 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.cmd in ("create", "create-and-alias"):
         # template settings as defaults, explicit --codec winning (ES
-        # request-over-template precedence). argparse defaults --codec to
-        # "varint", so only a non-default flag counts as explicit.
+        # request-over-template precedence). --codec defaults to None, so
+        # any passed flag counts as explicit and no flag defers to the
+        # templates.
         from engine.templates import resolve_create_config
 
         explicit = {} if args.codec is None else {"codec": args.codec}

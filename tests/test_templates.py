@@ -39,6 +39,32 @@ def test_unknown_setting_rejected(tmp_path):
         put_template(str(tmp_path), "bad", "x-*", {"codekk": "pfor"})
 
 
+@pytest.mark.parametrize("settings", [
+    {"codec": "zstd"},
+    {"block_size": "128"},
+    {"block_size": 0},
+    {"block_size": True},
+    {"k1": "1.2"},
+    {"b": None},
+    {"store_positions": "yes"},
+    {"store_source": 1},
+    {"routing_col": 7},
+])
+def test_bad_setting_value_rejected_at_put(tmp_path, settings):
+    root = str(tmp_path)
+    with pytest.raises(ValueError, match="template setting"):
+        put_template(root, "bad", "x-*", settings)
+    assert get_templates(root) == []  # nothing persisted
+
+
+def test_valid_setting_values_accepted(tmp_path):
+    entry = put_template(str(tmp_path), "ok", "x-*", {
+        "codec": "pfor", "block_size": 64, "k1": 1, "b": 0.5,
+        "store_positions": False, "store_source": True, "routing_col": None,
+    })
+    assert entry["settings"]["block_size"] == 64
+
+
 def test_request_overrides_template(tmp_path):
     root = str(tmp_path)
     put_template(root, "t", "idx-*", {"codec": "pfor", "store_source": True})

@@ -9,7 +9,9 @@ fast and whole blocks fall below the prune bound.
 
 Denominator: candidate block-range replicas (a block reaches every
 doc-id range where it has a posting — each replica is independently
-skippable), from wand_topk's stats_out. skip_ratio = 1 - scored/replicas.
+skippable), from search_store_wand's stats_out: the distributed block-max
+scan (IndexReader scores a query's gathered blocks exactly on the driver,
+with nothing to skip). skip_ratio = 1 - scored/replicas.
 
 Usage:
   # against an existing store (e.g. the 1M/2M soak store)
@@ -60,15 +62,14 @@ def build_synthetic(spark, n_docs: int, vocab_size: int):
 
 
 def measure(spark, store, label: str, queries) -> dict:
-    from engine.query import IndexReader
+    from engine.wand import search_store_wand
 
-    reader = IndexReader(spark, store)
-    reader.search_wand(["warmup"], k=1).collect()
+    search_store_wand(spark, store, ["warmup"], k=1).collect()
     per_query = []
     for terms, k in queries:
         st: dict = {}
         t = time.perf_counter()
-        reader.search_wand(terms, k=k, stats_out=st).collect()
+        search_store_wand(spark, store, terms, k=k, stats_out=st).collect()
         wall = time.perf_counter() - t
         if st.get("fallback_exact"):
             # deleted-set overflow forced the exact path: no block stats
