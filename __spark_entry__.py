@@ -964,6 +964,14 @@ def _q_delete_by_query_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# the update_by_query rewrite of the token `vector`: case-insensitive and
+# bounded by the tokenizer's own classes (TOKEN_PATTERN), so it rewrites
+# exactly the occurrences the tokenizer emits as `vector`, which is what
+# the oracle counts. `\b` uses the regex word class, which holds `_`, so
+# it would miss the token in `vector_x`.
+UBQ_PATTERN = r"(?i)(?<![\p{L}\p{N}])vector(?![\p{L}\p{N}])"
+
+
 def _q_update_by_query_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ES _update_by_query: rewrite every doc matching `vector` (the token
     becomes `tensorx`) on a snapshot-clone, then search the NEW token. The
@@ -976,7 +984,7 @@ def _q_update_by_query_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     if len(store.live_segments()) == 1:  # idempotent across repeated calls
         update_by_query(
             spark, store, ["vector"],
-            transform=lambda c: F.regexp_replace(c, r"\bvector\b", "tensorx"),
+            transform=lambda c: F.regexp_replace(c, UBQ_PATTERN, "tensorx"),
             cfg=_shared_store_cfg(), batch_id=9001,
         )
     hits = search_store(spark, store, ["tensorx"], k=20)

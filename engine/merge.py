@@ -42,7 +42,7 @@ def live_doc_ids(docs_df):
     )
 
 
-def live_docs_for_store(spark, store, docs=None):
+def live_docs_for_store(spark, store, docs=None, entries=None):
     """The store-aware live-docs relation every store read path shares:
     last-write-wins version ranking (multi-segment upsert, D10) MINUS
     delete_by_query tombstones (engine/updates.py). Returns None when no
@@ -51,13 +51,17 @@ def live_docs_for_store(spark, store, docs=None):
 
     Ordering matters: the version ranking runs BEFORE the tombstone
     anti-join. Deleting a url's latest version must delete the url, not
-    resurrect the superseded older version (ES delete-by-id semantics)."""
-    multi = len(store.live_segments()) > 1
-    dels = store.deleted_ids(spark)
+    resurrect the superseded older version (ES delete-by-id semantics).
+
+    `entries`: the ledger state to read (default: the ledger now); pass
+    `docs` of the same state."""
+    segs = store.live_segments(entries)
+    multi = len(segs) > 1
+    dels = store.deleted_ids(spark, entries)
     if not multi and dels is None:
         return None
     if docs is None:
-        docs = store.docs(spark)
+        docs = store.docs(spark, segs)
     live = live_doc_ids(docs) if multi else docs
     if dels is not None:
         live = live.join(dels, "doc_id", "left_anti")

@@ -25,6 +25,8 @@ Plan shape / scale notes:
 
 from __future__ import annotations
 
+import threading
+
 import numpy as np
 import pandas as pd
 import pyarrow as pa
@@ -41,14 +43,16 @@ from engine.wand import _idf, bm25_tf_norm, keep_not_in, sorted_ids, spark_round
 # literals chokes Catalyst long before max_deleted_driver's 10^6 cap).
 MAX_EXCLUDED_LITERALS = 10_000
 
-# Most candidate blocks IndexReader gathers to the driver for one query
+# Most candidate blocks IndexReader reads to the driver for one query
 # (~7.7M postings at block_size 128); a query with more blocks runs the
-# distributed exact / WAND plans instead. On a 1M-doc store at local[4]
-# (4-core host) driver scoring beat both distributed plans at every size
-# measured, 64 to 60,172 blocks (2.5 s vs 4.2 s exact at the top), so the
-# crossover was not reached and the cap sits at the largest size measured.
-# It also bounds what one query holds on the driver: peak driver RSS grew
-# ~0.7 GB at 60,172 blocks.
+# distributed exact / WAND plans instead. Re-timed with the driver read on
+# a 1M-doc store (2 merged segments, local[4], 4-core host), medians of 3,
+# read / whole search: 8 / 39 ms at 64 blocks, 15 / 408 ms at 7,809, 65 /
+# 1,243 ms at 29,963 and 142 / 2,960 ms at 59,946, where the distributed
+# exact plan took 6,319 ms. Scoring, not the read, dominates past ~1k
+# blocks, the crossover is still not reached, and the cap stays at the
+# largest size measured. It also bounds what one query holds on the
+# driver: peak driver RSS was ~0.95 GB after the 59,946-block queries.
 GATHER_MAX_BLOCKS = 60_000
 
 # block columns the driver scorer reads
@@ -517,55 +521,63 @@ def exact_topk_blocks(
 
 
 class IndexReader:
-    """Query-server view of a persisted index: the index is opened ONCE
-    (postings/docs cached, stats and the deleted-doc set resolved up front)
-    and then serves many queries without re-reading parquet footers or
-    re-deriving live docs per query.
+    """Query-server view of a persisted index, pinned to the ledger state
+    it was opened on: the live segments are resolved ONCE, and stats, the
+    deleted-doc set, the postings files and every lazily cached relation
+    come from that one state. A commit after the open stays invisible
+    until `refresh()`.
 
     This is the searcher/reader split Lucene makes (ES holds an
     IndexSearcher open across requests). A `search` / `search_wand` call
-    gathers its candidate blocks (query and must_not terms) from the cached
-    postings in ONE Spark action, `where(term IN ...).limit(cap + 1)
-    .toArrow()`, then decodes, scores and ranks them exactly in numpy on
-    the driver (exact_topk_blocks) and returns the rows as an Arrow-built
-    local DataFrame: one Spark job per search. df comes from the gathered
-    blocks and superseded docs drop out by a binary search over the sorted
-    deleted set. Two cases keep the distributed plans (bm25_topk_from_index
-    / wand_topk, as search_store* run them): a query with more than
+    runs no Spark job: it reads its candidate blocks (query and must_not
+    terms) on the driver from the pinned segments' postings Parquet files,
+    whose footers were read at open, so row groups whose term min/max
+    excludes every query term are skipped; the read stops past
+    GATHER_MAX_BLOCKS rows. exact_topk_blocks then decodes, scores and
+    ranks them in numpy, and the rows come back as an Arrow-built local
+    DataFrame. df comes from the read blocks, and superseded docs drop out
+    by a binary search over the sorted deleted set. `df_for_terms` sums
+    block `n` from the same kind of read.
+
+    Two cases keep the distributed plans (bm25_topk_from_index /
+    wand_topk, as search_store* run them): a query with more than
     GATHER_MAX_BLOCKS blocks, and a deleted set that overflowed
-    cfg.max_deleted_driver (a live-docs join, cached once).
+    cfg.max_deleted_driver (a live-docs join). The Spark relations they
+    need (postings, live docs) are cached on first use, as are the term
+    stats behind `search_fuzzy` / `suggest` and the phrase sidecar.
 
     Concurrent callers (bench/soak.py threads) are safe: a call keeps its
-    gathered blocks in locals, and the only shared mutable state is the
-    per-term df memo. Re-open after a merge/ingest commit to see new
-    segments (call `refresh()`)."""
+    blocks in locals, the lazy caches are built under a lock, and the only
+    other shared mutable state is the per-term df memo."""
 
     def __init__(self, spark: SparkSession, store, cfg: IndexConfig = DEFAULT_CONFIG):
         self.spark = spark
         self.store = store
         self.cfg = cfg
+        self._lock = threading.Lock()
         self._open()
 
     def _open(self) -> None:
         from engine.merge import live_docs_for_store
 
-        self.stats = self.store.global_stats()
+        self._entries = self.store.ledger_entries()
+        self._segments = self.store.live_segments(self._entries)
+        self.stats = self.store.global_stats(self._segments)
         self._codec = self.store.codec
-        self.postings = self.store.postings(self.spark).cache()
-        # term stats stay a (cached) DataFrame — never collected whole: a
-        # web-scale vocabulary is 10^8+ terms and would OOM the driver. Each
-        # query filters to its own few terms and memoizes the result.
-        self._term_stats = self.store.term_stats_df(self.spark).cache()
+        self._postings_files = self.store.postings_files(self._segments)
         self._df_memo: dict[str, int] = {}
-        self.doc_id_hwm = self.store.next_doc_id_base()
+        self.doc_id_hwm = self.store.next_doc_id_base(self._segments)
         self.deleted: frozenset = frozenset()
         self._deleted_overflow = False
-        self._live_cache = None  # lazy, overflow-only (see _live_docs_df)
-        self._positions_cache = None  # lazy, phrase-only (see search_phrase)
-        self._doc_len_cache = None
-        live = live_docs_for_store(self.spark, self.store)
+        # Spark relations, cached on first use (see _cached)
+        self._postings_cache = None  # distributed fallbacks
+        self._term_stats_cache = None  # search_fuzzy / suggest
+        self._live_cache = None  # overflow fallback
+        self._positions_cache = None  # search_phrase
+        self._doc_len_cache = None  # search_phrase
+        live = live_docs_for_store(self.spark, self.store, entries=self._entries)
         if live is not None:
-            docs = self.store.docs(self.spark)
+            docs = self.store.docs(self.spark, self._segments)
             deleted = docs.join(live.select("doc_id"), "doc_id", "left_anti")
             cap = self.cfg.max_deleted_driver
             rows = deleted.select("doc_id").limit(cap + 1).collect()
@@ -577,17 +589,42 @@ class IndexReader:
             else:
                 self.deleted = frozenset(r["doc_id"] for r in rows)
         self._deleted_sorted = sorted_ids(self.deleted)
-        self.postings.count()  # materialize the caches
-        self._term_stats.count()
+
+    def _cached(self, attr: str, build) -> DataFrame:
+        """The relation in `attr`, or `build()` cached, materialized and
+        stored there on first use. The lock keeps concurrent callers from
+        building it twice."""
+        with self._lock:
+            df = getattr(self, attr)
+            if df is None:
+                df = build().cache()
+                df.count()
+                setattr(self, attr, df)
+            return df
+
+    def _postings_df(self) -> DataFrame:
+        return self._cached(
+            "_postings_cache", lambda: self.store.postings(self.spark, self._segments)
+        )
+
+    def _term_stats_df(self) -> DataFrame:
+        # a DataFrame, never collected whole: a web-scale vocabulary is
+        # 10^8+ terms and would OOM the driver
+        return self._cached(
+            "_term_stats_cache",
+            lambda: self.store.term_stats_df(self.spark, self._segments),
+        )
 
     def df_for_terms(self, terms: list[str]) -> dict[str, int]:
-        """Per-term document frequencies, resolved lazily and memoized."""
-        missing = [t for t in set(terms) if t not in self._df_memo]
+        """Per-term document frequencies: block `n` summed per term (what
+        term_stats persists), read on the driver and memoized."""
+        missing = {t for t in terms if t not in self._df_memo}
         if missing:
-            rows = self._term_stats.where(F.col("term").isin(missing)).collect()
-            found = {r["term"]: int(r["df"]) for r in rows}
+            tbl = self._postings_files.read(missing, ("term", "n"))
+            sums = tbl.group_by("term").aggregate([("n", "sum")])
+            found = dict(zip(sums["term"].to_pylist(), sums["n_sum"].to_pylist()))
             for t in missing:
-                self._df_memo[t] = found.get(t, 0)
+                self._df_memo[t] = int(found.get(t, 0))
         return {t: self._df_memo[t] for t in set(terms)}
 
     def refresh(self) -> None:
@@ -595,30 +632,21 @@ class IndexReader:
         self._open()
 
     def close(self) -> None:
-        self.postings.unpersist()
-        self._term_stats.unpersist()
-        if self._live_cache is not None:
-            self._live_cache.unpersist()
-            self._live_cache = None
-        for attr in ("_positions_cache", "_doc_len_cache"):
-            c = getattr(self, attr, None)
-            if c is not None:
-                c.unpersist()
-                setattr(self, attr, None)
+        with self._lock:
+            for attr in ("_postings_cache", "_term_stats_cache", "_live_cache",
+                         "_positions_cache", "_doc_len_cache"):
+                c = getattr(self, attr)
+                if c is not None:
+                    c.unpersist()
+                    setattr(self, attr, None)
 
     def _gather(self, terms: set[str]) -> pd.DataFrame | None:
-        """The blocks of `terms` from the cached postings in one Spark
-        action, or None when the deleted set overflowed or there are more
-        than GATHER_MAX_BLOCKS blocks (the caller then runs the
-        distributed plan)."""
+        """The blocks of `terms`, read on the driver, or None when the
+        deleted set overflowed or there are more than GATHER_MAX_BLOCKS
+        blocks (the caller then runs the distributed plan)."""
         if self._deleted_overflow:
             return None
-        tbl = (
-            self.postings.where(F.col("term").isin(sorted(terms)))
-            .select(*_GATHER_COLS)
-            .limit(GATHER_MAX_BLOCKS + 1)
-            .toArrow()
-        )
+        tbl = self._postings_files.read(terms, _GATHER_COLS, GATHER_MAX_BLOCKS + 1)
         if tbl.num_rows > GATHER_MAX_BLOCKS:
             return None
         return tbl.to_pandas()
@@ -636,7 +664,7 @@ class IndexReader:
         min_should_match: int | None = None,
         must_not_terms: list[str] | None = None,
     ) -> DataFrame:
-        """Exact BM25 top-k: one gather of the query's (and must_not)
+        """Exact BM25 top-k: one driver read of the query's (and must_not)
         blocks, scored on the driver (exact_topk_blocks).
         `min_should_match` / `must_not_terms`: ES bool semantics (see
         bm25_topk)."""
@@ -666,11 +694,11 @@ class IndexReader:
         self, q_terms, k, conjunctive=False, min_should_match=None,
         must_not_terms=None,
     ) -> DataFrame:
-        """bm25_topk_from_index on the cached postings. Superseded docs are
+        """bm25_topk_from_index on the postings cache. Superseded docs are
         excluded via the bounded driver-side set (a NOT IN literal) or, when
         it overflowed, by a live-docs join built once and cached."""
         return bm25_topk_from_index(
-            self.postings,
+            self._postings_df(),
             self.stats["n_docs"],
             self.stats["avgdl"],
             q_terms,
@@ -687,14 +715,10 @@ class IndexReader:
     def _live_docs_df(self):
         if not self._deleted_overflow:
             return None  # bounded set rides excluded_doc_ids instead
-        if self._live_cache is None:
-            from engine.merge import live_docs_for_store
+        from engine.merge import live_docs_for_store
 
-            live = live_docs_for_store(self.spark, self.store)
-            src = live if live is not None else self.store.docs(self.spark)
-            self._live_cache = src.select("doc_id").cache()
-            self._live_cache.count()
-        return self._live_cache
+        return self._cached("_live_cache", lambda: live_docs_for_store(
+            self.spark, self.store, entries=self._entries).select("doc_id"))
 
     def search_wand(
         self,
@@ -704,8 +728,8 @@ class IndexReader:
         strategy: str = "wand",
     ) -> DataFrame:
         """BM25 top-k, rank-identical to `search`. Below GATHER_MAX_BLOCKS
-        it scores like `search`: one gather, exact numpy scoring on the
-        driver. With every candidate block already on the driver, the
+        it scores like `search`: one driver read, exact numpy scoring on
+        the driver. With every candidate block already on the driver, the
         vectorized exact scorer beat the block-max scan at every block
         count measured (see GATHER_MAX_BLOCKS), so the scan (wand_topk) and
         the `strategy="auto"` cost model (engine.wand.wand_is_cheaper) run
@@ -713,7 +737,7 @@ class IndexReader:
 
         `stats_out` (evidence/debug) is filled from the same execution. On
         the driver: candidate_blocks = candidate_block_ranges =
-        blocks_scored (every gathered block is scored), num_ranges 1,
+        blocks_scored (every block read is scored), num_ranges 1,
         candidate_postings, and "strategy" = "exact_driver" ("exact_auto"
         under strategy="auto")."""
         if strategy not in ("wand", "auto"):
@@ -737,8 +761,8 @@ class IndexReader:
         return self._local(self._exact_blocks(blocks, q_terms, k))
 
     def _wand_distributed(self, q_terms, k, stats_out, strategy) -> DataFrame:
-        """wand_topk over the cached postings, with dfs from the memoized
-        term stats (the auto choice too)."""
+        """wand_topk over the postings cache, with dfs from df_for_terms
+        (the auto choice too)."""
         from engine.wand import wand_is_cheaper, wand_topk
 
         st = stats_out if stats_out is not None else {}
@@ -751,7 +775,7 @@ class IndexReader:
             st["strategy"] = "wand_auto"
         return wand_topk(
             self.spark,
-            self.postings,
+            self._postings_df(),
             self.stats["n_docs"],
             self.stats["avgdl"],
             df_map,
@@ -773,13 +797,13 @@ class IndexReader:
         max_expansions: int | None = None,
     ) -> DataFrame:
         """Fuzzy BM25 top-k from the held-open reader: the Levenshtein
-        expansion scans the CACHED term-stats relation (the term
-        dictionary — no parquet re-read), then the expanded disjunction
-        runs through self.search on the cached postings."""
+        expansion scans the term-stats relation (the term dictionary,
+        cached on first use), then the expanded disjunction runs through
+        self.search."""
         from engine.fuzzy import MAX_EXPANSIONS, fuzzy_expansions
 
         terms = fuzzy_expansions(
-            self._term_stats.select("term"),
+            self._term_stats_df().select("term"),
             term,
             max_edits=max_edits,
             prefix_length=prefix_length,
@@ -798,13 +822,13 @@ class IndexReader:
         suggest_mode: str = "always",
     ) -> DataFrame:
         """ES term suggester ("did you mean") from the held-open reader:
-        corrections ranked (distance, df desc, term) over the CACHED
-        term-stats relation — the dictionary is the only thing consulted,
-        postings and documents are never touched."""
+        corrections ranked (distance, df desc, term) over the term-stats
+        relation (cached on first use) — the dictionary is the only thing
+        consulted, postings and documents are never touched."""
         from engine.fuzzy import term_suggest
 
         return term_suggest(
-            self._term_stats, term, size=size, max_edits=max_edits,
+            self._term_stats_df(), term, size=size, max_edits=max_edits,
             min_doc_freq=min_doc_freq, suggest_mode=suggest_mode,
         )
 
@@ -812,36 +836,33 @@ class IndexReader:
         """ES match_phrase from the held-open reader (query-server mode).
 
         First phrase query lazily caches the positions sidecar union and a
-        (doc_id, doc_len) projection, so repeat phrase queries never
-        re-read parquet footers — the same searcher/reader split the
-        exact/WAND paths get from the cached postings. Result-identical to
+        (doc_id, doc_len) projection of the pinned segments, so repeat
+        phrase queries never re-read parquet footers. Result-identical to
         engine.positions.search_store_phrase: superseded docs are excluded
         via the bounded driver-side set (NOT IN literal) or, on overflow,
         by restricting the cached doc-len projection to live docs."""
         from engine.positions import phrase_topk_from_positions, store_has_positions
 
-        if not store_has_positions(self.store):
+        if not store_has_positions(self.store, self._segments):
             raise ValueError(
                 f"index {self.store.name}: no positions sidecar on every "
                 "live segment (build with IndexConfig(store_positions=True) "
                 "to serve phrase queries)"
             )
-        if self._positions_cache is None:
-            self._positions_cache = self.store.positions(self.spark).cache()
-            self._positions_cache.count()
-        if self._doc_len_cache is None:
-            docs = self.store.docs(self.spark)
+        def doc_lens():
+            docs = self.store.docs(self.spark, self._segments)
             if self._deleted_overflow:
                 from engine.merge import live_docs_for_store
 
-                live = live_docs_for_store(self.spark, self.store, docs)
+                live = live_docs_for_store(self.spark, self.store, docs, self._entries)
                 docs = live if live is not None else docs
-            self._doc_len_cache = docs.select("doc_id", "doc_len").cache()
-            self._doc_len_cache.count()
+            return docs.select("doc_id", "doc_len")
+
         return phrase_topk_from_positions(
             self.spark,
-            self._positions_cache,
-            self._doc_len_cache,
+            self._cached("_positions_cache",
+                         lambda: self.store.positions(self.spark, self._segments)),
+            self._cached("_doc_len_cache", doc_lens),
             int(self.stats["n_docs"]),
             float(self.stats["avgdl"]),
             phrase,

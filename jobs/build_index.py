@@ -22,6 +22,19 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def ignored_flag_warnings(args, cfg) -> list[str]:
+    """An explicit --codec or --store-positions that an EXISTING store's
+    persisted settings (`cfg`) override, one warning each."""
+    out = []
+    if args.codec is not None and args.codec != cfg.codec:
+        out.append(f"--codec {args.codec} ignored: index {args.index} "
+                   f"keeps its persisted codec {cfg.codec}")
+    if args.store_positions and not cfg.store_positions:
+        out.append(f"--store-positions ignored: index {args.index} was "
+                   "created without positions")
+    return out
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--index-root", default="/tmp/engine_indexes")
@@ -75,6 +88,8 @@ def main() -> None:
         # into a routed/positions store (review finding r05-cont; the same
         # rule update_by_query follows)
         cfg = probe.persisted_config()
+        for msg in ignored_flag_warnings(args, cfg):
+            print(f"warning: {msg}", file=sys.stderr, flush=True)
     else:
         # new store: CLI flags over index-template defaults (ES
         # request-over-template precedence, same as index_admin create)

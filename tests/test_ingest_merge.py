@@ -165,3 +165,24 @@ def test_latest_start_option_skips_existing(spark, source, store):
     hwm = resolve_start_offsets(store, source, "LATEST")
     res = ingest_batch(spark, store, source, 0, hwm, rows_per_partition=40)
     assert res is None  # nothing beyond LATEST
+
+
+def test_build_index_warns_on_flags_an_existing_store_overrides():
+    import argparse
+
+    from engine.config import IndexConfig
+    from jobs.build_index import ignored_flag_warnings
+
+    def args(codec=None, store_positions=False):
+        return argparse.Namespace(index="web", codec=codec,
+                                  store_positions=store_positions)
+
+    stored = IndexConfig(codec="varint", store_positions=False)
+    assert ignored_flag_warnings(args(), stored) == []
+    assert ignored_flag_warnings(args(codec="varint"), stored) == []
+    msgs = ignored_flag_warnings(args(codec="pfor", store_positions=True), stored)
+    assert len(msgs) == 2
+    assert "--codec pfor" in msgs[0] and "varint" in msgs[0]
+    assert "--store-positions" in msgs[1]
+    with_pos = IndexConfig(codec="pfor", store_positions=True)
+    assert ignored_flag_warnings(args(codec="pfor", store_positions=True), with_pos) == []

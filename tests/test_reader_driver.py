@@ -1,12 +1,14 @@
-"""IndexReader's driver path (one gather of the query's blocks, numpy
-scoring on the driver): rank identity with the distributed search_store /
-search_store_wand plans, the one-job pin, the fallbacks, and stats_out from
-the same execution."""
+"""IndexReader's driver path (a driver-side read of the query's blocks
+from the pinned segments' postings files, numpy scoring on the driver):
+rank identity with the distributed search_store / search_store_wand plans,
+the zero-job pin, df_for_terms, the pinned ledger state, the fallbacks, and
+stats_out from the same execution."""
 
 from __future__ import annotations
 
 import itertools
 import math
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -46,10 +48,11 @@ def _rows(df):
     return [(r["doc_id"], r["score"]) for r in df.collect()]
 
 
-def _build(spark, root, codec, merged):
+def _build(spark, root, codec, merged, routing_col=None):
     """A multi-segment store whose first copies are superseded (the source
-    is ingested twice), or that store merged into one segment."""
-    cfg = IndexConfig(codec=codec)
+    is ingested twice), or that store merged into one segment. With
+    `routing_col`, segments are hive-partitioned into routing= dirs."""
+    cfg = IndexConfig(codec=codec, routing_col=routing_col)
     store = IndexStore(root, "rd", cfg=cfg).create()
     src = as_partitioned_source(webpages(spark, 120, partitions=2), 2)
     for _ in range(2):
@@ -61,15 +64,20 @@ def _build(spark, root, codec, merged):
 
 
 @pytest.fixture(scope="module", params=list(itertools.product(
-    ("varint", "pfor"), ("merged", "superseded"))), ids=lambda p: "-".join(p))
+    ("varint", "pfor"), ("merged", "superseded", "routed"))),
+    ids=lambda p: "-".join(p))
 def store(request, spark, tmp_path_factory):
     codec, shape = request.param
     root = str(tmp_path_factory.mktemp(f"rd-{codec}-{shape}"))
-    st = _build(spark, root, codec, merged=shape == "merged")
+    st = _build(spark, root, codec, merged=shape == "merged",
+                routing_col="lang" if shape == "routed" else None)
     if shape == "merged":
         assert len(st.live_segments()) == 1
     else:
         assert len(st.live_segments()) > 1
+    if shape == "routed":
+        seg = os.path.join(st.segment_path(st.live_segments()[0]), "postings")
+        assert any(d.startswith("routing=") for d in os.listdir(seg))
     return st
 
 
@@ -98,11 +106,11 @@ def test_reader_wand_matches_search_store_wand(spark, store):
         reader.close()
 
 
-def _pages(spark, texts):
+def _pages(spark, texts, url_base=0):
     df = spark.createDataFrame(list(enumerate(texts)), "row_id long, text string")
     return df.select(
         "row_id",
-        F.format_string("doc://%012d", F.col("row_id")).alias("url"),
+        F.format_string("doc://%012d", F.col("row_id") + url_base).alias("url"),
         F.timestamp_seconds(F.lit(1704067200) + F.col("row_id")).alias("warc_ts"),
         F.encode(F.concat(F.lit("<p>"), F.col("text"), F.lit("</p>")), "utf-8")
         .alias("html"),
@@ -179,32 +187,87 @@ def _jobs(spark, fn):
 _GROUPS = itertools.count()
 
 
-def test_one_spark_job_per_search(spark, tmp_path):
+def test_zero_spark_jobs_per_search(spark, tmp_path):
     store = _build(spark, str(tmp_path), "varint", merged=True)
     reader = IndexReader(spark, store)
     try:
         reader.search(["warmup"], k=1).collect()
         reader.search_wand(["warmup"], k=1).collect()
         terms = ["engine", "spark"]
-        assert len(_jobs(spark, lambda: reader.search(terms, k=10).collect())) == 1
-        assert len(_jobs(spark, lambda: reader.search(
-            terms, k=10, must_not_terms=["crawl"]).collect())) == 1
-        assert len(_jobs(spark, lambda: reader.search_wand(
-            terms, k=10, strategy="wand").collect())) == 1
-        # an absent term returns no rows, still from the one gather
-        assert len(_jobs(spark, lambda: reader.search(
-            ["zzqxnotaword"], k=10).collect())) == 1
-        assert len(_jobs(spark, lambda: reader.search_wand(
-            ["zzqxnotaword"], k=10).collect())) == 1
+        assert _jobs(spark, lambda: reader.search(terms, k=10).collect()) == []
+        assert _jobs(spark, lambda: reader.search(
+            terms, k=10, must_not_terms=["crawl"]).collect()) == []
+        assert _jobs(spark, lambda: reader.search_wand(
+            terms, k=10, strategy="wand").collect()) == []
+        # an absent term returns no rows, still from the driver read
+        assert _jobs(spark, lambda: reader.search(
+            ["zzqxnotaword"], k=10).collect()) == []
+        assert _jobs(spark, lambda: reader.search_wand(
+            ["zzqxnotaword"], k=10).collect()) == []
+        assert _jobs(spark, lambda: reader.df_for_terms(
+            ["index", "zzqxnotaword"])) == []
         st: dict = {}
-        assert len(_jobs(spark, lambda: reader.search_wand(
-            terms, k=10, stats_out=st).collect())) == 1
+        assert _jobs(spark, lambda: reader.search_wand(
+            terms, k=10, stats_out=st).collect()) == []
         # stats_out comes from the same execution, with no extra actions;
-        # the driver scores every gathered block
+        # the driver scores every block it read
         assert st["strategy"] == "exact_driver" and st["num_ranges"] == 1
         n_blocks = store.postings(spark).where(F.col("term").isin(terms)).count()
         assert (st["candidate_blocks"] == st["candidate_block_ranges"]
                 == st["blocks_scored"] == n_blocks)
+    finally:
+        reader.close()
+
+
+def test_df_for_terms_matches_term_stats_without_spark_caches(
+        spark, store, monkeypatch):
+    terms = ["engine", "spark", "crawl", "index", "zzqxnotaword"]
+    rows = store.term_stats_df(spark).where(F.col("term").isin(terms)).collect()
+    want = {t: 0 for t in terms} | {r["term"]: r["df"] for r in rows}
+    assert want["engine"] > 0 and want["zzqxnotaword"] == 0
+    reader = IndexReader(spark, store)
+    try:
+        assert reader.df_for_terms(terms) == want
+        assert reader.df_for_terms(terms[:2]) == {t: want[t] for t in terms[:2]}
+        reader.search(terms, k=10).collect()
+        reader.search_wand(terms, k=10).collect()
+        assert reader._postings_cache is None
+        assert reader._term_stats_cache is None
+        reader.suggest("engin").collect()
+        assert reader._term_stats_cache is not None
+        assert reader._postings_cache is None
+        monkeypatch.setattr(query_mod, "GATHER_MAX_BLOCKS", 1)
+        reader.search(terms, k=10).collect()  # the distributed fallback
+        assert reader._postings_cache is not None
+    finally:
+        reader.close()
+    assert reader._term_stats_cache is None and reader._postings_cache is None
+
+
+def test_reader_pins_its_ledger_state_until_refresh(spark, tmp_path):
+    store = IndexStore(str(tmp_path), "pin").create()
+    first = ["alpha beta", "beta gamma", "alpha alpha delta", "gamma"]
+    run_ingest_loop(spark, store, as_partitioned_source(
+        _pages(spark, first), num_partitions=2), rows_per_partition=4)
+    terms = ["alpha", "omega"]
+    before = _rows(search_store(spark, store, terms, k=10))
+    reader = IndexReader(spark, store)
+    try:
+        assert _rows(reader.search(terms, k=10)) == before
+        # a commit after the open, with new docs holding the query terms
+        more = ["alpha omega", "omega omega beta", "alpha"]
+        run_ingest_loop(spark, store, as_partitioned_source(
+            _pages(spark, more, url_base=100), num_partitions=2),
+            rows_per_partition=4, start_option=EARLIEST)
+        after = _rows(search_store(spark, store, terms, k=10))
+        assert after != before
+        assert _rows(reader.search(terms, k=10)) == before
+        assert _rows(reader.search_wand(terms, k=10)) == before
+        assert reader.df_for_terms(["omega"]) == {"omega": 0}
+        reader.refresh()
+        assert _rows(reader.search(terms, k=10)) == after
+        assert _rows(reader.search_wand(terms, k=10)) == after
+        assert reader.df_for_terms(["omega"]) == {"omega": 2}
     finally:
         reader.close()
 

@@ -256,3 +256,22 @@ def test_delete_by_ids(spark, source, tmp_path):
     # idempotent-ish: deleting again finds no live versions
     assert delete_by_ids(spark, store, some) == 0
     assert delete_by_ids(spark, store, []) == 0
+
+
+def test_update_by_query_rewrite_follows_token_boundaries(spark):
+    # the update_by_query_search rewrite must turn exactly the `vector`
+    # tokens into `tensorx` and touch nothing else, or its oracle (which
+    # counts tokens) and the rewritten store disagree
+    import __spark_entry__ as entry
+    from engine.analysis import tokens
+
+    texts = ["vector_x and Vector", "vectors evector é-vector", "x2vector vector2",
+             "VECTOR,vector.vector"]
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+    rows = df.select(
+        tokens("text").alias("before"),
+        tokens(F.regexp_replace("text", entry.UBQ_PATTERN, "tensorx")).alias("after"),
+    ).collect()
+    for r in rows:
+        assert r["after"] == ["tensorx" if t == "vector" else t for t in r["before"]]
+    assert sum(t == "vector" for r in rows for t in r["before"]) == 6
