@@ -530,7 +530,7 @@ def _shared_store(spark: SparkSession, sf_dir: str):
 
 def _store_doc_map(spark: SparkSession, store) -> DataFrame:
     """store doc_id -> original documents.doc_id (parse the padded url)."""
-    return store.docs(spark).select(
+    return store.view().docs(spark).select(
         F.col("doc_id").alias("store_doc_id"),
         F.substring("url", 7, 12).cast("long").alias("orig_doc_id"),
     )
@@ -693,7 +693,7 @@ def _q_multi_index_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rows = []
     for name in discover_indexes(root):
-        st = IndexStore(root, name).global_stats()
+        st = IndexStore(root, name).view().stats()
         rows.append((name, st["n_docs"], st["sum_dl"]))
     return spark.createDataFrame(rows, "index_name string, n_docs long, sum_dl long")
 
@@ -953,7 +953,7 @@ def _q_delete_by_query_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from engine.updates import delete_by_query
 
     store = _cloned_store(spark, sf_dir, "dbq")
-    if not store.has_deletes():  # idempotent across repeated calls
+    if not store.view().active_deletes:  # idempotent across repeated calls
         delete_by_query(spark, store, ["vector"])
     hits = search_store(spark, store, FLAGSHIP_TERMS, k=20)
     return (
@@ -981,7 +981,7 @@ def _q_update_by_query_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from engine.updates import update_by_query
 
     store = _cloned_store(spark, sf_dir, "ubq")
-    if len(store.live_segments()) == 1:  # idempotent across repeated calls
+    if len(store.view().segments) == 1:  # idempotent across repeated calls
         update_by_query(
             spark, store, ["vector"],
             transform=lambda c: F.regexp_replace(c, UBQ_PATTERN, "tensorx"),
@@ -1632,7 +1632,7 @@ def _q_term_suggest_store(spark, sf_dir):
     from engine.fuzzy import term_suggest
 
     store = _shared_store(spark, sf_dir)
-    vocab = store.term_stats_df(spark)
+    vocab = store.view().term_stats_df(spark)
     return term_suggest(vocab, _SUGGEST_SEED, size=8, max_edits=2)
 
 

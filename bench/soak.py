@@ -95,14 +95,14 @@ def main() -> None:
     rows_per_partition = max(1, -(-args.docs // (SOURCE_PARTITIONS * args.batches)))
 
     if reuse:
-        total_docs = int(store.global_stats()["n_docs"])
+        total_docs = int(store.view().stats()["n_docs"])
         # None, not 0: a query-only run measured no build — the report
         # renders absent fields as "—" instead of a zero-second build
         n_batches, n_merges, merge_sec, build_sec = None, None, None, None
         per_batch_sec: list = []
         build_probe_summary: dict = {}
         print(f"reusing store at {root}: {total_docs:,} docs, "
-              f"{len(store.live_segments())} live segments",
+              f"{len(store.view().segments)} live segments",
               file=sys.stderr, flush=True)
     else:
         build_probe = ProbeMonitor()
@@ -127,7 +127,7 @@ def main() -> None:
             merge_sec += time.perf_counter() - mt
             per_batch_sec.append(round(time.perf_counter() - bt, 2))
             print(f"batch {n_batches}: {total_docs:,} docs, "
-                  f"{len(store.live_segments())} live segments, "
+                  f"{len(store.view().segments)} live segments, "
                   f"{n_merges} merges, {time.perf_counter() - t0:.0f}s elapsed",
                   file=sys.stderr, flush=True)
         build_sec = time.perf_counter() - t0
@@ -251,7 +251,7 @@ def main() -> None:
         "n_docs": total_docs,
         "n_batches": n_batches,
         "n_merges": n_merges,
-        "live_segments": len(store.live_segments()),
+        "live_segments": len(store.view().segments),
         "build_sec": round(build_sec, 2) if build_sec is not None else None,
         "merge_sec": round(merge_sec, 2) if merge_sec is not None else None,
         "docs_per_sec": round(total_docs / build_sec, 1) if build_sec else None,

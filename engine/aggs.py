@@ -468,8 +468,9 @@ def routing_doc_counts(spark: SparkSession, store) -> DataFrame:
     routing-pure and every commit records the per-routing rollup
     (grand-total row selected via grouping(), ADVICE r04)."""
     agg: dict[str, dict[str, int]] = {}
-    for seg in store.live_segments():
-        st = store.segment_stats(seg)
+    view = store.view()
+    for seg in view.segments:
+        st = view.store.segment_stats(seg)
         for rv, s in (st.get("routing_stats") or {}).items():
             d = agg.setdefault(rv, {"n_docs": 0, "sum_dl": 0})
             d["n_docs"] += s["n_docs"]

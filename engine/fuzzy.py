@@ -129,14 +129,15 @@ def search_store_fuzzy(
     (pushed isin scan, live-docs exclusion, stored stats)."""
     from engine.query import search_store
 
-    vocab = store.term_stats_df(spark).select("term")
+    view = store.view()
+    vocab = view.term_stats_df(spark).select("term")
     terms = fuzzy_expansions(
         vocab, term, max_edits=max_edits, prefix_length=prefix_length,
         max_expansions=max_expansions,
     )
     if not terms:
         return _empty_hits(spark)
-    return search_store(spark, store, terms, k=k, cfg=cfg)
+    return search_store(spark, view, terms, k=k, cfg=cfg)
 
 
 def fuzzy_oracle_sql(

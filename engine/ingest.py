@@ -41,7 +41,7 @@ from engine.docids import (
     literal_long_map,
 )
 from engine.postings import build_posting_blocks_local
-from engine.segments import IndexStore, LedgerEntry
+from engine.segments import IndexStore, LedgerEntry, StoreView
 
 EARLIEST = "EARLIEST"
 LATEST = "LATEST"
@@ -226,7 +226,7 @@ def ingest_batch(
 
 def process_window(
     spark: SparkSession,
-    store: IndexStore,
+    store: IndexStore | StoreView,
     window: DataFrame,
     batch_id: int,
     cfg: IndexConfig = DEFAULT_CONFIG,
@@ -239,6 +239,8 @@ def process_window(
     Shared by the batch loop (ingest_batch) and the Structured Streaming
     twin (engine.streaming.stream_ingest's foreachBatch body): the window is
     whatever the slicer handed us — an offset window or a stream micro-batch.
+    The doc-id base and the entry id come from one view (the caller's, if
+    it passes one): a commit by another writer in between fails this one.
 
     `pre_extracted`: the window already carries extracted_text/extract_error/
     n_tokens (and a `payload` column holding the raw bytes of failed rows
@@ -261,7 +263,7 @@ def process_window(
 
 def _process_window_body(
     spark: SparkSession,
-    store: IndexStore,
+    store: IndexStore | StoreView,
     window: DataFrame,
     batch_id: int,
     cfg: IndexConfig = DEFAULT_CONFIG,
@@ -270,9 +272,11 @@ def _process_window_body(
     pre_extracted: bool = False,
 ) -> BatchResult | None:
     t0 = time.monotonic()
+    view = store.view()
+    store = view.store
     # the STORE's codec wins over cfg (a store's segments must all share
     # one block codec; _meta.json records it at create time)
-    store_codec = store.codec
+    store_codec = view.codec
     if cfg.codec != store_codec:
         from dataclasses import replace as _dc_replace
 
@@ -357,7 +361,7 @@ def _process_window_body(
                 f"routing_col {cfg.routing_col!r} not in window columns"
             )
 
-        base = store.next_doc_id_base()
+        base = view.doc_id_hwm
         if cfg.docid_strategy == "range":
             # fused hot path: ONE range exchange + ONE collect does dedup,
             # id assignment AND the batch stats (n_docs / sum_dl /
@@ -506,7 +510,7 @@ def _process_window_body(
 
         store.commit(
             LedgerEntry(
-                entry_id=store.next_entry_id(),
+                entry_id=view.next_entry_id,
                 kind="ingest",
                 segments_added=[segment_id],
                 partition_offsets=offs,

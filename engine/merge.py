@@ -17,83 +17,77 @@ Merge policy: log-structured — merge when >= `merge_factor` live segments.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession, Window
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from engine.config import DEFAULT_CONFIG, IndexConfig, plan_fanout
 from engine.postings import build_posting_blocks, decode_postings
-from engine.segments import IndexStore, LedgerEntry
+from engine.segments import IndexStore, LedgerEntry, StoreView, live_doc_ids
 
 # largest superseded-doc set expunged via broadcast anti-join; beyond this
 # (an update-heavy merge) fall back to a shuffled semi-join against live ids
 BROADCAST_DEAD_MAX = 2_000_000
 
 
-def live_doc_ids(docs_df):
-    """Latest doc per url: rank by (warc_ts desc, doc_id desc) — newest
-    segment wins ties, matching ES upsert-by-id last-write-wins (D10)."""
-    w = Window.partitionBy("url").orderBy(
-        F.col("warc_ts").desc(), F.col("doc_id").desc()
-    )
-    return (
-        docs_df.withColumn("_rk", F.row_number().over(w))
-        .where(F.col("_rk") == 1)
-        .drop("_rk")
-    )
-
-
-def live_docs_for_store(spark, store, docs=None, entries=None):
-    """The store-aware live-docs relation every store read path shares:
-    last-write-wins version ranking (multi-segment upsert, D10) MINUS
-    delete_by_query tombstones (engine/updates.py). Returns None when no
-    filtering is needed — single segment and no active deletes — so callers
-    skip the join entirely (the common path costs nothing).
-
-    Ordering matters: the version ranking runs BEFORE the tombstone
-    anti-join. Deleting a url's latest version must delete the url, not
-    resurrect the superseded older version (ES delete-by-id semantics).
-
-    `entries`: the ledger state to read (default: the ledger now); pass
-    `docs` of the same state."""
-    segs = store.live_segments(entries)
-    multi = len(segs) > 1
-    dels = store.deleted_ids(spark, entries)
-    if not multi and dels is None:
-        return None
-    if docs is None:
-        docs = store.docs(spark, segs)
-    live = live_doc_ids(docs) if multi else docs
-    if dels is not None:
-        live = live.join(dels, "doc_id", "left_anti")
-    return live
-
-
 def merge_segments(
     spark: SparkSession,
-    store: IndexStore,
+    store: IndexStore | StoreView,
     segment_ids: list[str] | None = None,
     cfg: IndexConfig = DEFAULT_CONFIG,
 ) -> str:
     """Merge `segment_ids` (default: all live) into one segment. Returns the
     new segment id. Crash-safe: the ledger entry is committed last; a failed
     merge leaves inputs live and the orphan output is overwritten on retry.
+    The whole merge reads one view of the store (its inputs through
+    `view.restrict`); a commit that lands during the merge makes the merge's
+    own commit fail instead of silently mixing ledger states.
 
     Runs under build_confs (AQE off) — same per-job fixed-cost rationale as
     the ingest batch body (engine/ingest.py process_window)."""
     from engine.session import build_confs
 
     with build_confs(spark):
-        return _merge_segments_body(spark, store, segment_ids, cfg)
+        return _merge_segments_body(spark, store.view(), segment_ids, cfg)
+
+
+def _shield_older_versions(spark, view: StoreView, src: StoreView, docs, dels) -> bool:
+    """Tombstone the versions outside the merge that the merge would
+    resurrect; True when a delete entry was committed. The merge
+    drops every input version of a url whose newest input version is
+    tombstoned; a version of that url outside the merge that ranks below it
+    is superseded now, and nothing would supersede it after the merge (the
+    tombstone names only the expunged id). Those versions are dead now, so
+    tombstoning them first changes nothing, whichever commit a crash hits."""
+    from engine.updates import commit_tombstones
+
+    rest = [s for s in view.segments if s not in set(src.segments)]
+    if not rest:
+        return False
+    top = live_doc_ids(docs).join(dels, "doc_id", "left_semi").select(
+        "url", F.struct("warc_ts", "doc_id").alias("_top")
+    )
+    # struct order (ascending, nulls first) is the reverse of the ranking
+    older = (
+        view.restrict(rest).docs(spark).join(top, "url")
+        .where(F.struct("warc_ts", "doc_id") < F.col("_top"))
+        .select("doc_id").join(dels, "doc_id", "left_anti")
+    )
+    return commit_tombstones(
+        spark, view, older,
+        {"by": "merge", "merge_inputs": list(src.segments)},
+    ) > 0
 
 
 def _merge_segments_body(
     spark: SparkSession,
-    store: IndexStore,
-    segment_ids: list[str] | None = None,
-    cfg: IndexConfig = DEFAULT_CONFIG,
+    view: StoreView,
+    segment_ids: list[str] | None,
+    cfg: IndexConfig,
 ) -> str:
-    inputs = store.live_segments() if segment_ids is None else list(segment_ids)
-    if len(inputs) < 2 and not store.has_deletes():
+    store = view.store
+    src = view if segment_ids is None else view.restrict(segment_ids)
+    inputs = list(src.segments)
+    if len(inputs) < 2 and not view.active_deletes:
         # a single-segment "merge" is meaningful only as ES forcemerge's
         # only_expunge_deletes: rewrite the segment without its tombstoned
         # docs (engine/updates.py delete_by_query)
@@ -101,10 +95,7 @@ def _merge_segments_body(
             "need at least 2 segments to merge (or active deletes to expunge)"
         )
 
-    entry_id = store.next_entry_id()
-    out_id = f"merge-{entry_id:08d}"
-
-    docs = store.docs(spark, inputs)
+    docs = src.docs(spark)
     routed = "routing" in docs.columns
     in_stats = [store.segment_stats(s) for s in inputs]
     n_input_docs = sum(int(s["n_docs"]) for s in in_stats)
@@ -122,7 +113,11 @@ def _merge_segments_body(
     # delete_by_query tombstones (engine/updates.py): merged output must
     # expunge them, so their presence forces the full stats/expunge path
     # even for an append-only (all-distinct-urls) input set
-    dels = store.deleted_ids(spark)
+    dels = view.deleted_ids(spark)
+    entry_id = view.next_entry_id
+    if dels is not None and _shield_older_versions(spark, view, src, docs, dels):
+        entry_id += 1
+    out_id = f"merge-{entry_id:08d}"
 
     merged_tf_dl = None
     live_cached = None
@@ -142,7 +137,7 @@ def _merge_segments_body(
             live = live_doc_ids(docs)
             if dels is not None:
                 # version ranking FIRST, tombstones second (see
-                # live_docs_for_store: deletes must not resurrect older
+                # StoreView.live_docs: deletes must not resurrect older
                 # superseded versions)
                 live = live.join(dels, "doc_id", "left_anti")
             live = live.cache()
@@ -183,13 +178,13 @@ def _merge_segments_body(
         # a shuffled semi-join against the live set. dl travels in the
         # blocks; routed blocks are routing-pure, so decode replicates
         # `routing` per posting and no join is needed to recover it.
-        codec = store.codec
+        codec = view.codec
         if cfg.codec != codec:
             from dataclasses import replace as _dc_replace
 
             cfg = _dc_replace(cfg, codec=codec)
         postings_long = decode_postings(
-            store.postings(spark, inputs),
+            src.postings(spark),
             keep_cols=("routing",) if routed else (),
             codec=codec,
         )
@@ -207,7 +202,7 @@ def _merge_segments_body(
                 live.select("doc_id"), "doc_id", "left_semi"
             )
 
-        hwm = store.next_doc_id_base()
+        hwm = view.doc_id_hwm
         # size the re-encode fan-out from the merged token count (sum_dl is
         # an upper bound on posting rows): a small-tier merge collapses to a
         # few tasks, a big merge uses every core and grows past the core
@@ -242,13 +237,13 @@ def _merge_segments_body(
         # merged segment gets the globally range-partitioned layout — it is
         # the long-lived segment queries hit; micro-ingest segments skip it
         store.write_segment(out_id, blocks, live, stats, ranged=True)
-        from engine.positions import store_has_positions, write_segment_positions
+        from engine.positions import write_segment_positions
 
-        if store_has_positions(store, inputs):
+        if src.has_positions:
             # doc ids survive the merge unchanged, so merged positions are a
             # filter (drop superseded docs — same broadcast/semi-join shapes
             # as the posting expunge above) + rewrite; blobs carry verbatim
-            posn = store.positions(spark, inputs)
+            posn = src.positions(spark)
             if n_dead == 0:
                 merged_pos = posn
             elif n_dead <= BROADCAST_DEAD_MAX:
@@ -276,18 +271,19 @@ def _merge_segments_body(
             merged_tf_dl.unpersist()
 
 
-def select_merge_tier(store: IndexStore, merge_factor: int = 8) -> list[str] | None:
+def select_merge_tier(store: IndexStore | StoreView,
+                      merge_factor: int = 8) -> list[str] | None:
     """Size-tiered merge selection (Lucene TieredMergePolicy shape): bucket
     live segments into power-of-two doc-count tiers and pick the smallest
     tier holding >= merge_factor segments. Bounds every merge to at most
     merge_factor similar-sized inputs — at 100 TB a merge job's input is
     O(merge_factor * tier_size), never "all live segments at once"."""
-    live = store.live_segments()
-    if len(live) < merge_factor:
+    view = store.view()
+    if len(view.segments) < merge_factor:
         return None
     tiers: dict[int, list[str]] = {}
-    for s in live:
-        n = max(1, int(store.segment_stats(s)["n_docs"]))
+    for s in view.segments:
+        n = max(1, int(view.store.segment_stats(s)["n_docs"]))
         tiers.setdefault(n.bit_length(), []).append(s)
     for t in sorted(tiers):
         if len(tiers[t]) >= merge_factor:
@@ -303,7 +299,8 @@ def maybe_merge(
 ) -> str | None:
     """Tiered log-structured policy: merge the smallest over-full size tier
     (bounded input count), not every live segment."""
-    sel = select_merge_tier(store, merge_factor)
+    view = store.view()
+    sel = select_merge_tier(view, merge_factor)
     if sel is not None:
-        return merge_segments(spark, store, sel, cfg)
+        return merge_segments(spark, view, sel, cfg)
     return None

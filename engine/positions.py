@@ -141,7 +141,7 @@ def build_position_postings(
 def write_segment_positions(store, segment_id: str, positions: DataFrame) -> None:
     """Write a segment's positions sidecar (term-sorted files, hive-
     partitioned by routing when routed — same layout contract as the
-    postings dir, so IndexStore._read_union serves it unchanged)."""
+    postings dir, so StoreView.positions serves it unchanged)."""
     import os
 
     routed = "routing" in positions.columns
@@ -150,19 +150,6 @@ def write_segment_positions(store, segment_id: str, positions: DataFrame) -> Non
     if routed:
         writer = writer.partitionBy("routing")
     writer.parquet(os.path.join(store.segment_path(segment_id), POSITIONS_SUBDIR))
-
-
-def store_has_positions(store, segments: list[str] | None = None) -> bool:
-    """True when EVERY live segment carries the positions sidecar (a store
-    whose history straddles the store_positions flag cannot answer phrase
-    queries — fail loudly rather than return partial matches)."""
-    import os
-
-    segs = store.live_segments() if segments is None else segments
-    return bool(segs) and all(
-        os.path.isdir(os.path.join(store.segment_path(s), POSITIONS_SUBDIR))
-        for s in segs
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -325,22 +312,21 @@ def search_store_phrase(
     the live-docs join, while df/n_docs/avgdl come from the stored
     per-segment stats (which include superseded docs until a merge expunges
     them — exactly Lucene/ES deleted-doc behavior)."""
-    from engine.merge import live_docs_for_store
-
-    if not store_has_positions(store):
+    view = store.view()
+    if not view.has_positions:
         raise ValueError(
-            f"index {store.name}: no positions sidecar on every live segment "
+            f"index {view.store.name}: no positions sidecar on every live segment "
             "(build with IndexConfig(store_positions=True) to serve phrase "
             "queries)"
         )
-    stats = store.global_stats()
-    docs = store.docs(spark)
-    live = live_docs_for_store(spark, store, docs)
+    stats = view.stats()
+    docs = view.docs(spark)
+    live = view.live_docs(spark, docs)
     if live is None:
         live = docs
     return phrase_topk_from_positions(
         spark,
-        store.positions(spark),
+        view.positions(spark),
         live.select("doc_id", "doc_len"),
         int(stats["n_docs"]),
         float(stats["avgdl"]),

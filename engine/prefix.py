@@ -53,30 +53,42 @@ def prefix_match(
     )
 
 
+def constant_score_store(
+    spark: SparkSession,
+    store,
+    term_pred,
+    k: int | None = 10,
+) -> DataFrame:
+    """Constant-score multi-term query over a persisted store, the Lucene
+    CONSTANT_SCORE rewrite prefix / wildcard / regexp share: the blocks of
+    the terms `term_pred` (a Column over `term`, pushed into the
+    posting-block scan) selects, decoded doc-ids-only; superseded and
+    tombstoned docs are dropped by the live-docs join (search_store
+    semantics). `k=None`: all matches, unordered — for callers that re-rank
+    after a doc-id remap (avoids a pointless global top-k before it)."""
+    from engine.postings import decode_postings_doc_ids
+
+    view = store.view()
+    blocks = view.postings(spark).where(term_pred)
+    matched = decode_postings_doc_ids(blocks, codec=view.codec)
+    live = view.live_docs(spark)
+    if live is not None:
+        matched = matched.join(live.select("doc_id"), "doc_id")
+    scored = matched.select("doc_id", F.lit(1.0).alias("score"))
+    if k is None:
+        return scored
+    return scored.orderBy(F.col("doc_id").asc()).limit(k)
+
+
 def search_store_prefix(
     spark: SparkSession,
     store,
     prefix: str,
     k: int | None = 10,
 ) -> DataFrame:
-    """Constant-score prefix query over a persisted store: matching terms'
-    posting blocks are found via the pushed StringStartsWith scan filter and
-    decoded doc-ids-only; superseded docs are excluded via the live-docs
-    join (search_store semantics)."""
-    from engine.merge import live_docs_for_store
-    from engine.postings import decode_postings_doc_ids
-
-    blocks = store.postings(spark).where(F.col("term").startswith(prefix))
-    matched = decode_postings_doc_ids(blocks, codec=store.codec)
-    live = live_docs_for_store(spark, store)
-    if live is not None:
-        matched = matched.join(live.select("doc_id"), "doc_id")
-    scored = matched.select("doc_id", F.lit(1.0).alias("score"))
-    if k is None:
-        # all matches, unordered — for callers that re-rank after a doc-id
-        # remap (avoids a pointless global top-k before the remap)
-        return scored
-    return scored.orderBy(F.col("doc_id").asc()).limit(k)
+    """Constant-score prefix query over a persisted store: StringStartsWith
+    pushes into the posting-block scan (constant_score_store)."""
+    return constant_score_store(spark, store, F.col("term").startswith(prefix), k)
 
 
 def prefix_oracle_sql(

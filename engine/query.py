@@ -366,8 +366,6 @@ def search_store(
     derived via `routing_for` (same JVM hash as the write path), mirroring
     ES client-side routing (the user never computes shard numbers).
     """
-    from engine.merge import live_docs_for_store
-
     if routing_key is not None:
         if routing is not None:
             raise ValueError("pass either routing or routing_key, not both")
@@ -380,25 +378,18 @@ def search_store(
         # e.g. "bigint"), or the derived shard silently misses
         routing = routing_for(spark, routing_key, num_shards,
                               dtype=routing_key_dtype)
-    if routing is not None:
-        stats = store.routing_global_stats(routing)
-        postings = store.postings_routed(spark, routing)
-        docs = store.docs_routed(spark, routing)
-    else:
-        stats = store.global_stats()
-        postings = store.postings(spark)
-        docs = store.docs(spark)
-    live = live_docs_for_store(spark, store, docs)
+    view = store.view()
+    stats = view.stats(routing)
     return bm25_topk_from_index(
-        postings,
+        view.postings(spark, routing),
         stats["n_docs"],
         stats["avgdl"],
         query_terms,
         k=k,
         cfg=cfg,
         conjunctive=conjunctive,
-        live_docs=live,
-        codec=store.codec,
+        live_docs=view.live_docs(spark, view.docs(spark, routing)),
+        codec=view.codec,
         min_should_match=min_should_match,
         must_not_terms=must_not_terms,
     )
@@ -424,26 +415,19 @@ def search_via_alias(
     (df/n_docs/avgdl stay the searched partition's own stats; a filtered
     alias does not re-weight IDF), so the filter lands on the LIVE-DOCS
     side, never on the stats."""
-    from engine.merge import live_docs_for_store
-
-    spec = store.alias_spec(alias)
+    view = store.view()
+    spec = view.store.alias_spec(alias)
     routing = spec.get("routing")
-    if routing is not None:
-        stats = store.routing_global_stats(routing)
-        postings = store.postings_routed(spark, routing)
-        docs = store.docs_routed(spark, routing)
-    else:
-        stats = store.global_stats()
-        postings = store.postings(spark)
-        docs = store.docs(spark)
-    restrict = live_docs_for_store(spark, store, docs)
+    stats = view.stats(routing)
+    docs = view.docs(spark, routing)
+    restrict = view.live_docs(spark, docs)
     if spec.get("filter_col") is not None:
         base = restrict if restrict is not None else docs
         restrict = base.where(
             F.col(spec["filter_col"]) == F.lit(spec["filter_val"])
         )
     return bm25_topk_from_index(
-        postings,
+        view.postings(spark, routing),
         stats["n_docs"],
         stats["avgdl"],
         query_terms,
@@ -451,7 +435,7 @@ def search_via_alias(
         cfg=cfg,
         conjunctive=conjunctive,
         live_docs=restrict,
-        codec=store.codec,
+        codec=view.codec,
     )
 
 
@@ -521,11 +505,11 @@ def exact_topk_blocks(
 
 
 class IndexReader:
-    """Query-server view of a persisted index, pinned to the ledger state
-    it was opened on: the live segments are resolved ONCE, and stats, the
-    deleted-doc set, the postings files and every lazily cached relation
-    come from that one state. A commit after the open stays invisible
-    until `refresh()`.
+    """Query server over a persisted index: a StoreView plus reads on the
+    driver. The reader holds the view taken at open (one ledger read), and
+    stats, the deleted-doc set, the postings files and every lazily cached
+    relation come from it. A commit after the open stays invisible until
+    `refresh()`, which takes a new view.
 
     This is the searcher/reader split Lucene makes (ES holds an
     IndexSearcher open across requests). A `search` / `search_wand` call
@@ -558,36 +542,21 @@ class IndexReader:
         self._open()
 
     def _open(self) -> None:
-        from engine.merge import live_docs_for_store
-
-        self._entries = self.store.ledger_entries()
-        self._segments = self.store.live_segments(self._entries)
-        self.stats = self.store.global_stats(self._segments)
-        self._codec = self.store.codec
-        self._postings_files = self.store.postings_files(self._segments)
+        self._view = self.store.view()
+        self.stats = self._view.stats()
+        self._postings_files = self._view.postings_files()
         self._df_memo: dict[str, int] = {}
-        self.doc_id_hwm = self.store.next_doc_id_base(self._segments)
-        self.deleted: frozenset = frozenset()
-        self._deleted_overflow = False
         # Spark relations, cached on first use (see _cached)
         self._postings_cache = None  # distributed fallbacks
         self._term_stats_cache = None  # search_fuzzy / suggest
         self._live_cache = None  # overflow fallback
         self._positions_cache = None  # search_phrase
         self._doc_len_cache = None  # search_phrase
-        live = live_docs_for_store(self.spark, self.store, entries=self._entries)
-        if live is not None:
-            docs = self.store.docs(self.spark, self._segments)
-            deleted = docs.join(live.select("doc_id"), "doc_id", "left_anti")
-            cap = self.cfg.max_deleted_driver
-            rows = deleted.select("doc_id").limit(cap + 1).collect()
-            if len(rows) > cap:
-                # too many superseded docs to hold on the driver — queries
-                # run the distributed exact path until the next merge
-                # shrinks the set
-                self._deleted_overflow = True
-            else:
-                self.deleted = frozenset(r["doc_id"] for r in rows)
+        # superseded/tombstoned ids; too many to hold on the driver ->
+        # queries run the distributed plans until a merge shrinks the set
+        deleted = self._view.deleted_doc_ids(self.spark, self.cfg.max_deleted_driver)
+        self._deleted_overflow = deleted is None
+        self.deleted = deleted or frozenset()
         self._deleted_sorted = sorted_ids(self.deleted)
 
     def _cached(self, attr: str, build) -> DataFrame:
@@ -604,7 +573,7 @@ class IndexReader:
 
     def _postings_df(self) -> DataFrame:
         return self._cached(
-            "_postings_cache", lambda: self.store.postings(self.spark, self._segments)
+            "_postings_cache", lambda: self._view.postings(self.spark)
         )
 
     def _term_stats_df(self) -> DataFrame:
@@ -612,7 +581,7 @@ class IndexReader:
         # 10^8+ terms and would OOM the driver
         return self._cached(
             "_term_stats_cache",
-            lambda: self.store.term_stats_df(self.spark, self._segments),
+            lambda: self._view.term_stats_df(self.spark),
         )
 
     def df_for_terms(self, terms: list[str]) -> dict[str, int]:
@@ -685,7 +654,7 @@ class IndexReader:
     ) -> pd.DataFrame:
         return exact_topk_blocks(
             blocks, self.stats["n_docs"], self.stats["avgdl"], q_terms, k=k,
-            cfg=self.cfg, excluded=self._deleted_sorted, codec=self._codec,
+            cfg=self.cfg, excluded=self._deleted_sorted, codec=self._view.codec,
             min_should_match=len(q_terms) if conjunctive else min_should_match,
             must_not_terms=must_not_terms,
         )
@@ -707,7 +676,7 @@ class IndexReader:
             conjunctive=conjunctive,
             live_docs=self._live_docs_df(),
             excluded_doc_ids=None if self._deleted_overflow else self.deleted,
-            codec=self._codec,
+            codec=self._view.codec,
             min_should_match=min_should_match,
             must_not_terms=must_not_terms or None,
         )
@@ -715,10 +684,8 @@ class IndexReader:
     def _live_docs_df(self):
         if not self._deleted_overflow:
             return None  # bounded set rides excluded_doc_ids instead
-        from engine.merge import live_docs_for_store
-
-        return self._cached("_live_cache", lambda: live_docs_for_store(
-            self.spark, self.store, entries=self._entries).select("doc_id"))
+        return self._cached(
+            "_live_cache", lambda: self._view.live_docs(self.spark).select("doc_id"))
 
     def search_wand(
         self,
@@ -782,9 +749,9 @@ class IndexReader:
             q_terms,
             k=k,
             cfg=self.cfg,
-            doc_id_hwm=self.doc_id_hwm,
+            doc_id_hwm=self._view.doc_id_hwm,
             excluded_doc_ids=self.deleted or None,
-            codec=self._codec,
+            codec=self._view.codec,
             stats_out=stats_out,
         )
 
@@ -841,27 +808,24 @@ class IndexReader:
         engine.positions.search_store_phrase: superseded docs are excluded
         via the bounded driver-side set (NOT IN literal) or, on overflow,
         by restricting the cached doc-len projection to live docs."""
-        from engine.positions import phrase_topk_from_positions, store_has_positions
+        from engine.positions import phrase_topk_from_positions
 
-        if not store_has_positions(self.store, self._segments):
+        if not self._view.has_positions:
             raise ValueError(
                 f"index {self.store.name}: no positions sidecar on every "
                 "live segment (build with IndexConfig(store_positions=True) "
                 "to serve phrase queries)"
             )
         def doc_lens():
-            docs = self.store.docs(self.spark, self._segments)
+            docs = self._view.docs(self.spark)
             if self._deleted_overflow:
-                from engine.merge import live_docs_for_store
-
-                live = live_docs_for_store(self.spark, self.store, docs, self._entries)
-                docs = live if live is not None else docs
+                docs = self._view.live_docs(self.spark, docs)
             return docs.select("doc_id", "doc_len")
 
         return phrase_topk_from_positions(
             self.spark,
             self._cached("_positions_cache",
-                         lambda: self.store.positions(self.spark, self._segments)),
+                         lambda: self._view.positions(self.spark)),
             self._cached("_doc_len_cache", doc_lens),
             int(self.stats["n_docs"]),
             float(self.stats["avgdl"]),

@@ -402,8 +402,7 @@ def simple_query_string_store(
     stored values; live/tombstoned docs excluded from RESULTS only).
     Rank-identical to the corpus path on a merged store whose stats cover
     the corpus (tested via the shared oracle)."""
-    from engine.merge import live_docs_for_store
-    from engine.positions import phrase_scores_from_positions, store_has_positions
+    from engine.positions import phrase_scores_from_positions
     from engine.postings import decode_postings_doc_ids
     from engine.query import index_term_contribs
 
@@ -411,15 +410,16 @@ def simple_query_string_store(
     (must_terms, should_terms, neg_terms, phrases, scoring_terms, n_must,
      need_should) = _compile_clauses(clauses)
 
-    if phrases and not store_has_positions(store):
+    view = store.view()
+    if phrases and not view.has_positions:
         raise ValueError(
-            f"index {store.name}: phrase clauses need the positions sidecar "
+            f"index {view.store.name}: phrase clauses need the positions sidecar "
             "(build with IndexConfig(store_positions=True))"
         )
 
-    stats = store.global_stats()
-    postings = store.postings(spark)
-    live = live_docs_for_store(spark, store)
+    stats = view.stats()
+    postings = view.postings(spark)
+    live = view.live_docs(spark)
 
     parts = []
     if scoring_terms:
@@ -427,15 +427,15 @@ def simple_query_string_store(
         parts.append(
             index_term_contribs(
                 postings, stats["n_docs"], stats["avgdl"], scoring_terms,
-                cfg=cfg, live_docs=live, codec=store.codec,
+                cfg=cfg, live_docs=live, codec=view.codec,
             )
             .join(F.broadcast(occ), "term")
             .select("doc_id", "contrib", "is_must", "is_should")
         )
-    pos_rel = store.positions(spark) if phrases else None
+    pos_rel = view.positions(spark) if phrases else None
     doc_len_df = None
     if phrases:
-        docs = store.docs(spark)
+        docs = view.docs(spark)
         doc_len_df = (live if live is not None else docs).select(
             "doc_id", "doc_len"
         )
@@ -459,7 +459,7 @@ def simple_query_string_store(
         )
 
     def _matchall():
-        base = live if live is not None else store.docs(spark)
+        base = live if live is not None else view.docs(spark)
         return base.select("doc_id")
 
     neg_sets = []
@@ -467,7 +467,7 @@ def simple_query_string_store(
         neg_sets.append(
             lambda: decode_postings_doc_ids(
                 postings.where(F.col("term").isin(neg_terms)),
-                codec=store.codec,
+                codec=view.codec,
             )
         )
     for c in phrases:

@@ -51,7 +51,8 @@ def reindex(
     """Bulk-copy src_store's live docs into dst_store (created by the
     caller with the destination settings). Returns the ingest BatchResult
     (segment id, n_docs, metrics) or None for an empty source."""
-    docs = src_store.docs(spark)
+    view = src_store.view()
+    docs = view.docs(spark)
     if "source" not in docs.columns:
         raise ValueError(
             "source index was built without store_source=True (_source "
@@ -62,9 +63,7 @@ def reindex(
     # (engine/updates.py) exist only in the SOURCE's ledger — copying a
     # tombstoned doc would resurrect it in the destination (ES _reindex
     # copies live docs only)
-    from engine.merge import live_docs_for_store
-
-    live = live_docs_for_store(spark, src_store, docs)
+    live = view.live_docs(spark, docs)
     if live is not None:
         docs = docs.join(live.select("doc_id"), "doc_id", "left_semi")
     window = docs.select(

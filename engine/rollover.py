@@ -53,8 +53,9 @@ def rollover(
     if cur is None:
         raise ValueError(f"alias {alias!r} is not attached to any index")
 
-    segs = cur.live_segments()
-    n_docs = int(cur.global_stats()["n_docs"]) if segs else 0
+    view = cur.view()
+    segs = view.segments
+    n_docs = int(view.stats()["n_docs"])
     conditions = {}
     if max_docs is not None:
         conditions[f"max_docs={max_docs}"] = n_docs >= max_docs

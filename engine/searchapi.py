@@ -31,9 +31,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from engine.config import TOKEN_PATTERN
+from engine.segments import live_doc_ids
 
 _DUCK_TOKS = "regexp_extract_all(lower(coalesce({col}, '')), '{pat}')"
 
@@ -107,13 +107,9 @@ def mget_store(spark: SparkSession, store, urls: list[str]) -> DataFrame:
     In(url, ...) -> row-group skipping via url min/max), so the lookup cost
     is O(matching row groups), not O(corpus). Returns the newest live
     version per url (last-write-wins over (url, warc_ts) — D10 semantics)."""
-    hits = store.docs(spark).where(F.col("url").isin(urls))
-    w_newest = F.row_number().over(
-        Window.partitionBy("url")
-        .orderBy(F.col("warc_ts").desc(), F.col("doc_id").desc())
-    )
-    out = hits.withColumn("_rk", w_newest).where(F.col("_rk") == 1)
-    dels = store.deleted_ids(spark)
+    view = store.view()
+    out = live_doc_ids(view.docs(spark).where(F.col("url").isin(urls)))
+    dels = view.deleted_ids(spark)
     if dels is not None:
         # a deleted url is "found: false" in ES _mget -> no row here
         out = out.join(dels, "doc_id", "left_anti")
@@ -137,12 +133,12 @@ def count_query_store(
     The count never collects ids to the driver: distinct + count is a
     partial-aggregated shuffle of ids bounded by the query's postings, the
     same cardinality WAND's candidate set already has."""
-    from engine.merge import live_docs_for_store
     from engine.postings import decode_postings_doc_ids
 
-    postings = store.postings(spark).where(F.col("term").isin(query_terms))
-    ids = decode_postings_doc_ids(postings, codec=store.codec)
-    live = live_docs_for_store(spark, store)
+    view = store.view()
+    postings = view.postings(spark).where(F.col("term").isin(query_terms))
+    ids = decode_postings_doc_ids(postings, codec=view.codec)
+    live = view.live_docs(spark)
     if live is not None:
         ids = ids.join(live.select("doc_id"), "doc_id", "left_semi")
     return ids.agg(F.count(F.lit(1)).alias("n_hits"))

@@ -36,9 +36,10 @@ import json
 import os
 import shutil
 import tempfile
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass, field, replace
+from functools import cached_property
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from engine.config import DEFAULT_CONFIG, IndexConfig
@@ -211,12 +212,7 @@ class IndexStore:
         """Posting-block codec this store was created with ("varint" for
         stores predating the codec field). Every segment of a store shares
         one codec; ingest/merge/query all resolve it from here."""
-        mp = os.path.join(self.path, "_meta.json")
-        try:
-            with open(mp) as f:
-                return json.load(f).get("codec", "varint")
-        except FileNotFoundError:
-            return "varint"
+        return self.persisted_config().codec
 
     def persisted_config(self) -> IndexConfig:
         """The IndexConfig this store was CREATED with, rehydrated from
@@ -230,8 +226,6 @@ class IndexStore:
                 meta = json.load(f)
         except FileNotFoundError:
             return DEFAULT_CONFIG
-        from dataclasses import replace
-
         return replace(
             DEFAULT_CONFIG,
             k1=float(meta.get("k1", DEFAULT_CONFIG.k1)),
@@ -256,33 +250,38 @@ class IndexStore:
         return sorted(out, key=lambda e: e.entry_id)
 
     def next_entry_id(self) -> int:
-        es = self.ledger_entries()
-        return (es[-1].entry_id + 1) if es else 0
+        return self.view().next_entry_id
 
     def commit(self, entry: LedgerEntry) -> None:
-        path = os.path.join(self.path, "ledger", f"{entry.entry_id:010d}.json")
-        if os.path.exists(path):
-            raise RuntimeError(f"ledger entry {entry.entry_id} already committed")
-        _atomic_write_json(path, asdict(entry))
+        """Write `entry` create-if-absent: a fully written temp file is
+        linked into place, and the link fails if the entry id is taken."""
+        d = os.path.join(self.path, "ledger")
+        os.makedirs(d, exist_ok=True)
+        fd, tmp = tempfile.mkstemp(dir=d, suffix=".tmp")
+        try:
+            with os.fdopen(fd, "w") as f:
+                json.dump(asdict(entry), f, indent=1, sort_keys=True)
+            os.link(tmp, os.path.join(d, f"{entry.entry_id:010d}.json"))
+        except FileExistsError:
+            raise RuntimeError(f"ledger entry {entry.entry_id} already committed") from None
+        finally:
+            os.unlink(tmp)
 
-    def live_segments(self, entries: list[LedgerEntry] | None = None) -> list[str]:
-        """Live segment ids after folding `entries` (default: the ledger as
-        it is now). A reader that folds one ledger_entries() list pins
-        every read to that one ledger state."""
-        live: list[str] = []
-        for e in self.ledger_entries() if entries is None else entries:
-            live = [s for s in live if s not in set(e.segments_removed)]
-            live.extend(e.segments_added)
-        return live
+    def view(self) -> "StoreView":
+        """The store as of ONE ledger_entries() read (see StoreView)."""
+        entries = tuple(self.ledger_entries())
+        live: dict[str, None] = {}  # insertion-ordered set: one linear fold
+        for e in entries:
+            for s in e.segments_removed:
+                live.pop(s, None)
+            live.update(dict.fromkeys(e.segments_added))
+        return StoreView(self, entries, tuple(live), self.codec)
+
+    def live_segments(self) -> list[str]:
+        return list(self.view().segments)
 
     def committed_offsets(self) -> dict[int, int]:
-        """Per-partition high-water marks folded over ingest entries (S2 RESTART)."""
-        hwm: dict[int, int] = {}
-        for e in self.ledger_entries():
-            for p, o in e.partition_offsets.items():
-                p = int(p)
-                hwm[p] = max(hwm.get(p, -1), int(o))
-        return hwm
+        return self.view().committed_offsets
 
     def has_batch(self, batch_id: int) -> bool:
         return any(
@@ -290,44 +289,6 @@ class IndexStore:
             for e in self.ledger_entries()
             if e.kind == "ingest"
         )
-
-    # -- delete_by_query tombstones (engine/updates.py) -----------------------
-    def active_delete_entries(
-        self, entries: list[LedgerEntry] | None = None
-    ) -> list[LedgerEntry]:
-        """Delete entries that can still match a live doc. A delete applies
-        only to docs that existed when it committed; doc ids are globally
-        monotonic (next_doc_id_base), so once every live segment was CREATED
-        after the delete entry (merges rewrite survivors under fresh ids),
-        the entry is inert and read paths skip its anti-join entirely.
-        `entries`: the ledger state to read (default: the ledger now)."""
-        entries = self.ledger_entries() if entries is None else entries
-        created = {}
-        for e in entries:
-            for s in e.segments_added:
-                created[s] = e.entry_id
-        live = self.live_segments(entries)
-        if not live:
-            return []
-        oldest = min(created[s] for s in live)
-        return [e for e in entries if e.kind == "delete" and e.entry_id > oldest]
-
-    def has_deletes(self) -> bool:
-        return bool(self.active_delete_entries())
-
-    def deleted_ids(self, spark: SparkSession,
-                    entries: list[LedgerEntry] | None = None):
-        """(doc_id) relation of delete_by_query tombstones, or None when no
-        active delete entries exist (the common, zero-cost path). Bounded by
-        the delete rate between merges — the Lucene live-docs-bitset analog.
-        `entries`: the ledger state to read (default: the ledger now)."""
-        entries = self.active_delete_entries(entries)
-        if not entries:
-            return None
-        paths = [
-            os.path.join(self.path, e.metrics["deletes_dir"]) for e in entries
-        ]
-        return self._read_parquet(spark, *paths).select("doc_id").distinct()
 
     # -- segments -------------------------------------------------------------
     def segment_path(self, segment_id: str) -> str:
@@ -444,188 +405,14 @@ class IndexStore:
     def drop_segment_files(self, segment_id: str) -> None:
         shutil.rmtree(self.segment_path(segment_id), ignore_errors=True)
 
-    # -- readers ----------------------------------------------------------------
-    def _read_union(self, spark: SparkSession, sub: str, segments: list[str] | None,
-                    routing: str | None = None):
-        segs = self.live_segments() if segments is None else segments
-        if not segs:
-            raise ValueError(f"index {self.name} has no live segments")
-        paths = [os.path.join(self.segment_path(s), sub) for s in segs]
-        routed = os.path.isdir(paths[0]) and any(
-            d.startswith("routing=") for d in os.listdir(paths[0])
-        )
-        if not routed:
-            return self._read_parquet(spark, *paths)
-        if len(paths) == 1 and routing is None:
-            return self._read_parquet(spark, *paths)
-        # hive-partitioned segment dirs (routing=...) cannot share one
-        # multi-root read (CONFLICTING_DIRECTORY_STRUCTURES). Group by
-        # ROUTING VALUE instead: each value's per-segment leaf dirs share a
-        # flat structure, so they read as ONE multi-root scan node. The
-        # union is O(distinct routing values) — bounded by the num_shards
-        # analog — never O(segments) (the round-2 scale-killer: one scan
-        # node per segment until a merge collapsed the store).
-        # `routing` prunes at PATH-LISTING time: only that value's leaf
-        # directories are ever handed to the reader (stronger than a
-        # partition filter — non-matching files are never even listed)
-        # directory suffixes are HIVE-ESCAPED (%XX for : / % = etc.; nulls
-        # land under __HIVE_DEFAULT_PARTITION__) — compare and label with
-        # the DECODED value, or a routing value like "en:US" silently
-        # matches nothing once a second segment exists (review finding r04)
-        by_routing: dict[str | None, list[str]] = {}
-        for p in paths:
-            if not os.path.isdir(p):
-                continue
-            for d in os.listdir(p):
-                if d.startswith("routing="):
-                    rv = _unescape_hive(d[len("routing="):])
-                    if routing is not None and rv != routing:
-                        continue
-                    by_routing.setdefault(rv, []).append(os.path.join(p, d))
-        out = None
-        for rv in sorted(by_routing, key=lambda v: (v is None, v)):
-            # mergeSchema + allowMissingColumns: routing groups may straddle
-            # a schema addition (segments written before/after the impacts
-            # columns); missing columns become nulls, which the readers'
-            # legacy fallbacks expect — without this the union raises or
-            # silently drops the new columns depending on footer sampling
-            df = spark.read.option("mergeSchema", "true").parquet(*by_routing[rv])
-            df = df.withColumn("routing", F.lit(rv).cast("string"))
-            out = df if out is None else out.unionByName(
-                df, allowMissingColumns=True
-            )
-        if out is None:
-            if routing is not None:
-                # requested routing value holds no documents: empty result
-                # with the store's schema (read any partition, keep no rows)
-                empty = self._read_union(spark, sub, segs).where(F.lit(False))
-                return empty.withColumn("routing", F.lit(routing).cast("string"))
-            raise ValueError(f"index {self.name}: no routing partitions under {sub}")
-        return out
+    def docs(self, spark: SparkSession) -> DataFrame:
+        return self.view().docs(spark)
 
-    def postings(self, spark: SparkSession, segments: list[str] | None = None) -> DataFrame:
-        return self._read_union(spark, "postings", segments)
+    def postings(self, spark: SparkSession) -> DataFrame:
+        return self.view().postings(spark)
 
-    def postings_files(self, segments: list[str]) -> "PostingsFiles":
-        """The postings Parquet files of `segments`, for reads on the driver
-        with no Spark job. Files are listed through the routing= hive
-        directories, without Spark's _SUCCESS and .crc side files."""
-        if not segments:
-            raise ValueError(f"index {self.name} has no live segments")
-        paths = []
-        for s in segments:
-            for d, subdirs, names in os.walk(os.path.join(self.segment_path(s), "postings")):
-                subdirs.sort()
-                paths += [os.path.join(d, n) for n in sorted(names)
-                          if n.endswith(".parquet") and not n.startswith((".", "_"))]
-        return PostingsFiles(paths)
-
-    def docs(self, spark: SparkSession, segments: list[str] | None = None) -> DataFrame:
-        return self._read_union(spark, "docs", segments)
-
-    def positions(self, spark: SparkSession, segments: list[str] | None = None) -> DataFrame:
-        """Positional-postings sidecar union (engine/positions.py); present
-        only for segments built with IndexConfig(store_positions=True)."""
-        return self._read_union(spark, "positions", segments)
-
-    def term_stats_df(self, spark: SparkSession, segments: list[str] | None = None) -> DataFrame:
-        """(term, df) summed over `segments`. Merged (long-lived) segments
-        have a persisted term_stats table; micro-ingest segments don't
-        (write_segment skips it — one less action per batch), so their df
-        comes from the postings block metadata directly: a column-pruned
-        scan of (term, n) — the heavy posting buffers are never read, and a
-        caller's `term IN (...)` filter pushes down to row-group skipping."""
-        segs = self.live_segments() if segments is None else segments
-        have = [
-            s for s in segs
-            if os.path.isdir(os.path.join(self.segment_path(s), "term_stats"))
-        ]
-        lack = [s for s in segs if s not in set(have)]
-        parts = []
-        if have:
-            parts.append(
-                self._read_union(spark, "term_stats", have).select("term", "df")
-            )
-        if lack:
-            parts.append(
-                self._read_union(spark, "postings", lack).select(
-                    "term", F.col("n").cast("long").alias("df")
-                )
-            )
-        if not parts:
-            raise ValueError(f"index {self.name} has no live segments")
-        df = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-        return df.groupBy("term").agg(F.sum("df").cast("long").alias("df"))
-
-    def postings_routed(self, spark: SparkSession, routing: str,
-                        segments: list[str] | None = None) -> DataFrame:
-        """Postings pruned to one routing partition (D9): only routing=<val>
-        directories are ever listed or read — the ES routed-shard-search
-        data-locality analog. Single-segment stores keep the hive partition
-        filter (PartitionFilters in the plan); multi-segment stores prune at
-        path level inside _read_union."""
-        segs = self.live_segments() if segments is None else segments
-        if len(segs) == 1:
-            return self.postings(spark, segs).where(
-                F.col("routing") == F.lit(routing)
-            )
-        return self._read_union(spark, "postings", segs, routing=routing)
-
-    def docs_routed(self, spark: SparkSession, routing: str,
-                    segments: list[str] | None = None) -> DataFrame:
-        segs = self.live_segments() if segments is None else segments
-        if len(segs) == 1:
-            return self.docs(spark, segs).where(F.col("routing") == F.lit(routing))
-        return self._read_union(spark, "docs", segs, routing=routing)
-
-    def routing_values(self, segments: list[str] | None = None) -> list[str]:
-        segs = self.live_segments() if segments is None else segments
-        vals: set[str] = set()
-        for s in segs:
-            vals.update((self.segment_stats(s).get("routing_stats") or {}).keys())
-        return sorted(vals)
-
-    def routing_global_stats(self, routing: str,
-                             segments: list[str] | None = None) -> dict:
-        """Per-routing-partition corpus stats (shard-local BM25 semantics: a
-        routed ES query_then_fetch search scores with the routed shard's own
-        stats — SURVEY.md §2.5 D9)."""
-        segs = self.live_segments() if segments is None else segments
-        n_docs, sum_dl = 0, 0
-        for s in segs:
-            rs = (self.segment_stats(s).get("routing_stats") or {}).get(routing)
-            if rs:
-                n_docs += rs["n_docs"]
-                sum_dl += rs["sum_dl"]
-        return {
-            "n_docs": n_docs,
-            "sum_dl": sum_dl,
-            "avgdl": (sum_dl / n_docs) if n_docs else 0.0,
-        }
-
-    def global_stats(self, segments: list[str] | None = None) -> dict:
-        segs = self.live_segments() if segments is None else segments
-        n_docs, sum_dl = 0, 0
-        for s in segs:
-            st = self.segment_stats(s)
-            n_docs += st["n_docs"]
-            sum_dl += st["sum_dl"]
-        return {
-            "n_docs": n_docs,
-            "sum_dl": sum_dl,
-            "avgdl": (sum_dl / n_docs) if n_docs else 0.0,
-        }
-
-    def next_doc_id_base(self, segments: list[str] | None = None) -> int:
-        """Doc-id space high-water mark. Each segment records `doc_id_hwm`;
-        merges carry forward the max of their inputs, so the live set alone
-        determines the next base and ids are never reused."""
-        base = 0
-        for s in self.live_segments() if segments is None else segments:
-            st = self.segment_stats(s)
-            hwm = st.get("doc_id_hwm", st["base_doc_id"] + st["n_docs"])
-            base = max(base, hwm)
-        return base
+    def global_stats(self) -> dict:
+        return self.view().stats()
 
     # -- aliases (S9-S11) ---------------------------------------------------
     def _aliases(self) -> dict:
@@ -666,11 +453,279 @@ class IndexStore:
         equality down to the parquet scan (partition/row-group pruning). An
         alias routing value prunes the scan to that routing partition first."""
         spec = self.alias_spec(alias)
-        df = (
-            self.docs_routed(spark, spec["routing"])
-            if spec["routing"] is not None
-            else self.docs(spark)
-        )
+        df = self.view().docs(spark, routing=spec["routing"])
         if spec["filter_col"] is not None:
             df = df.where(F.col(spec["filter_col"]) == F.lit(spec["filter_val"]))
         return df
+
+
+def live_doc_ids(docs_df):
+    """Latest doc per url: rank by (warc_ts desc, doc_id desc) — newest
+    segment wins ties, matching ES upsert-by-id last-write-wins (D10)."""
+    w = Window.partitionBy("url").orderBy(
+        F.col("warc_ts").desc(), F.col("doc_id").desc()
+    )
+    return (
+        docs_df.withColumn("_rk", F.row_number().over(w))
+        .where(F.col("_rk") == 1)
+        .drop("_rk")
+    )
+
+
+@dataclass(frozen=True)
+class StoreView:
+    """An IndexStore as of ONE ledger_entries() read: the entries, the live
+    segments they fold to, and the codec. Every read answers from that one
+    state, so stats, postings, docs and tombstones of one call always
+    belong together; a commit after the view was taken is invisible to it.
+    A read path takes `view = store.view()` once on entry and hands the
+    view to what it calls (`StoreView.view()` returns the view itself).
+
+    `restrict(segments)` narrows the segments, keeping the entries (merge
+    inputs). Properties that read segment stats or the filesystem are
+    computed once per view."""
+
+    store: IndexStore
+    entries: tuple[LedgerEntry, ...]
+    segments: tuple[str, ...]
+    codec: str
+
+    def view(self) -> "StoreView":
+        return self
+
+    def restrict(self, segments) -> "StoreView":
+        gone = [s for s in segments if s not in self.segments]
+        if gone:
+            raise ValueError(f"index {self.store.name}: segments not live: {gone}")
+        return replace(self, segments=tuple(segments))
+
+    # -- ledger state ---------------------------------------------------------
+    @property
+    def next_entry_id(self) -> int:
+        return (self.entries[-1].entry_id + 1) if self.entries else 0
+
+    @cached_property
+    def committed_offsets(self) -> dict[int, int]:
+        """Per-partition high-water marks folded over the entries (S2 RESTART)."""
+        hwm: dict[int, int] = {}
+        for e in self.entries:
+            for p, o in e.partition_offsets.items():
+                hwm[int(p)] = max(hwm.get(int(p), -1), int(o))
+        return hwm
+
+    @cached_property
+    def doc_id_hwm(self) -> int:
+        """Doc-id space high-water mark. Each segment records `doc_id_hwm`;
+        merges carry forward the max of their inputs, so the live set alone
+        determines the next base and ids are never reused."""
+        base = 0
+        for s in self.segments:
+            st = self.store.segment_stats(s)
+            base = max(base, st.get("doc_id_hwm", st["base_doc_id"] + st["n_docs"]))
+        return base
+
+    def stats(self, routing: str | None = None) -> dict:
+        """Corpus stats summed over the segments. With `routing`: that
+        routing partition's own stats (shard-local BM25 semantics: a routed
+        ES query_then_fetch search scores with the routed shard's own stats
+        — SURVEY.md §2.5 D9)."""
+        n_docs, sum_dl = 0, 0
+        for s in self.segments:
+            st = self.store.segment_stats(s)
+            if routing is not None:
+                st = (st.get("routing_stats") or {}).get(routing)
+                if not st:
+                    continue
+            n_docs += st["n_docs"]
+            sum_dl += st["sum_dl"]
+        return {
+            "n_docs": n_docs,
+            "sum_dl": sum_dl,
+            "avgdl": (sum_dl / n_docs) if n_docs else 0.0,
+        }
+
+    def routing_values(self) -> list[str]:
+        vals: set[str] = set()
+        for s in self.segments:
+            vals.update((self.store.segment_stats(s).get("routing_stats") or {}).keys())
+        return sorted(vals)
+
+    @cached_property
+    def has_positions(self) -> bool:
+        """True when EVERY segment carries the positions sidecar (a store
+        whose history straddles the store_positions flag cannot answer
+        phrase queries — fail loudly rather than return partial matches)."""
+        return bool(self.segments) and all(
+            os.path.isdir(os.path.join(self.store.segment_path(s), "positions"))
+            for s in self.segments
+        )
+
+    # -- delete_by_query tombstones (engine/updates.py) -----------------------
+    @cached_property
+    def active_deletes(self) -> list[LedgerEntry]:
+        """Delete entries that can still match a doc of the segments. A
+        delete applies only to docs that existed when it committed; doc ids
+        are globally monotonic (doc_id_hwm) and a merge expunges every
+        active tombstone of its inputs, so once every segment was CREATED
+        after the delete entry the entry is inert and read paths skip its
+        anti-join entirely."""
+        if not self.segments:
+            return []
+        created = {s: e.entry_id for e in self.entries for s in e.segments_added}
+        oldest = min(created[s] for s in self.segments)
+        return [e for e in self.entries if e.kind == "delete" and e.entry_id > oldest]
+
+    def deleted_ids(self, spark: SparkSession):
+        """(doc_id) relation of delete_by_query tombstones, or None when no
+        active delete entries exist (the common, zero-cost path). Bounded by
+        the delete rate between merges — the Lucene live-docs-bitset analog."""
+        if not self.active_deletes:
+            return None
+        paths = [os.path.join(self.store.path, e.metrics["deletes_dir"])
+                 for e in self.active_deletes]
+        return IndexStore._read_parquet(spark, *paths).select("doc_id").distinct()
+
+    def live_docs(self, spark: SparkSession, docs: DataFrame | None = None):
+        """The live-docs relation every store read path shares:
+        last-write-wins version ranking (multi-segment upsert, D10) MINUS
+        delete_by_query tombstones (engine/updates.py). Returns None when no
+        filtering is needed — one segment and no active deletes — so callers
+        skip the join entirely (the common path costs nothing).
+
+        Ordering matters: the version ranking runs BEFORE the tombstone
+        anti-join. Deleting a url's latest version must delete the url, not
+        resurrect the superseded older version (ES delete-by-id semantics).
+
+        `docs`: a relation of this view's docs to rank (default: all of
+        them), e.g. one already pruned by routing or a url filter."""
+        multi = len(self.segments) > 1
+        dels = self.deleted_ids(spark)
+        if not multi and dels is None:
+            return None
+        if docs is None:
+            docs = self.docs(spark)
+        live = live_doc_ids(docs) if multi else docs
+        if dels is not None:
+            live = live.join(dels, "doc_id", "left_anti")
+        return live
+
+    def deleted_doc_ids(self, spark: SparkSession, cap: int) -> frozenset | None:
+        """Ids of the docs that are not live (superseded or tombstoned), for
+        exclusion on the driver; None when there are more than `cap`."""
+        live = self.live_docs(spark)
+        if live is None:
+            return frozenset()
+        deleted = self.docs(spark).join(live.select("doc_id"), "doc_id", "left_anti")
+        rows = deleted.select("doc_id").limit(cap + 1).collect()
+        if len(rows) > cap:
+            return None
+        return frozenset(r["doc_id"] for r in rows)
+
+    # -- relations --------------------------------------------------------------
+    def _read_union(self, spark: SparkSession, sub: str, routing: str | None = None):
+        if not self.segments:
+            raise ValueError(f"index {self.store.name} has no live segments")
+        paths = [os.path.join(self.store.segment_path(s), sub) for s in self.segments]
+        routed = os.path.isdir(paths[0]) and any(
+            d.startswith("routing=") for d in os.listdir(paths[0])
+        )
+        if not routed:
+            return IndexStore._read_parquet(spark, *paths)
+        if len(paths) == 1:
+            # one segment keeps the hive partition filter (PartitionFilters
+            # in the plan)
+            df = IndexStore._read_parquet(spark, *paths)
+            return df if routing is None else df.where(F.col("routing") == F.lit(routing))
+        # hive-partitioned segment dirs (routing=...) cannot share one
+        # multi-root read (CONFLICTING_DIRECTORY_STRUCTURES). Group by
+        # ROUTING VALUE instead: each value's per-segment leaf dirs read as
+        # ONE multi-root scan node, so the union is O(distinct routing
+        # values), never O(segments). `routing` prunes at PATH-LISTING time:
+        # non-matching files are never even listed. Directory suffixes are
+        # HIVE-ESCAPED (%XX, __HIVE_DEFAULT_PARTITION__): compare and label
+        # with the DECODED value, or "en:US" matches nothing (review r04)
+        by_routing: dict[str | None, list[str]] = {}
+        for p in paths:
+            if not os.path.isdir(p):
+                continue
+            for d in os.listdir(p):
+                if d.startswith("routing="):
+                    rv = _unescape_hive(d[len("routing="):])
+                    if routing is not None and rv != routing:
+                        continue
+                    by_routing.setdefault(rv, []).append(os.path.join(p, d))
+        out = None
+        for rv in sorted(by_routing, key=lambda v: (v is None, v)):
+            # mergeSchema + allowMissingColumns: routing groups may straddle
+            # a schema addition (the impacts columns); missing columns
+            # become the nulls the readers' legacy fallbacks expect
+            df = spark.read.option("mergeSchema", "true").parquet(*by_routing[rv])
+            df = df.withColumn("routing", F.lit(rv).cast("string"))
+            out = df if out is None else out.unionByName(
+                df, allowMissingColumns=True
+            )
+        if out is None:
+            if routing is not None:
+                # requested routing value holds no documents: empty result
+                # with the store's schema (read any partition, keep no rows)
+                empty = self._read_union(spark, sub).where(F.lit(False))
+                return empty.withColumn("routing", F.lit(routing).cast("string"))
+            raise ValueError(f"index {self.store.name}: no routing partitions under {sub}")
+        return out
+
+    def postings(self, spark: SparkSession, routing: str | None = None) -> DataFrame:
+        """Posting blocks; with `routing`, pruned to that routing partition
+        (D9): only routing=<val> directories are ever listed or read — the
+        ES routed-shard-search data-locality analog."""
+        return self._read_union(spark, "postings", routing)
+
+    def docs(self, spark: SparkSession, routing: str | None = None) -> DataFrame:
+        return self._read_union(spark, "docs", routing)
+
+    def positions(self, spark: SparkSession) -> DataFrame:
+        """Positional-postings sidecar union (engine/positions.py); present
+        only for segments built with IndexConfig(store_positions=True)."""
+        return self._read_union(spark, "positions")
+
+    def term_stats_df(self, spark: SparkSession) -> DataFrame:
+        """(term, df) summed over the segments. Merged (long-lived) segments
+        have a persisted term_stats table; micro-ingest segments don't
+        (write_segment skips it — one less action per batch), so their df
+        comes from the postings block metadata directly: a column-pruned
+        scan of (term, n) — the heavy posting buffers are never read, and a
+        caller's `term IN (...)` filter pushes down to row-group skipping."""
+        have = [
+            s for s in self.segments
+            if os.path.isdir(os.path.join(self.store.segment_path(s), "term_stats"))
+        ]
+        lack = [s for s in self.segments if s not in set(have)]
+        parts = []
+        if have:
+            parts.append(
+                self.restrict(have)._read_union(spark, "term_stats").select("term", "df")
+            )
+        if lack:
+            parts.append(
+                self.restrict(lack).postings(spark).select(
+                    "term", F.col("n").cast("long").alias("df")
+                )
+            )
+        if not parts:
+            raise ValueError(f"index {self.store.name} has no live segments")
+        df = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+        return df.groupBy("term").agg(F.sum("df").cast("long").alias("df"))
+
+    def postings_files(self) -> PostingsFiles:
+        """The postings Parquet files of the segments, for reads on the
+        driver with no Spark job. Files are listed through the routing= hive
+        directories, without Spark's _SUCCESS and .crc side files."""
+        if not self.segments:
+            raise ValueError(f"index {self.store.name} has no live segments")
+        paths = []
+        for s in self.segments:
+            for d, subdirs, names in os.walk(
+                    os.path.join(self.store.segment_path(s), "postings")):
+                subdirs.sort()
+                paths += [os.path.join(d, n) for n in sorted(names)
+                          if n.endswith(".parquet") and not n.startswith((".", "_"))]
+        return PostingsFiles(paths)

@@ -52,9 +52,9 @@ def snapshot(store: IndexStore, repo: str, name: str) -> dict:
     if os.path.exists(mpath):
         raise ValueError(f"snapshot {name!r} already exists in repository")
 
-    live = store.live_segments()
+    view = store.view()
     copied, shared = [], []
-    for seg in live:
+    for seg in view.segments:
         dst = os.path.join(seg_pool, seg)
         if os.path.exists(dst):
             shared.append(seg)  # incremental: immutable segment already in pool
@@ -74,7 +74,7 @@ def snapshot(store: IndexStore, repo: str, name: str) -> dict:
     # Lucene live-docs-bitset analog): copy their parquet dirs so a restore
     # does not resurrect deleted docs
     deletes = []
-    for e in store.active_delete_entries():
+    for e in view.active_deletes:
         rel = e.metrics["deletes_dir"]
         dst = os.path.join(seg_pool, f"{name}__{os.path.basename(rel)}")
         if not os.path.exists(dst):
@@ -88,16 +88,16 @@ def snapshot(store: IndexStore, repo: str, name: str) -> dict:
     manifest = {
         "name": name,
         "index": store.name,
-        "segments": live,
+        "segments": list(view.segments),
         "segments_copied": copied,
         "segments_shared": shared,
         "deletes": deletes,
         "meta": meta,
         "aliases": aliases,
         "committed_offsets": {
-            str(p): int(o) for p, o in store.committed_offsets().items()
+            str(p): int(o) for p, o in view.committed_offsets.items()
         },
-        "doc_id_hwm": store.next_doc_id_base(),
+        "doc_id_hwm": view.doc_id_hwm,
     }
     _atomic_write_json(mpath, manifest)
     return manifest
@@ -154,7 +154,7 @@ def restore(
         metrics={"restored_from": name},
     ))
     # replay tombstones AFTER the restore entry so they stay active
-    # (active_delete_entries requires entry_id > the segments' creator)
+    # (StoreView.active_deletes requires entry_id > the segments' creator)
     for i, d in enumerate(manifest.get("deletes", [])):
         rel = os.path.join("deletes", f"del-{i + 1:08d}")
         shutil.copytree(

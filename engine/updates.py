@@ -10,9 +10,9 @@ Both are re-expressed on the engine's log-structured ledger:
   (parquet of doc_id) and committed as a `kind="delete"` ledger entry —
   files first, ledger last, the same commit-after-success contract as
   ingest (S3). Read paths exclude tombstoned ids via the shared
-  live_docs_for_store relation (engine/merge.py); the next merge expunges
-  their postings and the entry turns inert (segments.py
-  active_delete_entries) — exactly Lucene's soft-delete -> merge-reclaim
+  StoreView.live_docs relation (engine/segments.py); the next merge
+  expunges their postings and the entry turns inert
+  (StoreView.active_deletes) — exactly Lucene's soft-delete -> merge-reclaim
   lifecycle. df/avgdl/n_docs stay at their stored values until that merge,
   matching how ES scores around deleted-but-unmerged docs.
 
@@ -38,13 +38,12 @@ from pyspark.sql import functions as F
 
 from engine.analysis import tokens
 from engine.config import IndexConfig
-from engine.merge import live_docs_for_store
-from engine.segments import IndexStore, LedgerEntry
+from engine.segments import IndexStore, LedgerEntry, StoreView
 
 
 def match_doc_ids(
     spark: SparkSession,
-    store: IndexStore,
+    store: IndexStore | StoreView,
     query_terms: list[str],
     conjunctive: bool = False,
 ) -> DataFrame:
@@ -53,25 +52,27 @@ def match_doc_ids(
     Postings-driven: only the query terms' blocks are scanned/decoded."""
     from engine.postings import decode_postings
 
+    view = store.view()
     q_terms = sorted(set(query_terms))
-    cand = store.postings(spark).where(F.col("term").isin(q_terms))
-    rows = decode_postings(cand, codec=store.codec)
+    cand = view.postings(spark).where(F.col("term").isin(q_terms))
+    rows = decode_postings(cand, codec=view.codec)
     matched = rows.groupBy("doc_id").agg(
         F.count_distinct("term").alias("_nt")
     )
     if conjunctive:
         matched = matched.where(F.col("_nt") >= F.lit(len(q_terms)))
     matched = matched.select("doc_id")
-    live = live_docs_for_store(spark, store)
+    live = view.live_docs(spark)
     if live is not None:
         matched = matched.join(live.select("doc_id"), "doc_id", "left_semi")
     return matched
 
 
-def _commit_tombstones(spark, store, matched, metrics: dict) -> int:
-    """Shared tombstone write + ledger commit: files first, ledger last
-    (the ingest commit-after-success contract); no-op without matches."""
-    entry_id = store.next_entry_id()
+def commit_tombstones(spark, view: StoreView, matched, metrics: dict) -> int:
+    """Shared tombstone write + ledger commit at the view's next entry id:
+    files first, ledger last (the ingest commit-after-success contract);
+    no-op without matches. Returns the number of tombstoned ids."""
+    store, entry_id = view.store, view.next_entry_id
     rel = os.path.join("deletes", f"del-{entry_id:08d}")
     out = os.path.join(store.path, rel)
     matched.write.mode("overwrite").parquet(out)
@@ -101,9 +102,10 @@ def delete_by_query(
     nothing matches. Crash-safe: tombstone parquet lands before the ledger
     entry; a crash in between leaves an orphan file that the next attempt
     overwrites (same contract as segment files)."""
-    matched = match_doc_ids(spark, store, query_terms, conjunctive)
-    return _commit_tombstones(
-        spark, store, matched,
+    view = store.view()
+    matched = match_doc_ids(spark, view, query_terms, conjunctive)
+    return commit_tombstones(
+        spark, view, matched,
         {"query_terms": sorted(set(query_terms)),
          "conjunctive": bool(conjunctive)},
     )
@@ -135,15 +137,16 @@ def update_by_query(
     Returns the ingest BatchResult (or None when nothing matched)."""
     from engine.ingest import process_window
 
+    view = store.view()
     if cfg is None:
-        cfg = store.persisted_config()
-    docs = store.docs(spark)
+        cfg = view.store.persisted_config()
+    docs = view.docs(spark)
     if "source" not in docs.columns:
         raise ValueError(
             "index was built without store_source=True (_source disabled) — "
             "update_by_query needs the stored source text"
         )
-    matched = match_doc_ids(spark, store, query_terms, conjunctive)
+    matched = match_doc_ids(spark, view, query_terms, conjunctive)
     upd = docs.join(matched, "doc_id", "left_semi")
     new_text = transform(F.col("source"))
     window = upd.select(
@@ -162,7 +165,7 @@ def update_by_query(
         if window.limit(1).count() == 0:
             return None
         return process_window(
-            spark, store, window, batch_id, cfg=cfg, pre_extracted=True
+            spark, view, window, batch_id, cfg=cfg, pre_extracted=True
         )
     finally:
         window.unpersist()
@@ -183,10 +186,11 @@ def delete_by_ids(
     picks each url's live doc id. Bounded by the request size."""
     if not urls:
         return 0
-    docs = store.docs(spark).where(F.col("url").isin(list(set(urls))))
-    live = live_docs_for_store(spark, store, docs)
+    view = store.view()
+    docs = view.docs(spark).where(F.col("url").isin(list(set(urls))))
+    live = view.live_docs(spark, docs)
     matched = (live if live is not None else docs).select("doc_id")
-    return _commit_tombstones(
-        spark, store, matched,
+    return commit_tombstones(
+        spark, view, matched,
         {"by": "ids", "n_requested": len(set(urls))},
     )

@@ -395,48 +395,38 @@ def search_store_wand(
     rank-identical (tested), so the switch is invisible in results;
     stats_out["strategy"] records which plan actually ran.
     """
-    from engine.merge import live_docs_for_store
+    from engine.query import search_store
 
     if strategy not in ("wand", "auto"):
         raise ValueError(f"strategy must be 'wand' or 'auto', got {strategy!r}")
+    view = store.view()
     q_terms = sorted(set(query_terms))
     df_map = {
         r["term"]: r["df"]
-        for r in store.term_stats_df(spark).where(F.col("term").isin(q_terms)).collect()
+        for r in view.term_stats_df(spark).where(F.col("term").isin(q_terms)).collect()
     }
     df_map = {t: df_map.get(t, 0) for t in q_terms}
     if strategy == "auto":
         if stats_out is not None:
             stats_out["candidate_postings"] = int(sum(df_map.values()))
         if not wand_is_cheaper(df_map, cfg):
-            from engine.query import search_store
-
             if stats_out is not None:
                 stats_out["strategy"] = "exact_auto"
-            return search_store(spark, store, q_terms, k=k, cfg=cfg)
+            return search_store(spark, view, q_terms, k=k, cfg=cfg)
         if stats_out is not None:
             stats_out["strategy"] = "wand_auto"
-    stats = store.global_stats()
-    excluded = None
-    live = live_docs_for_store(spark, store)
-    if live is not None:
-        docs = store.docs(spark)
-        deleted = docs.join(live.select("doc_id"), "doc_id", "left_anti")
-        cap = cfg.max_deleted_driver
-        rows = deleted.select("doc_id").limit(cap + 1).collect()
-        if len(rows) > cap:
-            # superseded set too big to ship to every task — fall back to the
-            # fully distributed exact path (same results) until a merge runs
-            from engine.query import search_store
-
-            if stats_out is not None:
-                stats_out["fallback_exact"] = True
-                stats_out["strategy"] = "exact_fallback"
-            return search_store(spark, store, q_terms, k=k, cfg=cfg)
-        excluded = frozenset(r["doc_id"] for r in rows)
+    excluded = view.deleted_doc_ids(spark, cfg.max_deleted_driver)
+    if excluded is None:
+        # superseded set too big to ship to every task — fall back to the
+        # fully distributed exact path (same results) until a merge runs
+        if stats_out is not None:
+            stats_out["fallback_exact"] = True
+            stats_out["strategy"] = "exact_fallback"
+        return search_store(spark, view, q_terms, k=k, cfg=cfg)
+    stats = view.stats()
     return wand_topk(
         spark,
-        store.postings(spark),
+        view.postings(spark),
         stats["n_docs"],
         stats["avgdl"],
         df_map,
@@ -444,8 +434,8 @@ def search_store_wand(
         k=k,
         cfg=cfg,
         num_ranges=num_ranges,
-        doc_id_hwm=store.next_doc_id_base(),
+        doc_id_hwm=view.doc_id_hwm,
         excluded_doc_ids=excluded,
-        codec=store.codec,
+        codec=view.codec,
         stats_out=stats_out,
     )

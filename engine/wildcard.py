@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from engine.analysis import tokens
 from engine.config import TOKEN_PATTERN
+from engine.prefix import constant_score_store
 
 
 def wildcard_to_like(pattern: str) -> str:
@@ -85,6 +86,12 @@ def wildcard_match(
     )
 
 
+def _with_leading_literal(pred, lead: str):
+    """`pred` AND StringStartsWith(term, lead) when there is a literal
+    prefix: LIKE / RLIKE cannot reach the parquet scan, the prefix can."""
+    return F.col("term").startswith(lead) & pred if lead else pred
+
+
 def search_store_wildcard(
     spark: SparkSession,
     store,
@@ -94,27 +101,12 @@ def search_store_wildcard(
     """Constant-score wildcard query over a persisted store: the pattern's
     leading literal pushes StringStartsWith into the posting-block scan
     (row-group skipping on term-sorted files); the full LIKE filter then
-    selects matching terms' blocks, decoded doc-ids-only. Superseded docs
-    are excluded via the live-docs join (search_store semantics)."""
-    from engine.merge import live_docs_for_store
-    from engine.postings import decode_postings_doc_ids
-
+    selects matching terms' blocks (constant_score_store)."""
     p = pattern.lower()
-    blocks = store.postings(spark)
-    lead = leading_literal(p)
-    if lead:
-        blocks = blocks.where(F.col("term").startswith(lead))
-    blocks = blocks.where(F.col("term").like(wildcard_to_like(p)))
-    matched = decode_postings_doc_ids(blocks, codec=store.codec)
-    live = live_docs_for_store(spark, store)
-    if live is not None:
-        matched = matched.join(live.select("doc_id"), "doc_id")
-    scored = matched.select("doc_id", F.lit(1.0).alias("score"))
-    if k is None:
-        # all matches, unordered — for callers that re-rank after a doc-id
-        # remap (same contract as search_store_prefix)
-        return scored
-    return scored.orderBy(F.col("doc_id").asc()).limit(k)
+    pred = F.col("term").like(wildcard_to_like(p))
+    return constant_score_store(
+        spark, store, _with_leading_literal(pred, leading_literal(p)), k
+    )
 
 
 def regexp_match(
@@ -180,24 +172,11 @@ def search_store_regexp(
     literal pushes StringStartsWith into the posting-block scan (row-group
     skipping on term-sorted files; same degradation warning as Lucene for
     patterns with no literal prefix), the anchored RLIKE then selects
-    matching terms' blocks, decoded doc-ids-only; superseded docs excluded
-    via the live-docs join (search_store_wildcard contract)."""
-    from engine.merge import live_docs_for_store
-    from engine.postings import decode_postings_doc_ids
-
-    blocks = store.postings(spark)
-    lead = regexp_leading_literal(pattern)
-    if lead:
-        blocks = blocks.where(F.col("term").startswith(lead))
-    blocks = blocks.where(F.col("term").rlike(f"^(?:{pattern})$"))
-    matched = decode_postings_doc_ids(blocks, codec=store.codec)
-    live = live_docs_for_store(spark, store)
-    if live is not None:
-        matched = matched.join(live.select("doc_id"), "doc_id")
-    scored = matched.select("doc_id", F.lit(1.0).alias("score"))
-    if k is None:
-        return scored
-    return scored.orderBy(F.col("doc_id").asc()).limit(k)
+    matching terms' blocks (constant_score_store)."""
+    pred = F.col("term").rlike(f"^(?:{pattern})$")
+    return constant_score_store(
+        spark, store, _with_leading_literal(pred, regexp_leading_literal(pattern)), k
+    )
 
 
 def regexp_oracle_sql(

@@ -153,11 +153,12 @@ def main() -> None:
         if merged:
             print(json.dumps({"merged_into": merged}))
 
+    view = store.view()
     print(json.dumps({
         "index": args.index,
-        "live_segments": store.live_segments(),
-        "global_stats": store.global_stats(),
-        "committed_offsets": store.committed_offsets(),
+        "live_segments": list(view.segments),
+        "global_stats": view.stats(),
+        "committed_offsets": view.committed_offsets,
     }))
 
 

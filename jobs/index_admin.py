@@ -211,7 +211,7 @@ def main(argv: list[str] | None = None) -> int:
             print(json.dumps({"error": str(exc)}))
             return 1
         print(json.dumps({"restored": st.name,
-                          "segments": st.live_segments()}))
+                          "segments": list(st.view().segments)}))
         return 0
 
     from engine.config import IndexConfig
@@ -278,14 +278,15 @@ def main(argv: list[str] | None = None) -> int:
         if not st.exists():
             print(json.dumps({"error": f"index {args.index} does not exist"}))
             return 1
-        before = st.live_segments()
-        if len(before) <= 1 and not st.has_deletes():
+        view = st.view()
+        before = list(view.segments)
+        if len(before) <= 1 and not view.active_deletes:
             print(json.dumps({"index": args.index, "merged": False,
                               "reason": "already one segment, no deletes",
                               "segments": before}))
             return 0
         spark = get_spark("forcemerge")
-        out = merge_segments(spark, st)
+        out = merge_segments(spark, view)
         print(json.dumps({"index": args.index, "merged": True,
                           "from": before, "into": out}))
         return 0
@@ -386,11 +387,12 @@ def main(argv: list[str] | None = None) -> int:
                           "routing": args.routing}))
         return 0
     if args.cmd == "stats":
+        view = store.view()
         print(json.dumps({
             "index": args.index,
-            "live_segments": store.live_segments(),
-            "global_stats": store.global_stats() if store.live_segments() else None,
-            "committed_offsets": store.committed_offsets(),
+            "live_segments": list(view.segments),
+            "global_stats": view.stats() if view.segments else None,
+            "committed_offsets": view.committed_offsets,
             "aliases": store._aliases(),
         }))
         return 0

@@ -242,7 +242,7 @@ def main() -> None:
         for _ in range(args.repeat):
             t0 = time.perf_counter()
             rows = completion_suggest(
-                store.term_stats_df(spark), cp, size=args.k
+                store.view().term_stats_df(spark), cp, size=args.k
             ).collect()
             lats.append((time.perf_counter() - t0) * 1000)
         print(json.dumps({

@@ -16,7 +16,6 @@ from engine.positions import (
     decode_position_rows,
     encode_position_rows,
     search_store_phrase,
-    store_has_positions,
 )
 from engine.segments import IndexStore
 
@@ -76,7 +75,7 @@ def test_store_phrase_matches_corpus_path(spark, tmp_path):
     src = as_partitioned_source(_pages(spark, TEXTS), num_partitions=2, id_col="row_id")
     # 8 docs / 2 partitions, 2 offsets per window -> 2 batches
     run_ingest_loop(spark, store, src, rows_per_partition=2, cfg=cfg)
-    assert len(store.live_segments()) == 2 and store_has_positions(store)
+    assert len(store.live_segments()) == 2 and store.view().has_positions
 
     ref = [(r["doc_id"], r["score"]) for r in
            bm25_phrase_topk(spark, _docs_frame(spark, TEXTS), PH, k=10).collect()]
@@ -85,7 +84,7 @@ def test_store_phrase_matches_corpus_path(spark, tmp_path):
     assert got_pre == ref  # store doc ids == row ids (padded-url rank order)
 
     merge_segments(spark, store, cfg=cfg)
-    assert store_has_positions(store)
+    assert store.view().has_positions
     got_post = [(r["doc_id"], r["score"]) for r in
                 search_store_phrase(spark, store, PH, k=10, cfg=cfg).collect()]
     assert got_post == ref

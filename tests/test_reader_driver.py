@@ -222,7 +222,7 @@ def test_zero_spark_jobs_per_search(spark, tmp_path):
 def test_df_for_terms_matches_term_stats_without_spark_caches(
         spark, store, monkeypatch):
     terms = ["engine", "spark", "crawl", "index", "zzqxnotaword"]
-    rows = store.term_stats_df(spark).where(F.col("term").isin(terms)).collect()
+    rows = store.view().term_stats_df(spark).where(F.col("term").isin(terms)).collect()
     want = {t: 0 for t in terms} | {r["term"]: r["df"] for r in rows}
     assert want["engine"] > 0 and want["zzqxnotaword"] == 0
     reader = IndexReader(spark, store)

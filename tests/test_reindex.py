@@ -79,9 +79,9 @@ def test_reindex_applies_destination_routing(spark, src_store, tmp_path):
     dst_cfg = IndexConfig(routing_col="lang", store_source=True)
     dst = IndexStore(str(tmp_path), "dst_routed", cfg=dst_cfg).create()
     reindex(spark, src_store, dst, cfg=dst_cfg)
-    langs = dst.routing_values()
+    langs = dst.view().routing_values()
     assert len(langs) > 1
-    one = dst.docs_routed(spark, langs[0])
+    one = dst.view().docs(spark, routing=langs[0])
     assert one.where(F.col("lang") != langs[0]).count() == 0
     # chained: the routed destination is itself source-enabled
     assert "source" in dst.docs(spark).columns

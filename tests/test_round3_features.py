@@ -42,7 +42,7 @@ def test_alias_routed_search_equals_filtered_routed_search(spark, routed_store):
     """Alias(routing=R, filter part_id=0) search == routed search of R with
     results restricted to part_id=0 docs (non-scoring filter: same scores,
     subset of docs)."""
-    routing = sorted(routed_store.routing_values())[0]
+    routing = sorted(routed_store.view().routing_values())[0]
     routed_store.add_alias(
         "r_part0", filter_col="part_id", filter_val=0, routing=routing
     )
@@ -55,7 +55,7 @@ def test_alias_routed_search_equals_filtered_routed_search(spark, routed_store):
     full = search_store(spark, routed_store, terms, k=10_000, routing=routing)
     part0 = {
         r["doc_id"]
-        for r in routed_store.docs_routed(spark, routing)
+        for r in routed_store.view().docs(spark, routing=routing)
         .where(F.col("part_id") == 0).select("doc_id").collect()
     }
     want = [
@@ -75,10 +75,10 @@ def test_alias_without_routing_still_searches(spark, routed_store):
 
 
 def test_docs_via_alias_applies_routing(spark, routed_store):
-    routing = sorted(routed_store.routing_values())[0]
+    routing = sorted(routed_store.view().routing_values())[0]
     routed_store.add_alias("r_docs", routing=routing)
     via = routed_store.docs_via_alias(spark, "r_docs")
-    assert via.count() == routed_store.docs_routed(spark, routing).count()
+    assert via.count() == routed_store.view().docs(spark, routing=routing).count()
     assert {r["routing"] for r in via.select("routing").distinct().collect()} == {routing}
 
 

@@ -52,7 +52,7 @@ def test_routed_store_with_special_chars_and_nulls(spark, tmp_path):
 
     # routed read returns exactly the en:US docs (path-level pruning must
     # decode the %3A directory suffix)
-    docs = store.docs_routed(spark, "en:US")
+    docs = store.view().docs(spark, routing="en:US")
     got_urls = {r["url"] for r in docs.select("url").collect()}
     want_urls = {
         r["url"]
@@ -65,7 +65,7 @@ def test_routed_store_with_special_chars_and_nulls(spark, tmp_path):
                         routing="en:US").collect()
     assert hits
     # stats keys are the TRUE values; no escaped or sentinel keys
-    vals = set(store.routing_values())
+    vals = set(store.view().routing_values())
     assert vals == {"en:US", "fr"}
     # null-routing docs survive (builder run-walk must not crash) and come
     # back with routing NULL in the unrouted read

@@ -59,7 +59,7 @@ def test_rollup_grand_total_with_null_routing(spark, tmp_path):
     assert st2["n_docs"] == n_live
     assert st2["sum_dl"] == sum_dl
     # per-routing stats exclude the NULL key but keep the real values
-    assert set(store.routing_values()) == {"en", "fr"}
+    assert set(store.view().routing_values()) == {"en", "fr"}
 
 
 def test_pfor_requires_n():

@@ -61,7 +61,7 @@ def test_routed_segments_are_hive_partitioned(spark, routed_store):
 def test_routed_search_equals_subset_search(spark, routed_store, tmp_path):
     """Routed search == building a separate index from ONLY that routing
     subset and searching it (shard-local stats semantics)."""
-    routing = sorted(routed_store.routing_values())[0]
+    routing = sorted(routed_store.view().routing_values())[0]
     terms = ["engine", "spark"]
     got = [
         (r["doc_id"], r["score"])
@@ -75,7 +75,7 @@ def test_routed_search_equals_subset_search(spark, routed_store, tmp_path):
     }
     got_urls = [(id2url[d], s) for d, s in got]
 
-    sub_docs = routed_store.docs_routed(spark, routing)
+    sub_docs = routed_store.view().docs(spark, routing=routing)
     n_sub = sub_docs.count()
     assert 0 < n_sub < routed_store.global_stats()["n_docs"]
     # score via exact BM25 over the raw subset text using bucket stats
@@ -98,8 +98,8 @@ def test_routed_search_plan_prunes_partitions(spark, routed_store):
     """Multi-segment routed reads prune at PATH-LISTING level: every file
     backing the scan lives under routing=<val> — files of other routing
     values are never even listed (stronger than a hive PartitionFilter)."""
-    routing = sorted(routed_store.routing_values())[0]
-    files = routed_store.postings_routed(spark, routing).inputFiles()
+    routing = sorted(routed_store.view().routing_values())[0]
+    files = routed_store.view().postings(spark, routing=routing).inputFiles()
     assert files, "routed read should have input files"
     assert all(f"routing={routing}/" in f for f in files), files[:5]
     # ... and the pruned read is a bounded union: one scan per ROUTING
@@ -111,7 +111,7 @@ def test_routed_search_plan_prunes_partitions(spark, routed_store):
     merged_store = routed_store  # merged below in test_routing_survives_merge
     if len(merged_store.live_segments()) == 1:
         plan = (
-            merged_store.postings_routed(spark, routing)
+            merged_store.view().postings(spark, routing=routing)
             ._jdf.queryExecution().executedPlan().toString()
         )
         assert "PartitionFilters" in plan
@@ -119,7 +119,7 @@ def test_routed_search_plan_prunes_partitions(spark, routed_store):
 
 def test_routing_survives_merge(spark, routed_store):
     assert len(routed_store.live_segments()) > 1
-    routing = sorted(routed_store.routing_values())[0]
+    routing = sorted(routed_store.view().routing_values())[0]
     terms = ["engine", "spark"]
     before = [
         (r["doc_id"], r["score"])

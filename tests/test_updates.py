@@ -58,7 +58,7 @@ def test_delete_by_query_noop_when_nothing_matches(spark, source, tmp_path):
     entries_before = len(store.ledger_entries())
     assert delete_by_query(spark, store, ["zzzznotaword"]) == 0
     assert len(store.ledger_entries()) == entries_before
-    assert not store.has_deletes()
+    assert not store.view().active_deletes
 
 
 def test_delete_respects_reader_and_count_and_mget(spark, source, tmp_path):
@@ -92,11 +92,11 @@ def test_merge_expunges_tombstones_and_inerts_entry(spark, source, tmp_path):
     victims = _ids(match_doc_ids(spark, store, ["spark"]))
     survivors_before = _ids(search_store(spark, store, TERMS, k=N))
     delete_by_query(spark, store, ["spark"])
-    assert store.has_deletes()
+    assert store.view().active_deletes
     merge_segments(spark, store, cfg=CFG)
     # the merged store no longer needs the tombstone anti-join
-    assert not store.has_deletes()
-    assert store.deleted_ids(spark) is None
+    assert not store.view().active_deletes
+    assert store.view().deleted_ids(spark) is None
     # postings were expunged: stats count only survivors
     assert store.global_stats()["n_docs"] == n_before - len(victims)
     # re-ingesting a deleted url later is NOT suppressed (ids are fresh):
@@ -163,7 +163,7 @@ def test_snapshot_restore_preserves_tombstones(spark, source, tmp_path):
     repo = str(tmp_path / "repo")
     snapshot(store, repo, "snap1")
     restored = restore(repo, "snap1", str(tmp_path / "restored"))
-    assert restored.has_deletes()
+    assert restored.view().active_deletes
     assert _ids(search_store(spark, restored, TERMS, k=N)) == survivors
 
 

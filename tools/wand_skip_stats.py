@@ -92,7 +92,7 @@ def measure(spark, store, label: str, queries) -> dict:
               f"skip={per_query[-1]['skip_ratio']}", file=sys.stderr, flush=True)
     tot_reps = sum(q.get("block_range_replicas", 0) for q in per_query)
     tot_scored = sum(q.get("blocks_scored", 0) for q in per_query)
-    stats = store.global_stats()
+    stats = store.view().stats()
     return {
         "kind": "wand_skip",
         "label": label,
