@@ -28,9 +28,8 @@ from __future__ import annotations
 import threading
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from engine.analysis import tokens
@@ -439,7 +438,36 @@ def search_via_alias(
     )
 
 
-def topk_rounded(doc_ids: np.ndarray, raw: np.ndarray, k: int) -> pd.DataFrame:
+_HIT = Row("doc_id", "score")
+
+
+class Hits:
+    """An IndexReader search's top-k, on the driver: an immutable tuple of
+    Row(doc_id, score) with Python int / float fields, in rank order
+    (score desc, doc_id asc). It answers the calls a search's callers make
+    of a result (`collect()`, `columns`, `count()`); the search_store*
+    functions return Spark plans instead."""
+
+    __slots__ = ("_rows",)
+
+    def __init__(self, rows=()):
+        self._rows = tuple(_HIT(d, s) for d, s in rows)
+
+    @property
+    def columns(self) -> list[str]:
+        return ["doc_id", "score"]
+
+    def collect(self) -> list[Row]:
+        return list(self._rows)
+
+    def count(self) -> int:
+        return len(self._rows)
+
+    def __repr__(self) -> str:
+        return f"Hits({list(self._rows)!r})"
+
+
+def topk_rounded(doc_ids: np.ndarray, raw: np.ndarray, k: int) -> Hits:
     """(doc_id, score) top-k by (rounded score desc, doc_id asc), the order
     the Spark plans produce. `doc_ids` must be ascending (np.unique order),
     so of the docs tied at the k-th rounded score the first ones win."""
@@ -453,13 +481,22 @@ def topk_rounded(doc_ids: np.ndarray, raw: np.ndarray, k: int) -> pd.DataFrame:
         sel = np.concatenate([above, ties])
         doc_ids, scores = doc_ids[sel], scores[sel]
     order = np.lexsort((doc_ids, -scores))
-    return pd.DataFrame(
-        {"doc_id": doc_ids[order].astype(np.int64), "score": scores[order]}
-    )
+    return Hits(zip(doc_ids[order].tolist(), scores[order].tolist()))
+
+
+def _term_codes(block_terms: np.ndarray, terms: list[str]) -> np.ndarray:
+    """Each block's index into sorted(set(terms)), or -1 where the block's
+    term is not one of them."""
+    ts = np.array(sorted(set(terms)), dtype=object)
+    if not len(ts):
+        return np.full(len(block_terms), -1, dtype=np.int64)
+    code = np.searchsorted(ts, block_terms)
+    code[code == len(ts)] = 0
+    return np.where(ts[code] == block_terms, code, -1)
 
 
 def exact_topk_blocks(
-    blocks: pd.DataFrame,
+    blocks: pa.Table,
     n_docs: int,
     avgdl: float,
     query_terms: list[str],
@@ -469,22 +506,27 @@ def exact_topk_blocks(
     codec: str = "varint",
     min_should_match: int | None = None,
     must_not_terms: list[str] | None = None,
-) -> pd.DataFrame:
+) -> Hits:
     """bm25_topk_from_index over block rows already on the driver, in
     numpy: decode, score, drop `excluded` (sorted superseded ids), sum per
     doc, apply min_should_match and must_not, rank. Same df, formula,
     rounding and tie-break as the Spark plan, so results are identical.
     `blocks` must hold every block of the query and must_not terms."""
-    pos = blocks[blocks["term"].isin(set(query_terms))]
-    ns = pos["n"].to_numpy(np.int64)
+    block_terms = blocks.column("term").to_numpy(zero_copy_only=False)
+    ns = blocks.column("n").to_numpy().astype(np.int64)
+    code = _term_codes(block_terms, query_terms)
+    pos = code >= 0
+    code, pos_ns = code[pos], ns[pos]
+    pos_blocks = blocks.filter(pa.array(pos))
     docs, tfs, dls = decode_posting_blocks_batch(
-        pos["doc_bytes"], pos["tf_bytes"], pos["dl_bytes"], ns, codec=codec
+        *(pos_blocks.column(c).to_pylist() for c in ("doc_bytes", "tf_bytes", "dl_bytes")),
+        pos_ns, codec=codec,
     )
     # df = summed block n: the same pre-live-filter count as term_stats
     # over the candidate blocks
-    df = pos.groupby("term")["n"].sum()
-    idf = {t: _idf(float(n_docs), float(d)) for t, d in df.items()}
-    contrib = np.repeat(pos["term"].map(idf).to_numpy(np.float64), ns) * bm25_tf_norm(
+    df = np.bincount(code, weights=pos_ns)
+    idf = np.array([_idf(float(n_docs), float(d)) for d in df], dtype=np.float64)
+    contrib = np.repeat(idf[code], pos_ns) * bm25_tf_norm(
         tfs, dls.astype(np.float64), cfg.k1, cfg.b, float(avgdl)
     )
     keep = keep_not_in(docs, excluded)
@@ -495,9 +537,10 @@ def exact_topk_blocks(
         hit = np.bincount(inv, minlength=len(uids)) >= int(min_should_match)
         uids, raw = uids[hit], raw[hit]
     if must_not_terms:
-        neg = blocks[blocks["term"].isin(set(must_not_terms))]
+        neg = _term_codes(block_terms, must_not_terms) >= 0
         neg_ids = decode_doc_ids_batch(
-            neg["doc_bytes"], neg["n"].to_numpy(np.int64), codec=codec
+            blocks.filter(pa.array(neg)).column("doc_bytes").to_pylist(),
+            ns[neg], codec=codec,
         )
         hit = keep_not_in(uids, np.unique(neg_ids))
         uids, raw = uids[hit], raw[hit]
@@ -512,23 +555,26 @@ class IndexReader:
     `refresh()`, which takes a new view.
 
     This is the searcher/reader split Lucene makes (ES holds an
-    IndexSearcher open across requests). A `search` / `search_wand` call
-    runs no Spark job: it reads its candidate blocks (query and must_not
-    terms) on the driver from the pinned segments' postings Parquet files,
-    whose footers were read at open, so row groups whose term min/max
-    excludes every query term are skipped; the read stops past
-    GATHER_MAX_BLOCKS rows. exact_topk_blocks then decodes, scores and
-    ranks them in numpy, and the rows come back as an Arrow-built local
-    DataFrame. df comes from the read blocks, and superseded docs drop out
-    by a binary search over the sorted deleted set. `df_for_terms` sums
-    block `n` from the same kind of read.
+    IndexSearcher open across requests). Every search returns its top-k
+    as `Hits`, rows on the driver, never a Spark DataFrame. A `search` /
+    `search_wand` call makes no Spark or JVM call: it reads its candidate
+    blocks (query and must_not terms) on the driver from the pinned
+    segments' postings Parquet files, whose footers were read at open, so
+    row groups whose term min/max excludes every query term are skipped;
+    the read stops past GATHER_MAX_BLOCKS rows. exact_topk_blocks then
+    decodes, scores and ranks the Arrow table in numpy. df comes from the
+    read blocks, and superseded docs drop out by a binary search over the
+    sorted deleted set. `df_for_terms` sums block `n` from the same kind
+    of read.
 
     Two cases keep the distributed plans (bm25_topk_from_index /
-    wand_topk, as search_store* run them): a query with more than
-    GATHER_MAX_BLOCKS blocks, and a deleted set that overflowed
-    cfg.max_deleted_driver (a live-docs join). The Spark relations they
-    need (postings, live docs) are cached on first use, as are the term
-    stats behind `search_fuzzy` / `suggest` and the phrase sidecar.
+    wand_topk, as search_store* run them), collected into `Hits` inside
+    the call: a query with more than GATHER_MAX_BLOCKS blocks, and a
+    deleted set that overflowed cfg.max_deleted_driver (a live-docs join).
+    `search_phrase` collects its phrase plan the same way. The Spark
+    relations they need (postings, live docs) are cached on first use, as
+    are the term stats behind `search_fuzzy` / `suggest` and the phrase
+    sidecar.
 
     Concurrent callers (bench/soak.py threads) are safe: a call keeps its
     blocks in locals, the lazy caches are built under a lock, and the only
@@ -609,21 +655,14 @@ class IndexReader:
                     c.unpersist()
                     setattr(self, attr, None)
 
-    def _gather(self, terms: set[str]) -> pd.DataFrame | None:
+    def _gather(self, terms: set[str]) -> pa.Table | None:
         """The blocks of `terms`, read on the driver, or None when the
         deleted set overflowed or there are more than GATHER_MAX_BLOCKS
         blocks (the caller then runs the distributed plan)."""
         if self._deleted_overflow:
             return None
         tbl = self._postings_files.read(terms, _GATHER_COLS, GATHER_MAX_BLOCKS + 1)
-        if tbl.num_rows > GATHER_MAX_BLOCKS:
-            return None
-        return tbl.to_pandas()
-
-    def _local(self, pdf: pd.DataFrame) -> DataFrame:
-        # built from an Arrow table: a local relation, so collect() runs no
-        # job (an EMPTY pandas frame would become an RDD scan, one job)
-        return self.spark.createDataFrame(pa.Table.from_pandas(pdf, preserve_index=False))
+        return None if tbl.num_rows > GATHER_MAX_BLOCKS else tbl
 
     def search(
         self,
@@ -632,11 +671,11 @@ class IndexReader:
         conjunctive: bool = False,
         min_should_match: int | None = None,
         must_not_terms: list[str] | None = None,
-    ) -> DataFrame:
-        """Exact BM25 top-k: one driver read of the query's (and must_not)
-        blocks, scored on the driver (exact_topk_blocks).
-        `min_should_match` / `must_not_terms`: ES bool semantics (see
-        bm25_topk)."""
+    ) -> Hits:
+        """Exact BM25 top-k as driver rows: one driver read of the query's
+        (and must_not) blocks, scored on the driver (exact_topk_blocks),
+        with no Spark or JVM call. `min_should_match` / `must_not_terms`:
+        ES bool semantics (see bm25_topk)."""
         q_terms = sorted(set(query_terms))
         neg = sorted(set(must_not_terms or ()))
         blocks = self._gather(set(q_terms) | set(neg))
@@ -644,14 +683,14 @@ class IndexReader:
             return self._search_distributed(
                 q_terms, k, conjunctive, min_should_match, neg
             )
-        return self._local(self._exact_blocks(
+        return self._exact_blocks(
             blocks, q_terms, k, conjunctive, min_should_match, neg
-        ))
+        )
 
     def _exact_blocks(
         self, blocks, q_terms, k, conjunctive=False, min_should_match=None,
         must_not_terms=None,
-    ) -> pd.DataFrame:
+    ) -> Hits:
         return exact_topk_blocks(
             blocks, self.stats["n_docs"], self.stats["avgdl"], q_terms, k=k,
             cfg=self.cfg, excluded=self._deleted_sorted, codec=self._view.codec,
@@ -662,11 +701,11 @@ class IndexReader:
     def _search_distributed(
         self, q_terms, k, conjunctive=False, min_should_match=None,
         must_not_terms=None,
-    ) -> DataFrame:
-        """bm25_topk_from_index on the postings cache. Superseded docs are
-        excluded via the bounded driver-side set (a NOT IN literal) or, when
-        it overflowed, by a live-docs join built once and cached."""
-        return bm25_topk_from_index(
+    ) -> Hits:
+        """bm25_topk_from_index on the postings cache, collected. Superseded
+        docs are excluded via the bounded driver-side set (a NOT IN literal)
+        or, when it overflowed, by a live-docs join built once and cached."""
+        return Hits(bm25_topk_from_index(
             self._postings_df(),
             self.stats["n_docs"],
             self.stats["avgdl"],
@@ -679,7 +718,7 @@ class IndexReader:
             codec=self._view.codec,
             min_should_match=min_should_match,
             must_not_terms=must_not_terms or None,
-        )
+        ).collect())
 
     def _live_docs_df(self):
         if not self._deleted_overflow:
@@ -693,13 +732,14 @@ class IndexReader:
         k: int = 10,
         stats_out: dict | None = None,
         strategy: str = "wand",
-    ) -> DataFrame:
-        """BM25 top-k, rank-identical to `search`. Below GATHER_MAX_BLOCKS
-        it scores like `search`: one driver read, exact numpy scoring on
-        the driver. With every candidate block already on the driver, the
-        vectorized exact scorer beat the block-max scan at every block
-        count measured (see GATHER_MAX_BLOCKS), so the scan (wand_topk) and
-        the `strategy="auto"` cost model (engine.wand.wand_is_cheaper) run
+    ) -> Hits:
+        """BM25 top-k as driver rows, rank-identical to `search`. Below
+        GATHER_MAX_BLOCKS it scores like `search`: one driver read, exact
+        numpy scoring on the driver, no Spark or JVM call. With every
+        candidate block already on the driver, the vectorized exact scorer
+        beat the block-max scan at every block count measured (see
+        GATHER_MAX_BLOCKS), so the scan (wand_topk) and the
+        `strategy="auto"` cost model (engine.wand.wand_is_cheaper) run
         only in the distributed fallbacks (see the class docstring).
 
         `stats_out` (evidence/debug) is filled from the same execution. On
@@ -718,18 +758,19 @@ class IndexReader:
         blocks = self._gather(set(q_terms))
         if blocks is None:
             return self._wand_distributed(q_terms, k, stats_out, strategy)
-        n = len(blocks)
+        n = blocks.num_rows
         # on the driver the cost-based choice is always the exact scorer
         st.update(
             strategy="exact_auto" if strategy == "auto" else "exact_driver",
             candidate_blocks=n, candidate_block_ranges=n, blocks_scored=n,
-            num_ranges=1, candidate_postings=int(blocks["n"].sum()),
+            num_ranges=1,
+            candidate_postings=int(blocks.column("n").to_numpy().sum()),
         )
-        return self._local(self._exact_blocks(blocks, q_terms, k))
+        return self._exact_blocks(blocks, q_terms, k)
 
-    def _wand_distributed(self, q_terms, k, stats_out, strategy) -> DataFrame:
-        """wand_topk over the postings cache, with dfs from df_for_terms
-        (the auto choice too)."""
+    def _wand_distributed(self, q_terms, k, stats_out, strategy) -> Hits:
+        """wand_topk over the postings cache, collected, with dfs from
+        df_for_terms (the auto choice too)."""
         from engine.wand import wand_is_cheaper, wand_topk
 
         st = stats_out if stats_out is not None else {}
@@ -740,7 +781,7 @@ class IndexReader:
                 st["strategy"] = "exact_auto"
                 return self._search_distributed(q_terms, k)
             st["strategy"] = "wand_auto"
-        return wand_topk(
+        return Hits(wand_topk(
             self.spark,
             self._postings_df(),
             self.stats["n_docs"],
@@ -753,7 +794,7 @@ class IndexReader:
             excluded_doc_ids=self.deleted or None,
             codec=self._view.codec,
             stats_out=stats_out,
-        )
+        ).collect())
 
     def search_fuzzy(
         self,
@@ -762,7 +803,7 @@ class IndexReader:
         max_edits: int = 1,
         prefix_length: int = 0,
         max_expansions: int | None = None,
-    ) -> DataFrame:
+    ) -> Hits:
         """Fuzzy BM25 top-k from the held-open reader: the Levenshtein
         expansion scans the term-stats relation (the term dictionary,
         cached on first use), then the expanded disjunction runs through
@@ -776,9 +817,7 @@ class IndexReader:
             prefix_length=prefix_length,
             max_expansions=MAX_EXPANSIONS if max_expansions is None else max_expansions,
         )
-        if not terms:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        return self.search(terms, k=k)
+        return self.search(terms, k=k) if terms else Hits()
 
     def suggest(
         self,
@@ -799,7 +838,7 @@ class IndexReader:
             min_doc_freq=min_doc_freq, suggest_mode=suggest_mode,
         )
 
-    def search_phrase(self, phrase: list[str], k: int = 10) -> DataFrame:
+    def search_phrase(self, phrase: list[str], k: int = 10) -> Hits:
         """ES match_phrase from the held-open reader (query-server mode).
 
         First phrase query lazily caches the positions sidecar union and a
@@ -822,7 +861,7 @@ class IndexReader:
                 docs = self._view.live_docs(self.spark, docs)
             return docs.select("doc_id", "doc_len")
 
-        return phrase_topk_from_positions(
+        return Hits(phrase_topk_from_positions(
             self.spark,
             self._cached("_positions_cache",
                          lambda: self._view.positions(self.spark)),
@@ -835,7 +874,7 @@ class IndexReader:
             excluded_doc_ids=frozenset()
             if self._deleted_overflow
             else self.deleted,
-        )
+        ).collect())
 
 
 # ---------------------------------------------------------------------------

@@ -2,11 +2,13 @@
 from the pinned segments' postings files, numpy scoring on the driver):
 rank identity with the distributed search_store / search_store_wand plans,
 the zero-job pin, df_for_terms, the pinned ledger state, the fallbacks, and
-stats_out from the same execution."""
+stats_out from the same execution, and the driver-side `Hits` every
+reader search returns."""
 
 from __future__ import annotations
 
 import itertools
+import json
 import math
 import os
 
@@ -16,9 +18,11 @@ from pyspark.sql import functions as F
 import engine.query as query_mod
 from engine.config import SCORE_DECIMALS, IndexConfig
 from engine.corpus import webpages
+from engine.fuzzy import search_store_fuzzy
 from engine.ingest import EARLIEST, as_partitioned_source, run_ingest_loop
 from engine.merge import merge_segments
-from engine.query import IndexReader, search_store, spark_round
+from engine.positions import search_store_phrase
+from engine.query import Hits, IndexReader, search_store, spark_round
 from engine.segments import IndexStore
 from engine.wand import search_store_wand
 
@@ -42,17 +46,33 @@ WAND_CASES = [
     (["zzqxnotaword"], 10),
     (["index", "rank", "page"], 1),
 ]
+# phrase and fuzzy searches, one of each matching nothing
+PHRASE_CASES = [(["index", "spark"], 10), (["merge", "index"], 500),
+                (["zzqxnotaword", "index"], 10)]
+FUZZY_CASES = [("sprk", 10), ("qqqqqq", 10)]
 
 
 def _rows(df):
     return [(r["doc_id"], r["score"]) for r in df.collect()]
 
 
+def _hit_rows(hits):
+    """A reader result's rows, checked to be driver rows of Python int /
+    float fields that json.dumps takes (as jobs/run_queries.py prints
+    them), so a leaked numpy scalar fails."""
+    assert isinstance(hits, Hits) and hits.columns == ["doc_id", "score"]
+    rows = hits.collect()
+    assert hits.count() == len(rows)
+    assert all(type(r.doc_id) is int and type(r.score) is float for r in rows), rows
+    assert json.loads(json.dumps(rows)) == [[d, s] for d, s in rows]
+    return rows
+
+
 def _build(spark, root, codec, merged, routing_col=None):
     """A multi-segment store whose first copies are superseded (the source
     is ingested twice), or that store merged into one segment. With
     `routing_col`, segments are hive-partitioned into routing= dirs."""
-    cfg = IndexConfig(codec=codec, routing_col=routing_col)
+    cfg = IndexConfig(codec=codec, routing_col=routing_col, store_positions=True)
     store = IndexStore(root, "rd", cfg=cfg).create()
     src = as_partitioned_source(webpages(spark, 120, partitions=2), 2)
     for _ in range(2):
@@ -87,8 +107,16 @@ def test_reader_exact_matches_search_store(spark, store):
         if len(store.live_segments()) > 1:
             assert reader.deleted and not reader._deleted_overflow
         for terms, kw in EXACT_CASES:
-            want = _rows(search_store(spark, store, terms, **kw))
-            assert _rows(reader.search(terms, **kw)) == want, (terms, kw)
+            want = search_store(spark, store, terms, **kw).collect()
+            assert _hit_rows(reader.search(terms, **kw)) == want, (terms, kw)
+        for phrase, k in PHRASE_CASES:
+            want = search_store_phrase(spark, store, phrase, k=k).collect()
+            assert _hit_rows(reader.search_phrase(phrase, k=k)) == want, phrase
+            assert bool(want) == ("zzqxnotaword" not in phrase)
+        for term, k in FUZZY_CASES:
+            want = search_store_fuzzy(spark, store, term, k=k).collect()
+            assert _hit_rows(reader.search_fuzzy(term, k=k)) == want, term
+            assert bool(want) == (term != "qqqqqq")
     finally:
         reader.close()
 
@@ -97,10 +125,10 @@ def test_reader_wand_matches_search_store_wand(spark, store):
     reader = IndexReader(spark, store)
     try:
         for terms, k in WAND_CASES:
-            want = _rows(search_store_wand(spark, store, terms, k=k))
-            assert want == _rows(search_store(spark, store, terms, k=k))
-            assert _rows(reader.search_wand(terms, k=k)) == want, (terms, k)
-            got = _rows(reader.search_wand(terms, k=k, strategy="auto"))
+            want = search_store_wand(spark, store, terms, k=k).collect()
+            assert want == search_store(spark, store, terms, k=k).collect()
+            assert _hit_rows(reader.search_wand(terms, k=k)) == want, (terms, k)
+            got = _hit_rows(reader.search_wand(terms, k=k, strategy="auto"))
             assert got == want, (terms, k)
     finally:
         reader.close()
@@ -187,28 +215,49 @@ def _jobs(spark, fn):
 _GROUPS = itertools.count()
 
 
-def test_zero_spark_jobs_per_search(spark, tmp_path):
+def _py4j_commands(spark, monkeypatch, fn) -> list[str]:
+    """The py4j commands the session's gateway client sent while `fn` ran:
+    every Python -> JVM call (a DataFrame built, a plan run, a conf read)
+    goes through it."""
+    client = spark.sparkContext._gateway._gateway_client
+    sent: list[str] = []
+    real = client.send_command
+
+    def counting(command, *args, **kwargs):
+        sent.append(command)
+        return real(command, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(client, "send_command", counting)
+        fn()
+    return sent
+
+
+def test_zero_spark_jobs_per_search(spark, tmp_path, monkeypatch):
     store = _build(spark, str(tmp_path), "varint", merged=True)
     reader = IndexReader(spark, store)
     try:
         reader.search(["warmup"], k=1).collect()
         reader.search_wand(["warmup"], k=1).collect()
         terms = ["engine", "spark"]
-        assert _jobs(spark, lambda: reader.search(terms, k=10).collect()) == []
-        assert _jobs(spark, lambda: reader.search(
-            terms, k=10, must_not_terms=["crawl"]).collect()) == []
-        assert _jobs(spark, lambda: reader.search_wand(
-            terms, k=10, strategy="wand").collect()) == []
-        # an absent term returns no rows, still from the driver read
-        assert _jobs(spark, lambda: reader.search(
-            ["zzqxnotaword"], k=10).collect()) == []
-        assert _jobs(spark, lambda: reader.search_wand(
-            ["zzqxnotaword"], k=10).collect()) == []
-        assert _jobs(spark, lambda: reader.df_for_terms(
-            ["index", "zzqxnotaword"])) == []
         st: dict = {}
-        assert _jobs(spark, lambda: reader.search_wand(
-            terms, k=10, stats_out=st).collect()) == []
+        calls = [
+            lambda: reader.search(terms, k=10).collect(),
+            lambda: reader.search(terms, k=10, must_not_terms=["crawl"]).collect(),
+            lambda: reader.search_wand(terms, k=10, strategy="wand").collect(),
+            # an absent term returns no rows, still from the driver read
+            lambda: reader.search(["zzqxnotaword"], k=10).collect(),
+            lambda: reader.search_wand(["zzqxnotaword"], k=10).collect(),
+            lambda: reader.df_for_terms(["index", "zzqxnotaword"]),
+            lambda: reader.search_wand(terms, k=10, stats_out=st).collect(),
+        ]
+        for fn in calls:
+            # no Spark job, and no Python -> JVM call either: the rows
+            # never leave the driver (the job-group calls stay outside)
+            sent: list[str] = []
+            assert _jobs(spark, lambda: sent.extend(
+                _py4j_commands(spark, monkeypatch, fn))) == []
+            assert sent == []
         # stats_out comes from the same execution, with no extra actions;
         # the driver scores every block it read
         assert st["strategy"] == "exact_driver" and st["num_ranges"] == 1
@@ -277,24 +326,33 @@ def test_gather_cap_falls_back_to_distributed_plans(spark, tmp_path, monkeypatch
     reader = IndexReader(spark, store)
     try:
         terms = ["engine", "spark", "index"]
-        driver = [_rows(reader.search(terms, k=10)),
-                  _rows(reader.search(terms, k=10, must_not_terms=["crawl"])),
-                  _rows(reader.search_wand(terms, k=10))]
+
+        def searches(r, stats_out=None):
+            return [_hit_rows(r.search(terms, k=10)),
+                    _hit_rows(r.search(terms, k=10, must_not_terms=["crawl"])),
+                    _hit_rows(r.search_wand(terms, k=10, stats_out=stats_out))]
+
+        driver = searches(reader)
         monkeypatch.setattr(query_mod, "GATHER_MAX_BLOCKS", 1)
         calls = []
         real = query_mod.bm25_topk_from_index
         monkeypatch.setattr(query_mod, "bm25_topk_from_index",
                             lambda *a, **kw: calls.append(1) or real(*a, **kw))
         st: dict = {}
-        fallback = [_rows(reader.search(terms, k=10)),
-                    _rows(reader.search(terms, k=10, must_not_terms=["crawl"])),
-                    _rows(reader.search_wand(terms, k=10, stats_out=st))]
-        assert fallback == driver
+        assert searches(reader, st) == driver
         assert len(calls) == 2  # both exact calls ran the distributed plan
         # the distributed WAND reports its doc-id range fan-out
         assert st["candidate_block_ranges"] >= st["candidate_blocks"] > 1
     finally:
         reader.close()
+    # an overflowed deleted set: every call runs the live-docs-join plan
+    overflow = IndexReader(spark, store, cfg=IndexConfig(max_deleted_driver=0))
+    try:
+        assert overflow._deleted_overflow
+        assert searches(overflow) == driver
+        assert len(calls) == 5
+    finally:
+        overflow.close()
 
 
 def test_concurrent_searches_match_sequential(spark, store):
