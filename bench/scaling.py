@@ -205,15 +205,17 @@ def child(cores: int, n_docs: int, mode: str = "strong") -> None:
     )
     shutil.rmtree(os.path.join(root, "warmup"), ignore_errors=True)
 
+    # 2 batches, double ceil so no tiny leftover third micro-batch
+    rows_per_partition = max(1, -(-(-(-n_docs // SOURCE_PARTITIONS)) // 2))
     with ProbeMonitor() as pm:
         build_t0_ms = int(time.time() * 1000)  # epoch: slices the eventlog
         t0 = time.perf_counter()
         results = run_ingest_loop(
             spark, store, source,
-            # 2 batches, double ceil so no tiny leftover third micro-batch
-            rows_per_partition=max(1, -(-(-(-n_docs // SOURCE_PARTITIONS)) // 2)),
+            rows_per_partition=rows_per_partition,
             start_option=EARLIEST,
             cfg=IndexConfig(docid_strategy="range"),  # parallel ids (same as window)
+            max_rows=min(n_docs, rows_per_partition * SOURCE_PARTITIONS),
         )
         build_sec = time.perf_counter() - t0
         build_t1_ms = int(time.time() * 1000)

@@ -115,7 +115,8 @@ def main() -> None:
             bt = time.perf_counter()
             batch_id = store.next_entry_id()
             res = ingest_batch(spark, store, source, batch_id, hwm,
-                               rows_per_partition, cfg=cfg)
+                               rows_per_partition, cfg=cfg,
+                               max_rows=min(args.docs, rows_per_partition * SOURCE_PARTITIONS))
             if res is None:
                 break
             hwm = store.committed_offsets()

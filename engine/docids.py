@@ -20,8 +20,41 @@ Two strategies:
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+# Last-write-wins tie-break after the version column: of two rows of one
+# key with equal versions, the later one in the source (higher partition,
+# then higher offset) wins, so a re-run of a batch keeps the same row.
+TIEBREAK_COLS = ("part_id", "row_offset")
+
+
+def _newest_first(df: DataFrame, version_col: str) -> list:
+    """Window order for last-write-wins: `version_col` desc, then the
+    TIEBREAK_COLS the relation has, desc."""
+    return [F.col(version_col).desc()] + [
+        F.col(c).desc() for c in TIEBREAK_COLS if c in df.columns
+    ]
+
+
+def last_write_wins(key, versions) -> np.ndarray:
+    """Driver twin of dedup_last_write_wins: row indices of the greatest
+    `versions` tuple (Arrow arrays, compared in order, null lowest) per
+    distinct `key` value, in ascending key order with the null key first
+    — the order, and so the dense ids, the Spark windows give."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if len(key) == 0:
+        return np.empty(0, dtype=np.int64)
+    rank = np.asarray(pc.rank(key, sort_keys="ascending", null_placement="at_start",
+                              tiebreaker="dense"), dtype=np.int64)
+    vs = [np.asarray(pc.fill_null(pc.cast(v, pa.int64()), np.iinfo(np.int64).min))
+          for v in versions]
+    order = np.lexsort((*reversed(vs), rank))
+    r = rank[order]
+    return order[np.append(r[1:] != r[:-1], True)]
 
 
 def literal_long_map(mapping: dict[int, int], key_col: str):
@@ -133,9 +166,10 @@ def dedup_assign_ids_ranged(
     hot path. ONE range exchange on `key` does triple duty —
 
     1. dedup: the range partitioner assigns rows by key VALUE, so equal keys
-       always co-locate and last-write-wins (max `version_col` per key) is a
-       partition-local window (WindowGroupLimit; Catalyst reuses the range
-       partitioning — no second exchange, verified in the executed plan);
+       always co-locate and last-write-wins (max `version_col` per key, ties
+       broken by TIEBREAK_COLS) is a partition-local window
+       (WindowGroupLimit; Catalyst reuses the range partitioning — no
+       second exchange, verified in the executed plan);
     2. ids: partitions are contiguous key ranges, so
        doc_id = driver-prefix-sum base of the partition + the row's position
        in the partition's key-sorted order — identical to the global dense
@@ -161,7 +195,7 @@ def dedup_assign_ids_ranged(
 
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     ranged = df.repartitionByRange(n, F.col(key).asc())
-    w = Window.partitionBy(key).orderBy(F.col(version_col).desc())
+    w = Window.partitionBy(key).orderBy(*_newest_first(df, version_col))
     deduped = (
         ranged.withColumn("_rk", F.row_number().over(w))
         .where(F.col("_rk") == 1)
@@ -202,8 +236,8 @@ def dedup_last_write_wins(
     """Upsert-by-id semantics within a batch (reference D10: indexing with an
     existing id replaces the doc — prepareIndex(indexName, indexType,
     eventUUID), ElasticSearchClientService.java:140-142). Keeps the row with
-    the greatest `version_col` per `key`."""
-    w = Window.partitionBy(key).orderBy(F.col(version_col).desc())
+    the greatest `version_col` per `key`, ties broken by TIEBREAK_COLS."""
+    w = Window.partitionBy(key).orderBy(*_newest_first(df, version_col))
     return (
         df.withColumn("_rk", F.row_number().over(w))
         .where(F.col("_rk") == 1)

@@ -1,8 +1,7 @@
-"""Micro-ingest loop: the reference's consumer hot path, Spark-first.
+"""Micro-ingest loop: the reference's consumer hot path.
 
-One loop iteration == one Spark job == one `consumer.poll` cycle of the
-reference (/root/reference/src/main/java/org/elasticsearch/kafka/indexer/
-jobs/ConsumerWorker.java:50-143):
+One loop iteration == one `consumer.poll` cycle of the reference's
+consumer (org/elasticsearch/kafka/indexer/jobs/ConsumerWorker.java:50-143):
 
     slice next batch (per-partition offset window)        # poll, S1
       -> extract_text transform, failures -> quarantine   # T1/T3/S13
@@ -12,6 +11,15 @@ jobs/ConsumerWorker.java:50-143):
       -> write immutable segment                          # S5 (bulk post)
       -> commit ledger entry with partition offsets       # S3 (commitAsync
          only after successful post, ConsumerWorker.java:117-120)
+
+Small bulks run on the driver: the window is taken in one bounded Arrow
+collect (the batch's only Spark job), and when it holds at most
+DRIVER_BUILD_MAX_DOCS rows every step after the slice runs in numpy and
+pyarrow on the driver, with the same encoder (postings.encode_docs) and
+the same segment layout and ledger entry as the distributed plan. A
+bigger window (a bulk build) runs the distributed plan, which a window
+its caller bounds past the cap (`max_rows`) reaches with no collect, so
+its html never reaches the driver.
 
 Start options mirror ConsumerStartOption (jobs/ConsumerManager.java:144-178):
 EARLIEST / LATEST / RESTART (resume from committed) / CUSTOM(offsets).
@@ -26,18 +34,21 @@ from __future__ import annotations
 
 import logging
 import os
+import shutil
 import time
 from dataclasses import dataclass
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from engine.analysis import with_extracted_text
+from engine.analysis import tokens, with_extracted_text
 from engine.config import DEFAULT_CONFIG, IndexConfig, plan_fanout
 from engine.docids import (
     assign_doc_ids,
     dedup_assign_ids_ranged,
     dedup_last_write_wins,
+    last_write_wins,
     literal_long_map,
 )
 from engine.postings import build_posting_blocks_local
@@ -47,6 +58,17 @@ EARLIEST = "EARLIEST"
 LATEST = "LATEST"
 RESTART = "RESTART"
 CUSTOM = "CUSTOM"
+
+# Largest window, in rows, built on the driver; a bigger one runs the
+# distributed plan. Set from a timed warm sweep of one window's
+# process_window (webpages corpus, store_source, cached source, local[4],
+# 4-core host), driver / Spark medians of 3: 0.65 / 3.05 s at 1k docs,
+# 2.49 / 4.46 s at 5k, 4.91 / 5.71 s at 10k, 10.9 / 8.6 s at 20k, and
+# (before the driver build tokenized each doc once) 27.6 / 14.1 s at 50k.
+# The cap is the largest size measured where the driver still wins. It
+# also bounds what a build holds on the driver (the window's html and
+# token strings) and stays below postings.FLUSH_DOCS.
+DRIVER_BUILD_MAX_DOCS = 10_000
 
 
 class FatalIngestError(Exception):
@@ -198,10 +220,14 @@ def ingest_batch(
     rows_per_partition: int,
     cfg: IndexConfig = DEFAULT_CONFIG,
     fail_before_commit: bool = False,
+    max_rows: int | None = None,
 ) -> BatchResult | None:
     """Ingest one offset window above `hwm`. Returns None when the window is
     empty (S6 empty-batch no-op). `fail_before_commit` simulates a crash
-    between segment write and ledger commit (recovery tests, SURVEY.md §5.2-3)."""
+    between segment write and ledger commit (recovery tests, SURVEY.md §5.2-3).
+    `max_rows`: process_window's bound on the window's rows, when the
+    caller knows one (rows_per_partition x the source's partition count,
+    or the source's row count if smaller)."""
     if store.has_batch(batch_id):
         raise RuntimeError(f"batch {batch_id} already committed")  # E4 guard
 
@@ -220,7 +246,8 @@ def ingest_batch(
         & (F.col("row_offset") <= committed + rows_per_partition)
     )
     return process_window(
-        spark, store, window, batch_id, cfg=cfg, fail_before_commit=fail_before_commit
+        spark, store, window, batch_id, cfg=cfg, fail_before_commit=fail_before_commit,
+        max_rows=max_rows,
     )
 
 
@@ -233,6 +260,7 @@ def process_window(
     fail_before_commit: bool = False,
     extra_metrics: dict | None = None,
     pre_extracted: bool = False,
+    max_rows: int | None = None,
 ) -> BatchResult | None:
     """Build + commit one segment from an already-sliced page window.
 
@@ -242,15 +270,25 @@ def process_window(
     The doc-id base and the entry id come from one view (the caller's, if
     it passes one): a commit by another writer in between fails this one.
 
-    `pre_extracted`: the window already carries extracted_text/extract_error/
-    n_tokens (and a `payload` column holding the raw bytes of failed rows
-    only) — the fanout staging path, which extracts ONCE for the whole batch
-    instead of once per index.
+    `pre_extracted`: the window already carries extracted_text/extract_error
+    (and a `payload` column holding the raw bytes of failed rows only, and
+    optionally n_tokens) — the fanout staging path, which extracts ONCE for
+    the whole batch instead of once per index, and update_by_query's
+    rewritten docs.
 
-    Runs under build_confs (AQE off): with AQE, every action containing a
+    The window is collected once, at most DRIVER_BUILD_MAX_DOCS + 1 rows of
+    it, as Arrow: that is the only Spark job of a window up to the cap,
+    which is then built on the driver (_build_on_driver). A bigger window
+    runs the distributed plan (_build_with_spark), which re-reads it.
+    `max_rows`: an upper bound on the window's rows, when the caller knows
+    one. Past the cap, the window goes to the distributed plan with no
+    collect, so a bulk window's html never reaches the driver; the plan's
+    first job then serves as the emptiness check, as the collect does. Runs
+    under build_confs (AQE off): with AQE, every action containing a
     shuffle splits into 2-5 Spark jobs and the ~0.3-0.5s driver fixed cost
-    per job dominates a micro-batch (eventlog attribution in BENCH/NOTES.md);
-    the batch plans size their own partitions via plan_fanout."""
+    per job dominates a micro-batch; the distributed plan sizes its own
+    partitions via plan_fanout. The ledger entry's metrics record which
+    path ran (`build_path`)."""
     from engine.session import build_confs
 
     with build_confs(spark):
@@ -258,6 +296,7 @@ def process_window(
             spark, store, window, batch_id, cfg=cfg,
             fail_before_commit=fail_before_commit,
             extra_metrics=extra_metrics, pre_extracted=pre_extracted,
+            max_rows=max_rows,
         )
 
 
@@ -270,36 +309,213 @@ def _process_window_body(
     fail_before_commit: bool = False,
     extra_metrics: dict | None = None,
     pre_extracted: bool = False,
+    max_rows: int | None = None,
 ) -> BatchResult | None:
     t0 = time.monotonic()
     view = store.view()
-    store = view.store
     # the STORE's codec wins over cfg (a store's segments must all share
     # one block codec; _meta.json records it at create time)
-    store_codec = view.codec
-    if cfg.codec != store_codec:
+    if cfg.codec != view.codec:
         from dataclasses import replace as _dc_replace
 
-        cfg = _dc_replace(cfg, codec=store_codec)
-    stage_t: dict[str, float] = {}
+        cfg = _dc_replace(cfg, codec=view.codec)
+    if cfg.routing_col is not None and cfg.routing_col not in window.columns:
+        raise ValueError(f"routing_col {cfg.routing_col!r} not in window columns")
+    if cfg.docid_strategy not in ("range", "window"):
+        raise ValueError(f"unknown docid strategy: {cfg.docid_strategy}")
+    # ONE bounded Arrow collect: a window of at most DRIVER_BUILD_MAX_DOCS
+    # rows is built on the driver, a bigger one by the Spark plan, which a
+    # window the caller bounds past the cap reaches without the collect
+    rows = None
+    if max_rows is None or max_rows <= DRIVER_BUILD_MAX_DOCS:
+        cols = [c for c in ("url", "warc_ts", "lang", "part_id", "row_offset")
+                if c in window.columns]
+        cols += ["extracted_text", "extract_error", "payload"] if pre_extracted else ["html"]
+        if cfg.routing_col and cfg.routing_col not in cols:
+            cols.append(cfg.routing_col)
+        rows = window.select(*cols).limit(DRIVER_BUILD_MAX_DOCS + 1).toArrow()
+    if rows is not None and rows.num_rows <= DRIVER_BUILD_MAX_DOCS:
+        if rows.num_rows == 0:
+            return None
+        built = _build_on_driver(view, rows, batch_id, cfg, pre_extracted, t0)
+    else:
+        built = _build_with_spark(spark, view, window, batch_id, cfg, pre_extracted, t0)
+        if built is None:  # an empty window
+            return None
+    segment_id, offs, n_docs, n_failed, stage_t, skew = built
+    build_s = time.monotonic() - t0
+    metrics = {
+        "batch_id": batch_id,
+        "n_docs": int(n_docs),
+        "n_failed": int(n_failed),
+        "build_sec": round(build_s, 3),
+        "docs_per_sec": round(n_docs / build_s, 1) if build_s > 0 else None,
+        "skew_max_over_median_df": skew,
+        **stage_t,
+        **(extra_metrics or {}),
+    }
 
-    def mark(name: str, since: list) -> None:
+    if fail_before_commit:  # crash window simulation (E1)
+        return BatchResult(batch_id, segment_id, n_docs, n_failed, False, metrics)
+
+    view.store.commit(
+        LedgerEntry(
+            entry_id=view.next_entry_id,
+            kind="ingest",
+            segments_added=[segment_id],
+            partition_offsets=offs,
+            metrics=metrics,
+        )
+    )
+    return BatchResult(batch_id, segment_id, n_docs, n_failed, True, metrics)
+
+
+def _stage_timer(t0: float):
+    """(stage_t, mark): mark(name) records the seconds since the previous
+    mark (or `t0`) in stage_t[name]."""
+    stage_t: dict = {}
+    last = [t0]
+
+    def mark(name: str) -> None:
         now = time.monotonic()
-        stage_t[name] = round(now - since[0], 2)
-        since[0] = now
+        stage_t[name] = round(now - last[0], 2)
+        last[0] = now
 
-    _t = [t0]
+    return stage_t, mark
+
+
+def _segment_stats(segment_id, base, n_docs, sum_dl, batch_id, routing_stats) -> dict:
+    return {
+        "segment_id": segment_id,
+        "base_doc_id": base,
+        "doc_id_hwm": base + int(n_docs),
+        "n_docs": int(n_docs),
+        "sum_dl": int(sum_dl),
+        "batch_id": batch_id,
+        **({"routing_stats": routing_stats} if routing_stats else {}),
+    }
+
+
+def _build_on_driver(view: StoreView, rows, batch_id: int, cfg: IndexConfig,
+                     pre_extracted: bool, t0: float):
+    """Build one segment from a window collected to the driver (`rows`, a
+    pyarrow Table) with no Spark job: extract, dedup, ids and encode in
+    numpy, then pyarrow writes in the layout the Spark plan writes.
+    Returns (segment_id, offsets, n_docs, n_failed, stage times, skew), as
+    _build_with_spark does."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from engine.analysis import _extract_one
+    from engine.positions import encode_doc_positions
+    from engine.postings import _out_arrow_schema, encode_docs
+    from engine.segments import write_parquet
+
+    stage_t, mark = _stage_timer(t0)
+    store, routed = view.store, cfg.routing_col is not None
+    segment_id = f"seg-{batch_id:08d}"
+    if pre_extracted:
+        text, err, payload = (rows.column(c) for c in ("extracted_text", "extract_error", "payload"))
+    else:
+        payload = rows.column("html")
+        text, err = (pa.array(c, type=pa.string())
+                     for c in zip(*map(_extract_one, payload.to_pylist())))
+    offs = rows.group_by("part_id").aggregate([("row_offset", "max")])
+    offs = dict(zip(map(str, offs.column("part_id").to_pylist()),
+                    offs.column("row_offset_max").to_pylist()))
+    failed = pc.is_valid(err)
+    n_failed = int(pc.sum(failed).as_py() or 0)
+    if n_failed:
+        # quarantine side-output (S13): offset + error + payload
+        qdir = os.path.join(store.path, "quarantine", segment_id)
+        shutil.rmtree(qdir, ignore_errors=True)
+        write_parquet(pa.table({
+            "url": rows.column("url"), "part_id": rows.column("part_id"),
+            "row_offset": rows.column("row_offset"), "extract_error": err,
+            "payload": payload,
+        }).filter(failed), qdir)
+    mark("extract_sec")
+
+    good = rows.append_column("_text", text).filter(pc.invert(failed))
+    # last write wins per url; ids are the dense rank over url from the
+    # store's high-water mark, the ids dedup_assign_ids_ranged gives
+    docs = good.take(last_write_wins(
+        good.column("url"), [good.column(c) for c in ("warc_ts", "part_id", "row_offset")]))
+    base, n_docs = view.doc_id_hwm, docs.num_rows
+    ids = np.arange(base, base + n_docs, dtype=np.int64)
+    routing = docs.column(cfg.routing_col).cast(pa.string()) if routed else None
+    mark("ids_sec")
+
+    # one encode per routing value (every block is routing-pure); the cap
+    # is below FLUSH_DOCS, so one call never buffers more than the
+    # distributed builder's flush does
+    texts = docs.column("_text").to_pylist()
+    if routed:
+        rv = np.array(routing.to_pylist(), dtype=object)
+        groups = [(v, np.flatnonzero(rv == v)) for v in dict.fromkeys(rv.tolist())]
+    else:
+        groups = [(None, ids - base)]
+    def position_rows(part_ids, part_texts, v):
+        pos = encode_doc_positions(part_ids, part_texts)
+        if routed:
+            pos = pos.append_column("routing", pa.array([v] * pos.num_rows, pa.string()))
+        return pos
+
+    doc_len = np.zeros(n_docs, dtype=np.int64)
+    blocks, positions = [], [position_rows(ids[:0], [], None)]
+    for v, idx in groups:
+        part_texts = [texts[i] for i in idx]
+        rb, doc_len[idx] = encode_docs(ids[idx], part_texts, cfg, routed=routed, routing=v)
+        if rb is not None:
+            blocks.append(rb)
+        if cfg.store_positions:
+            positions.append(position_rows(ids[idx], part_texts, v))
+    doc_cols = {"doc_id": pa.array(ids), "url": docs.column("url"), "doc_len": pa.array(doc_len)}
+    doc_cols.update({c: docs.column(c) for c in ("warc_ts", "lang", "part_id", "row_offset")
+                     if c in docs.column_names})
+    if cfg.store_source:
+        doc_cols["source"] = docs.column("_text")
+    routing_stats = None
+    if routed:
+        doc_cols["routing"] = routing
+        # null routing values land under __HIVE_DEFAULT_PARTITION__: no
+        # stats key, as in the Spark build
+        routing_stats = {v: {"n_docs": len(idx), "sum_dl": int(doc_len[idx].sum())}
+                         for v, idx in groups if v is not None}
+    postings = pa.Table.from_batches(blocks, schema=_out_arrow_schema(routed))
+    store.write_segment_tables(
+        segment_id, postings, pa.table(doc_cols),
+        _segment_stats(segment_id, base, n_docs, int(doc_len.sum()), batch_id, routing_stats),
+        positions=pa.concat_tables(positions) if cfg.store_positions else None,
+    )
+    mark("build_write_sec")
+    n = np.sort(postings.column("n").to_numpy())
+    skew = float(n[-1] / n[(len(n) - 1) // 2]) if len(n) else None
+    return segment_id, offs, n_docs, n_failed, {**stage_t, "build_path": "driver"}, skew
+
+
+def _build_with_spark(spark: SparkSession, view: StoreView, window: DataFrame,
+                      batch_id: int, cfg: IndexConfig, pre_extracted: bool, t0: float):
+    """Build one segment from a window past DRIVER_BUILD_MAX_DOCS rows (or
+    bounded past it by the caller) with the distributed plan. Returns
+    (segment_id, offsets, n_docs, n_failed, stage times, skew), or None for
+    an empty window."""
+    store = view.store
+    stage_t, mark = _stage_timer(t0)
     # cache everything downstream needs EXCEPT the raw html blobs — they are
     # the bulk of the bytes and only the (rare) quarantine path wants them;
     # keeping them out of the cache roughly halves per-batch storage and the
     # columnar-compression CPU spent building it
     if pre_extracted:
-        ext = window.drop("payload").cache()
+        ext = window.drop("payload")
+        if "n_tokens" not in ext.columns:
+            ext = ext.withColumn("n_tokens", F.size(tokens("extracted_text")))
+        ext = ext.cache()
     else:
         ext = with_extracted_text(window).drop("html").cache()
-    # ONE action serves as the empty-batch check (S6), the offset scan (S3)
-    # and the failure count (S13) — per-batch fixed job count matters when
-    # the loop runs thousands of micro-batches
+    # ONE action serves as the offset scan (S3) and the failure count
+    # (S13) — per-batch fixed job count matters when the loop runs
+    # thousands of micro-batches
     offs_rows = (
         ext.groupBy("part_id")
         .agg(
@@ -309,7 +525,7 @@ def _process_window_body(
         )
         .collect()
     )
-    mark("extract_sec", _t)
+    mark("extract_sec")
     if not offs_rows:
         ext.unpersist()
         return None
@@ -354,12 +570,7 @@ def _process_window_body(
             )
 
         good = ext.where(F.col("extract_error").isNull()).drop("extract_error")
-
         routed = cfg.routing_col is not None
-        if routed and cfg.routing_col not in good.columns:
-            raise ValueError(
-                f"routing_col {cfg.routing_col!r} not in window columns"
-            )
 
         base = view.doc_id_hwm
         if cfg.docid_strategy == "range":
@@ -431,7 +642,7 @@ def _process_window_body(
                 total = stat_rows[0]
             n_docs, sum_dl = int(total["n"]), int(total["s"] or 0)
             build_prepartitioned = False
-        mark("ids_sec", _t)
+        mark("ids_sec")
 
         # doc_len came out of the extract UDF's single Python regex pass
         # (n_tokens; py_tokenize == JVM tokens, tested) — no second scan
@@ -467,15 +678,7 @@ def _process_window_body(
             segment_id,
             blocks,
             doc_table,
-            {
-                "segment_id": segment_id,
-                "base_doc_id": base,
-                "doc_id_hwm": base + int(n_docs),
-                "n_docs": int(n_docs),
-                "sum_dl": int(sum_dl),
-                "batch_id": batch_id,
-                **({"routing_stats": routing_stats} if routing_stats else {}),
-            },
+            _segment_stats(segment_id, base, n_docs, sum_dl, batch_id, routing_stats),
             term_metrics=term_metrics,
         )
         if cfg.store_positions:
@@ -491,33 +694,10 @@ def _process_window_body(
                     routing_col=cfg.routing_col if routed else None,
                 ),
             )
-        mark("build_write_sec", _t)
+        mark("build_write_sec")
         mx, md = term_metrics.get("max_df"), term_metrics.get("median_df")
-        build_s = time.monotonic() - t0
-        metrics = {
-            "batch_id": batch_id,
-            "n_docs": int(n_docs),
-            "n_failed": int(n_failed),
-            "build_sec": round(build_s, 3),
-            "docs_per_sec": round(n_docs / build_s, 1) if build_s > 0 else None,
-            "skew_max_over_median_df": (mx / md) if md else None,
-            **stage_t,
-            **(extra_metrics or {}),
-        }
-
-        if fail_before_commit:  # crash window simulation (E1)
-            return BatchResult(batch_id, segment_id, n_docs, n_failed, False, metrics)
-
-        store.commit(
-            LedgerEntry(
-                entry_id=view.next_entry_id,
-                kind="ingest",
-                segments_added=[segment_id],
-                partition_offsets=offs,
-                metrics=metrics,
-            )
-        )
-        return BatchResult(batch_id, segment_id, n_docs, n_failed, True, metrics)
+        return (segment_id, offs, n_docs, n_failed, {**stage_t, "build_path": "spark"},
+                (mx / md) if md else None)
     finally:
         ext.unpersist()
         if docs_ided is not None:
@@ -538,6 +718,7 @@ def run_ingest_loop(
     stop_requested=None,
     max_retries: int = 2,
     retry_wait_sec: float = 0.0,
+    max_rows: int | None = None,
 ) -> list[BatchResult]:
     """The poll loop (ConsumerWorker.run): ingest windows until the source is
     drained (or max_batches). Each iteration re-reads committed offsets, so a
@@ -554,7 +735,10 @@ def run_ingest_loop(
     reconnect-wait) — the ledger is untouched by the failure, so the re-run
     deterministically rebuilds the same window. FatalIngestError, or
     exhausting the retries, propagates: the caller exits nonzero with the
-    ledger clean (resume-safe)."""
+    ledger clean (resume-safe).
+
+    `max_rows`: passed to every ingest_batch (a bound on a window's rows
+    that lets a bulk window skip the driver collect)."""
     results: list[BatchResult] = []
     while max_batches is None or len(results) < max_batches:
         if stop_requested is not None and stop_requested():
@@ -567,7 +751,8 @@ def run_ingest_loop(
         while True:
             try:
                 res = ingest_batch(
-                    spark, store, source, batch_id, hwm, rows_per_partition, cfg
+                    spark, store, source, batch_id, hwm, rows_per_partition, cfg,
+                    max_rows=max_rows,
                 )
                 break
             except FatalIngestError:

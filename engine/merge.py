@@ -73,7 +73,7 @@ def _shield_older_versions(spark, view: StoreView, src: StoreView, docs, dels) -
         .select("doc_id").join(dels, "doc_id", "left_anti")
     )
     return commit_tombstones(
-        spark, view, older,
+        view, older.toArrow().column("doc_id").to_numpy(),
         {"by": "merge", "merge_inputs": list(src.segments)},
     ) > 0
 

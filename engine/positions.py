@@ -48,37 +48,44 @@ POSITIONS_SUBDIR = "positions"
 # ---------------------------------------------------------------------------
 
 
-def encode_position_rows(plists: list[np.ndarray]) -> list[bytes]:
-    """Delta-encode + varint many per-row sorted position arrays in ONE
-    vectorized pass: concatenate, reset the delta chain at each row start
-    (first value absolute — the posting blocks' restart layout), one
-    varint_encode over the whole stream, then slice per-row blobs at the
+def encode_position_blobs(values: np.ndarray, ns: np.ndarray):
+    """Delta-encode + varint consecutive sorted position runs (`ns[i]`
+    values each, concatenated in `values`) in ONE vectorized pass: reset the
+    delta chain at each run start (first value absolute — the posting
+    blocks' restart layout), one varint_encode over the whole stream, then
+    a binary Arrow array of per-run blobs over the one buffer, at the
     accumulated byte offsets."""
-    if not plists:
-        return []
-    ns = np.fromiter((len(p) for p in plists), dtype=np.int64, count=len(plists))
-    values = (
-        np.concatenate([np.asarray(p, dtype=np.int64) for p in plists])
-        if ns.sum()
-        else np.empty(0, dtype=np.int64)
-    )
+    import pyarrow as pa
+
+    from engine.codecs import varint_encode_with_lengths
+
+    values = np.asarray(values, dtype=np.int64)
+    ns = np.asarray(ns, dtype=np.int64)
     deltas = values.copy()
     deltas[1:] -= values[:-1]
     starts = np.zeros(len(ns), dtype=np.int64)
     np.cumsum(ns[:-1], out=starts[1:])
     nonempty = ns > 0
     deltas[starts[nonempty]] = values[starts[nonempty]]
-    from engine.codecs import varint_encode_with_lengths
-
     buf, lens = varint_encode_with_lengths(deltas.astype(np.uint64))
-    # per-row byte extents via the prefix sum of per-VALUE byte lengths:
-    # row i spans value indices [starts[i], starts[i]+ns[i])
+    # run i spans value indices [starts[i], starts[i]+ns[i]), so its bytes
+    # start at the prefix sum of per-VALUE byte lengths up to starts[i]
     csum = np.zeros(len(deltas) + 1, dtype=np.int64)
-    if len(lens):
-        np.cumsum(lens, out=csum[1:])
-    byte_starts = csum[starts]
-    byte_ends = csum[starts + ns]
-    return [bytes(buf[s:e]) for s, e in zip(byte_starts, byte_ends)]
+    np.cumsum(lens, out=csum[1:])
+    offs = csum[np.append(starts, len(deltas))].astype(np.int32)
+    return pa.Array.from_buffers(
+        pa.binary(), len(ns), [None, pa.py_buffer(offs.tobytes()), pa.py_buffer(buf)],
+    )
+
+
+def encode_position_rows(plists: list[np.ndarray]) -> list[bytes]:
+    """encode_position_blobs over many per-row sorted position arrays, as
+    one bytes blob per row."""
+    if not plists:
+        return []
+    ns = np.fromiter((len(p) for p in plists), dtype=np.int64, count=len(plists))
+    values = np.concatenate([np.asarray(p, dtype=np.int64) for p in plists])
+    return encode_position_blobs(values, ns).to_pylist()
 
 
 def decode_position_rows(blobs: list[bytes], ns: np.ndarray) -> np.ndarray:
@@ -136,6 +143,45 @@ def build_position_postings(
             yield pd.DataFrame(out)
 
     return grouped.mapInPandas(enc, schema=out_schema)
+
+
+def encode_doc_positions(ids: np.ndarray, texts):
+    """The positions rows (term, doc_id, n_pos, pos_blob) of one batch of
+    docs, built on the driver and sorted by (term, doc_id): the rows
+    build_position_postings gives for the same docs. `ids` ascending,
+    `texts` in the same order (str or None)."""
+    import itertools
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from engine.analysis import py_tokenize
+
+    toks = [py_tokenize(t) for t in texts]
+    lens = np.fromiter((len(t) for t in toks), dtype=np.int64, count=len(toks))
+    flat = pa.array(itertools.chain.from_iterable(toks), type=pa.string(),
+                    size=int(lens.sum())).dictionary_encode()
+    uniq = flat.dictionary
+    rank = np.empty(len(uniq), dtype=np.int64)
+    rank[np.asarray(pc.sort_indices(uniq), dtype=np.int64)] = np.arange(len(uniq))
+    codes = np.asarray(flat.indices, dtype=np.int64)
+    # tokens arrive doc-major (ids ascending, positions ascending), so a
+    # stable sort by term keeps (doc, pos) order within each term
+    order = np.argsort(rank[codes], kind="stable")
+    doc = np.repeat(np.asarray(ids, dtype=np.int64), lens)[order]
+    pos = (np.arange(len(codes), dtype=np.int64)
+           - np.repeat(np.cumsum(lens) - lens, lens))[order]
+    codes = codes[order]
+    run = np.ones(len(codes), dtype=bool)
+    run[1:] = (codes[1:] != codes[:-1]) | (doc[1:] != doc[:-1])
+    starts = np.flatnonzero(run)
+    ns = np.diff(np.append(starts, len(codes)))
+    return pa.table({
+        "term": uniq.take(pa.array(codes[starts])),
+        "doc_id": pa.array(doc[starts], type=pa.int64()),
+        "n_pos": pa.array(ns, type=pa.int32()),
+        "pos_blob": encode_position_blobs(pos, ns),
+    })
 
 
 def write_segment_positions(store, segment_id: str, positions: DataFrame) -> None:

@@ -397,6 +397,73 @@ def build_posting_blocks(
     )
 
 
+# Docs per encode_docs call: bounds the token strings and postings one
+# encode holds in memory.
+FLUSH_DOCS = 25_000
+
+
+def encode_docs(
+    ids: np.ndarray, texts, cfg: IndexConfig = DEFAULT_CONFIG,
+    routed: bool = False, routing: str | None = None,
+):
+    """(blocks, lens): the posting blocks of one batch of docs as one
+    RecordBatch of POSTINGS_SCHEMA (plus a `routing` column holding
+    `routing` when `routed`), or None when the docs hold no token, and each
+    doc's token count (its BM25 |d|). `ids`: the docs' int64 ids,
+    ascending; `texts`: their texts (str or None), in the same order. The
+    one encoder of the ingest build, run per partition by
+    build_posting_blocks_local and on the driver by a small ingest.
+
+    Fully vectorized: Python C-regex tokenize -> Arrow dictionary_encode
+    (C++ factorize; the short-lived token strings are dropped right after)
+    -> int64 numpy counting/sorting/delta/varint -> output blocks built from
+    Arrow buffers (no per-block Python objects; the term column is a take()
+    on the dictionary)."""
+    import itertools
+
+    import pyarrow as pa
+
+    from engine.analysis import py_tokenize
+
+    tok_lists = [py_tokenize(t) for t in texts]
+    lens = np.fromiter((len(t) for t in tok_lists), dtype=np.int64, count=len(tok_lists))
+    if lens.sum() == 0:
+        return None, lens
+    flat = pa.array(
+        itertools.chain.from_iterable(tok_lists), type=pa.string(), size=int(lens.sum()),
+    )
+    tok_lists = None  # token strings die here, before the heavy numpy work
+    enc_d = flat.dictionary_encode()
+    flat = None
+    codes = np.asarray(enc_d.indices).astype(np.int64)
+    uniq = enc_d.dictionary
+    v_size = np.int64(len(uniq))
+    # docs with zero tokens simply never appear (repeat skips len 0)
+    doc_idx = np.repeat(np.arange(len(ids), dtype=np.int64), lens)
+
+    # (doc, term) tf via one int64 sort + run-length encode
+    key = doc_idx * v_size + codes
+    ks = np.sort(key, kind="stable")
+    change = np.empty(len(ks), dtype=bool)
+    change[0] = True
+    np.not_equal(ks[1:], ks[:-1], out=change[1:])
+    starts = np.flatnonzero(change)
+    tf = np.diff(np.append(starts, len(ks))).astype(np.int64)
+    kk = ks[starts]
+    d_idx = kk // v_size
+    code = kk % v_size
+    doc = np.asarray(ids, dtype=np.int64)[d_idx]
+    dl = lens[d_idx]
+
+    # postings order: (term, doc asc) — stable sort by code keeps the
+    # doc-major order within each term
+    o2 = np.argsort(code, kind="stable")
+    return _encode_term_major(
+        uniq, code[o2], doc[o2], tf[o2], dl[o2], cfg.block_size, routing,
+        _out_arrow_schema(routed), routed, codec=cfg.codec,
+    ), lens
+
+
 def build_posting_blocks_local(
     docs: DataFrame,
     cfg: IndexConfig = DEFAULT_CONFIG,
@@ -404,7 +471,7 @@ def build_posting_blocks_local(
     text_col: str = "text",
     num_partitions: int | None = None,
     assume_partitioned: bool = False,
-    flush_docs: int = 25_000,
+    flush_docs: int = FLUSH_DOCS,
     routing_col: str | None = None,
 ) -> DataFrame:
     r"""Shuffle-free posting build: the production path for the ingest loop.
@@ -432,18 +499,15 @@ def build_posting_blocks_local(
     global contiguity is not required).
 
     `flush_docs` bounds builder memory per partition (postings for at most
-    that many docs are buffered before encoding) — the knob that keeps a
-    1M-doc partition from holding 300M postings in Python at 10^12-doc
-    scale.
+    that many docs are buffered before each encode_docs call) — the knob
+    that keeps a 1M-doc partition from holding 300M postings in Python at
+    10^12-doc scale.
 
     `routing_col` (D9): range-partition by (routing, doc_id) instead of
     doc_id alone and emit a `routing` column — every block's postings share
     one routing value, so the segment write can hive-partition by it. A hot
     routing value still spreads over multiple range partitions (the range is
     on the PAIR), so skew does not melt one task."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
     proj = [F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")]
     sort_cols = ["doc_id"]
     if routing_col:
@@ -455,67 +519,6 @@ def build_posting_blocks_local(
         sel = sel.repartitionByRange(n, *sort_cols)
     sel = sel.sortWithinPartitions(*sort_cols)
 
-    block_size = cfg.block_size
-    codec = cfg.codec
-    out_schema = _out_arrow_schema(bool(routing_col))
-
-    def flush(ids_arr: np.ndarray, text_chunks: list, routing) -> pa.RecordBatch | None:
-        """One fully-vectorized encode of <=flush_docs docs: Python C-regex
-        tokenize -> Arrow dictionary_encode (C++ factorize; the short-lived
-        token strings are dropped right after) -> int64 numpy counting/
-        sorting/delta/varint -> output blocks built from Arrow buffers (no
-        per-block Python objects; the term column is a take() on the
-        dictionary)."""
-        from engine.analysis import py_tokenize
-
-        tok_lists = []
-        for ch in text_chunks:
-            tok_lists.extend(
-                py_tokenize(t) for t in ch.to_pylist()
-            )
-        lens = np.fromiter(
-            (len(t) for t in tok_lists), dtype=np.int64, count=len(tok_lists)
-        )
-        if lens.sum() == 0:
-            return None
-        import itertools
-
-        flat = pa.array(
-            itertools.chain.from_iterable(tok_lists), type=pa.string(),
-            size=int(lens.sum()),
-        )
-        tok_lists = None  # token strings die here, before the heavy numpy work
-        enc_d = flat.dictionary_encode()
-        flat = None
-        codes = np.asarray(enc_d.indices).astype(np.int64)
-        uniq = enc_d.dictionary
-        v_size = np.int64(len(uniq))
-        # docs with zero tokens simply never appear (repeat skips len 0)
-        doc_idx = np.repeat(np.arange(len(ids_arr), dtype=np.int64), lens)
-
-        # (doc, term) tf via one int64 sort + run-length encode
-        key = doc_idx * v_size + codes
-        ks = np.sort(key, kind="stable")
-        change = np.empty(len(ks), dtype=bool)
-        change[0] = True
-        np.not_equal(ks[1:], ks[:-1], out=change[1:])
-        starts = np.flatnonzero(change)
-        tf = np.diff(np.append(starts, len(ks))).astype(np.int64)
-        kk = ks[starts]
-        d_idx = kk // v_size
-        code = kk % v_size
-        doc = ids_arr[d_idx]
-        dl = lens[d_idx]
-
-        # postings order: (term, doc asc) — stable sort by code keeps the
-        # doc-major order within each term
-        o2 = np.argsort(code, kind="stable")
-        return _encode_term_major(
-            uniq, code[o2], doc[o2], tf[o2], dl[o2],
-            block_size, routing, out_schema, bool(routing_col),
-            codec=codec,
-        )
-
     def enc(batches):
         buf_ids: list = []
         buf_toks: list = []
@@ -524,7 +527,9 @@ def build_posting_blocks_local(
 
         def do_flush():
             nonlocal buf_ids, buf_toks, buf_n
-            rb = flush(np.concatenate(buf_ids), buf_toks, cur_routing)
+            texts = [t for ch in buf_toks for t in ch.to_pylist()]
+            rb, _ = encode_docs(np.concatenate(buf_ids), texts, cfg,
+                                routed=bool(routing_col), routing=cur_routing)
             buf_ids, buf_toks, buf_n = [], [], 0
             return rb
 

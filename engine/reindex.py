@@ -75,5 +75,6 @@ def reindex(
         *(["lang"] if "lang" in docs.columns else []),
     )
     return process_window(
-        spark, dst_store, window, batch_id, cfg=cfg, pre_extracted=True
+        spark, dst_store, window, batch_id, cfg=cfg, pre_extracted=True,
+        max_rows=view.stats()["n_docs"],
     )

@@ -21,11 +21,19 @@ Both are re-expressed on the engine's log-structured ledger:
   reindex pattern) — the new versions supersede via last-write-wins
   (url, warc_ts, doc_id), no tombstones needed.
 
-100 TB shape: matching runs on the pushed-filter postings scan (only the
-query terms' blocks are read), the tombstone write is distributed (no
-driver collect of ids), and the per-read anti-join is bounded by the
-delete rate between merges — the same "deleted docs are few and
-temporary" assumption Lucene's live-docs bitset makes.
+Small mutations run no Spark build job: the match reads the query's
+blocks on the driver from the postings files (PostingsFiles.read, the
+IndexReader's read), the live filter is the driver-side deleted set
+(StoreView.deleted_doc_ids) and tombstones are written with pyarrow, so a
+delete is 0 Spark jobs. An update reads the matched docs on the driver,
+evaluates the Column transform in one Spark job (the window collect of
+process_window) and builds the rewrite segment on the driver. Past
+GATHER_MAX_BLOCKS query blocks, or a deleted set past max_deleted_driver,
+the match runs the distributed plan; past DRIVER_BUILD_MAX_DOCS matched
+docs, the update reads them and builds with Spark. The per-read anti-join
+of the distributed read paths is bounded by the delete rate between
+merges — the same "deleted docs are few and temporary" assumption
+Lucene's live-docs bitset makes.
 """
 
 from __future__ import annotations
@@ -33,30 +41,24 @@ from __future__ import annotations
 import os
 import shutil
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from engine.analysis import tokens
 from engine.config import IndexConfig
-from engine.segments import IndexStore, LedgerEntry, StoreView
+from engine.segments import IndexStore, LedgerEntry, StoreView, write_parquet
 
 
-def match_doc_ids(
-    spark: SparkSession,
-    store: IndexStore | StoreView,
-    query_terms: list[str],
-    conjunctive: bool = False,
-) -> DataFrame:
-    """(doc_id) of LIVE docs matching the term query (any term, or all
-    terms with conjunctive=True) — the match phase both mutations share.
-    Postings-driven: only the query terms' blocks are scanned/decoded."""
+def _match_distributed(spark: SparkSession, view: StoreView, q_terms: list[str],
+                       conjunctive: bool) -> DataFrame:
+    """match_doc_ids as a Spark plan: the pushed-filter postings scan,
+    decode and live-docs join."""
     from engine.postings import decode_postings
 
-    view = store.view()
-    q_terms = sorted(set(query_terms))
     cand = view.postings(spark).where(F.col("term").isin(q_terms))
-    rows = decode_postings(cand, codec=view.codec)
-    matched = rows.groupBy("doc_id").agg(
+    matched = decode_postings(cand, codec=view.codec).groupBy("doc_id").agg(
         F.count_distinct("term").alias("_nt")
     )
     if conjunctive:
@@ -68,27 +70,66 @@ def match_doc_ids(
     return matched
 
 
-def commit_tombstones(spark, view: StoreView, matched, metrics: dict) -> int:
+def matched_ids(spark: SparkSession, view: StoreView, query_terms: list[str],
+                conjunctive: bool = False) -> np.ndarray:
+    """Sorted ids of the LIVE docs matching the term query (any term, or
+    all terms with conjunctive=True) — the match phase both mutations
+    share. Postings-driven: only the query terms' blocks are read, on the
+    driver, and decoded doc-ids-only; the distributed plan runs instead
+    past GATHER_MAX_BLOCKS blocks or an overflowing deleted set."""
+    from engine.codecs import decode_doc_ids_batch
+    from engine.query import GATHER_MAX_BLOCKS
+    from engine.wand import keep_not_in, sorted_ids
+
+    q_terms = sorted(set(query_terms))
+    deleted = view.deleted_doc_ids(spark, view.store.cfg.max_deleted_driver)
+    blocks = view.postings_files().read(q_terms, ("n", "doc_bytes"), GATHER_MAX_BLOCKS + 1)
+    if deleted is None or blocks.num_rows > GATHER_MAX_BLOCKS:
+        ids = _match_distributed(spark, view, q_terms, conjunctive).toArrow().column(0)
+        return np.sort(np.asarray(ids.to_numpy(), dtype=np.int64))
+    ids = decode_doc_ids_batch(blocks.column("doc_bytes").to_pylist(),
+                               blocks.column("n").to_numpy(), codec=view.codec)
+    # a doc holds each term once, so its postings count = terms matched
+    ids, n_terms = np.unique(ids, return_counts=True)
+    if conjunctive:
+        ids = ids[n_terms >= len(q_terms)]
+    return ids[keep_not_in(ids, sorted_ids(deleted))]
+
+
+def match_doc_ids(
+    spark: SparkSession,
+    store: IndexStore | StoreView,
+    query_terms: list[str],
+    conjunctive: bool = False,
+) -> DataFrame:
+    """matched_ids as a (doc_id) relation, for callers that join it in
+    Spark."""
+    ids = matched_ids(spark, store.view(), query_terms, conjunctive)
+    return spark.createDataFrame(pa.table({"doc_id": ids}))
+
+
+def commit_tombstones(view: StoreView, ids, metrics: dict) -> int:
     """Shared tombstone write + ledger commit at the view's next entry id:
-    files first, ledger last (the ingest commit-after-success contract);
-    no-op without matches. Returns the number of tombstoned ids."""
+    the ids' parquet file first (pyarrow, on the driver), ledger last (the
+    ingest commit-after-success contract); no-op without ids. Returns the
+    number of distinct tombstoned ids."""
+    ids = np.unique(np.asarray(ids, dtype=np.int64))
+    if not len(ids):
+        return 0
     store, entry_id = view.store, view.next_entry_id
     rel = os.path.join("deletes", f"del-{entry_id:08d}")
     out = os.path.join(store.path, rel)
-    matched.write.mode("overwrite").parquet(out)
-    n = spark.read.parquet(out).count()
-    if n == 0:
-        shutil.rmtree(out, ignore_errors=True)
-        return 0
+    shutil.rmtree(out, ignore_errors=True)
+    write_parquet(pa.table({"doc_id": ids}), out)
     store.commit(
         LedgerEntry(
             entry_id=entry_id,
             kind="delete",
             segments_added=[],
-            metrics={"deletes_dir": rel, "n_deleted": int(n), **metrics},
+            metrics={"deletes_dir": rel, "n_deleted": len(ids), **metrics},
         )
     )
-    return int(n)
+    return len(ids)
 
 
 def delete_by_query(
@@ -103,9 +144,8 @@ def delete_by_query(
     entry; a crash in between leaves an orphan file that the next attempt
     overwrites (same contract as segment files)."""
     view = store.view()
-    matched = match_doc_ids(spark, view, query_terms, conjunctive)
     return commit_tombstones(
-        spark, view, matched,
+        view, matched_ids(spark, view, query_terms, conjunctive),
         {"query_terms": sorted(set(query_terms)),
          "conjunctive": bool(conjunctive)},
     )
@@ -134,41 +174,45 @@ def update_by_query(
     silently dropped them would make the updated docs unsearchable by
     routing, strip their stored source, or break phrase serving.
 
-    Returns the ingest BatchResult (or None when nothing matched)."""
-    from engine.ingest import process_window
+    Up to DRIVER_BUILD_MAX_DOCS matched docs are read on the driver, and
+    the transform runs in the one Spark job that collects the rewritten
+    window for the driver build. Returns the ingest BatchResult (or None
+    when nothing matched)."""
+    from engine.ingest import DRIVER_BUILD_MAX_DOCS, process_window
 
     view = store.view()
-    if cfg is None:
-        cfg = view.store.persisted_config()
-    docs = view.docs(spark)
-    if "source" not in docs.columns:
+    stored = view.store.persisted_config()
+    cfg = cfg or stored
+    if not stored.store_source:
         raise ValueError(
             "index was built without store_source=True (_source disabled) — "
             "update_by_query needs the stored source text"
         )
-    matched = match_doc_ids(spark, view, query_terms, conjunctive)
-    upd = docs.join(matched, "doc_id", "left_semi")
+    ids = matched_ids(spark, view, query_terms, conjunctive)
+    if not len(ids):
+        return None
+    cols = ["url", "warc_ts", "part_id", "row_offset", "source", "lang"]
+    if len(ids) <= DRIVER_BUILD_MAX_DOCS:
+        docs = view.docs_table(cols, filter=pc.field("doc_id").isin(pa.array(ids)))
+        # INT96 reads back as naive UTC: mark it UTC for the session. One
+        # chunk: createDataFrame drops the rows after an empty record batch
+        # (pyspark 4.1), and the filtered read yields one per pruned file
+        ts = docs.schema.get_field_index("warc_ts")
+        docs = docs.set_column(ts, "warc_ts", docs.column(ts).cast(pa.timestamp("us", "UTC")))
+        upd = spark.createDataFrame(docs.combine_chunks())
+    else:
+        upd = view.docs(spark).join(
+            spark.createDataFrame(pa.table({"doc_id": ids})), "doc_id", "left_semi")
     new_text = transform(F.col("source"))
     window = upd.select(
         "url", "warc_ts", "part_id", "row_offset",
         new_text.alias("extracted_text"),
         F.lit(None).cast("string").alias("extract_error"),
-        F.size(tokens(new_text)).cast("long").alias("n_tokens"),
         F.lit(None).cast("binary").alias("payload"),
-        *(["lang"] if "lang" in docs.columns else []),
+        "lang",
     )
-    # persist: the emptiness probe and the ingest body both consume the
-    # match->join->transform lineage; without this the postings scan +
-    # decode + live-join would run twice
-    window = window.persist()
-    try:
-        if window.limit(1).count() == 0:
-            return None
-        return process_window(
-            spark, view, window, batch_id, cfg=cfg, pre_extracted=True
-        )
-    finally:
-        window.unpersist()
+    return process_window(spark, view, window, batch_id, cfg=cfg, pre_extracted=True,
+                          max_rows=len(ids))
 
 
 def delete_by_ids(
@@ -181,16 +225,16 @@ def delete_by_ids(
     them not_found). Same tombstone-file + ledger commit as
     delete_by_query; the same read paths and merge reclaim apply.
 
-    Plan: the url IN list pushes into the doc-table scan (row-group
-    skipping via url min/max — the mget shape), then the version ranking
-    picks each url's live doc id. Bounded by the request size."""
+    Plan: the url IN list filters a driver read of the docs files'
+    (url, warc_ts, doc_id) (row-group skipping via url min/max — the mget
+    shape), then the version ranking picks each url's live doc id, with no
+    Spark job. Bounded by the request size."""
     if not urls:
         return 0
     view = store.view()
-    docs = view.docs(spark).where(F.col("url").isin(list(set(urls))))
-    live = view.live_docs(spark, docs)
-    matched = (live if live is not None else docs).select("doc_id")
+    docs = view.docs_table(["url", "warc_ts", "doc_id"],
+                           filter=pc.field("url").isin(sorted(set(urls))))
     return commit_tombstones(
-        spark, view, matched,
+        view, view.live_versions(docs),
         {"by": "ids", "n_requested": len(set(urls))},
     )

@@ -134,6 +134,11 @@ def main() -> None:
             for p, o in (kv.split(":") for kv in (args.offsets or "").split(",") if kv)
         }
 
+    # a bound on a window's rows: a bulk window goes to the distributed
+    # build with no driver collect
+    max_rows = args.rows_per_partition * args.source_partitions
+    if not args.corpus_parquet:
+        max_rows = min(max_rows, args.docs)
     results = run_ingest_loop(
         spark, store, source,
         rows_per_partition=args.rows_per_partition,
@@ -142,6 +147,7 @@ def main() -> None:
         max_batches=args.max_batches,
         stop_requested=lambda: stopping["flag"],
         cfg=cfg,
+        max_rows=max_rows,
     )
     for r in results:
         print(json.dumps(r.metrics))

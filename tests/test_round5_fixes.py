@@ -27,13 +27,17 @@ def _null_routed_pages(spark, n=90):
     return base.withColumn("routing", routed)
 
 
-def test_rollup_grand_total_with_null_routing(spark, tmp_path):
+def test_rollup_grand_total_with_null_routing(spark, tmp_path, monkeypatch):
     """ADVICE r04 (medium): with null-routing docs, rollup('routing') emits
     TWO routing=None rows (null subgroup + grand total); selecting the total
     by `routing IS NULL` picks one nondeterministically and can record the
     null subgroup's n_docs/sum_dl as segment totals, corrupting avgdl.
     grouping()==1 must select the true total in BOTH the window-strategy
-    ingest branch and the merge stats path."""
+    ingest branch and the merge stats path. The rollup is in the
+    distributed build, so the ingest runs with the driver build's cap at 0."""
+    import engine.ingest as ingest_mod
+
+    monkeypatch.setattr(ingest_mod, "DRIVER_BUILD_MAX_DOCS", 0)
     cfg = IndexConfig(routing_col="routing", docid_strategy="window")
     pages = _null_routed_pages(spark)
     src = as_partitioned_source(pages, 2)
