@@ -52,8 +52,17 @@ DOCS_SCHEMA_COLS = ["doc_id", "url", "doc_len", "warc_ts", "lang", "part_id", "r
 # micro-ingest file spans the whole vocabulary, so with the default a
 # 1-term read decoded every micro file whole. On one 62k-doc micro segment
 # (33 MB, 4-core host) a 1-term read took 38-76 ms at the default, 4-11 ms
-# at 1 MB, for 0.8% more bytes (45 row groups instead of 2).
-POSTINGS_ROW_GROUP_BYTES = 1 << 20
+# at 1 MB, for 0.8% more bytes (45 row groups instead of 2). 1 MB still
+# left every small segment one row group: a 2-term read of a 900-doc
+# segment (5,404 blocks) took 3.6 ms at 1 MB and 1.6 ms at 256 KB, and a
+# driver-merged 2,000-doc segment (one file) got 2 row groups at 1 MB and
+# 7 at 256 KB. At 256 KB the perfbench read p50 was no worse on query_serve
+# (5.76/5.56 -> 5.49/5.03 ms) or upsert_mix (6.65/6.16 -> 5.68/5.80 ms),
+# for 1-4% more store bytes. At bulk scale (an 80k-doc store built in two
+# 40k-doc Spark windows and Spark-merged, 32 range files) 256 KB gave 238
+# row groups instead of 65, +2.3% postings bytes, reader open 7.8 -> 8.9 ms
+# and refresh 6.7 -> 8.6 ms, and a 1-3 term search p50 62 -> 50 ms.
+POSTINGS_ROW_GROUP_BYTES = 1 << 18
 
 # Largest store, in docs rows (superseded versions included), whose
 # deleted set StoreView.deleted_doc_ids reads on the driver; a bigger one
@@ -106,19 +115,26 @@ def parquet_files(dirs) -> list[str]:
     return paths
 
 
-def read_parquet_files(paths: list[str], columns: list[str], filter=None):
-    """`columns` of the rows of Parquet files (matching `filter`, a pyarrow
-    expression) as one pyarrow Table, read on the driver; INT96 timestamps
-    come back in microseconds, as Spark reads them. The schema is the first
-    file's: a column it lacks cannot be read."""
+def read_parquet_files(paths: list[str], columns: list[str] | None, filter=None):
+    """`columns` (default: all) of the rows of Parquet files (matching
+    `filter`, a pyarrow expression) as one pyarrow Table, read on the
+    driver; INT96 timestamps come back in microseconds, as Spark reads
+    them. The schema is the first file's: a column it lacks cannot be read.
+    Files under routing= hive directories have a `routing` column, read
+    back from the directory names as Spark reads it (unescaped, null for
+    __HIVE_DEFAULT_PARTITION__)."""
     import pyarrow as pa
     import pyarrow.dataset as ds
 
     if not paths:
-        return pa.table({c: pa.array([], type=pa.null()) for c in columns})
+        return pa.table({c: pa.array([], type=pa.null()) for c in columns or []})
     fmt = ds.ParquetFileFormat(
         read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us"))
-    return ds.dataset(paths, format=fmt).to_table(columns=columns, filter=filter)
+    part = None
+    if any(os.path.basename(os.path.dirname(p)).startswith("routing=") for p in paths):
+        part = ds.partitioning(pa.schema([("routing", pa.string())]), flavor="hive")
+    return ds.dataset(paths, format=fmt, partitioning=part).to_table(
+        columns=columns, filter=filter)
 
 
 def write_parquet(table, directory: str, plain_cols=(), row_group_bytes: int | None = None,
@@ -476,12 +492,17 @@ class IndexStore:
         return written
 
     def write_segment_tables(self, segment_id: str, postings, docs, stats: dict,
-                             positions=None) -> None:
+                             positions=None, ranged: bool = False) -> None:
         """write_segment for pyarrow Tables built on the driver: (over)write
         one segment in the layout the Spark writers give it — postings
         sorted by (term, min_doc) in POSTINGS_ROW_GROUP_BYTES row groups,
         routed tables in routing= hive directories, and the positions
-        sidecar when given (sorted by (term, doc_id))."""
+        sidecar when given (sorted by (term, doc_id)). `ranged` (a merge
+        output) also writes the segment's term_stats table; a driver-written
+        postings file is one term-sorted file per routing value, so it has
+        the ranged layout already."""
+        import pyarrow as pa
+
         sp = self.segment_path(segment_id)
         shutil.rmtree(sp, ignore_errors=True)
         part = "routing" if "routing" in docs.column_names else None
@@ -490,6 +511,11 @@ class IndexStore:
             os.path.join(sp, "postings"), plain_cols=("term", "doc_bytes", "dl_bytes"),
             row_group_bytes=POSTINGS_ROW_GROUP_BYTES, partition_col=part,
         )
+        if ranged:
+            df = postings.group_by("term").aggregate([("n", "sum")])
+            write_parquet(pa.table({"term": df.column("term"),
+                                    "df": df.column("n_sum").cast(pa.int64())}).sort_by("term"),
+                          os.path.join(sp, "term_stats"))
         write_parquet(docs, os.path.join(sp, "docs"), plain_cols=("doc_id", "url", "source"),
                       partition_col=part)
         if positions is not None:
@@ -761,7 +787,7 @@ class StoreView:
             deleted = self.docs(spark).join(live.select("doc_id"), "doc_id", "left_anti")
             rows = deleted.select("doc_id").limit(cap + 1).collect()
             return None if len(rows) > cap else frozenset(r["doc_id"] for r in rows)
-        docs = self.docs_table(["url", "warc_ts", "doc_id"])
+        docs = self.table("docs", ["url", "warc_ts", "doc_id"])
         if docs.num_rows == 0:
             return frozenset()
         ids = np.asarray(docs.column("doc_id").to_numpy(), dtype=np.int64)
@@ -870,9 +896,11 @@ class StoreView:
         return PostingsFiles(parquet_files(
             os.path.join(self.store.segment_path(s), "postings") for s in self.segments))
 
-    def docs_table(self, columns: list[str], filter=None):
-        """`columns` of the segments' docs rows (matching `filter`, a
-        pyarrow expression), read on the driver with no Spark job."""
+    def table(self, sub: str, columns: list[str] | None = None, filter=None):
+        """`columns` (default: all, with `routing` on a routed store) of
+        the segments' `sub` files ("docs", "postings" or "positions")
+        rows matching `filter` (a pyarrow expression), read on the driver
+        with no Spark job."""
         return read_parquet_files(parquet_files(
-            os.path.join(self.store.segment_path(s), "docs") for s in self.segments
+            os.path.join(self.store.segment_path(s), sub) for s in self.segments
         ), columns, filter)

@@ -192,8 +192,12 @@ def update_by_query(
     if not len(ids):
         return None
     cols = ["url", "warc_ts", "part_id", "row_offset", "source", "lang"]
+    # a routed store keeps the routing value only as the docs' `routing`
+    # (hive directory) column: it re-enters as cfg.routing_col
+    route = cfg.routing_col if cfg.routing_col not in (None, *cols) else None
     if len(ids) <= DRIVER_BUILD_MAX_DOCS:
-        docs = view.docs_table(cols, filter=pc.field("doc_id").isin(pa.array(ids)))
+        docs = view.table("docs", cols + (["routing"] if route else []),
+                               filter=pc.field("doc_id").isin(pa.array(ids)))
         # INT96 reads back as naive UTC: mark it UTC for the session. One
         # chunk: createDataFrame drops the rows after an empty record batch
         # (pyspark 4.1), and the filtered read yields one per pruned file
@@ -210,6 +214,7 @@ def update_by_query(
         F.lit(None).cast("string").alias("extract_error"),
         F.lit(None).cast("binary").alias("payload"),
         "lang",
+        *([F.col("routing").alias(route)] if route else []),
     )
     return process_window(spark, view, window, batch_id, cfg=cfg, pre_extracted=True,
                           max_rows=len(ids))
@@ -232,7 +237,7 @@ def delete_by_ids(
     if not urls:
         return 0
     view = store.view()
-    docs = view.docs_table(["url", "warc_ts", "doc_id"],
+    docs = view.table("docs", ["url", "warc_ts", "doc_id"],
                            filter=pc.field("url").isin(sorted(set(urls))))
     return commit_tombstones(
         view, view.live_versions(docs),

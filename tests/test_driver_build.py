@@ -313,7 +313,7 @@ def test_job_counts_of_small_bulks(spark, tmp_path):
     assert len(jobs) == 1 and upd.n_docs > 0
     jobs, n_del = _jobs(spark, lambda: delete_by_query(spark, store, ["index"]))
     assert jobs == [] and n_del > 0
-    url = store.view().docs_table(["url"]).column("url")[0].as_py()
+    url = store.view().table("docs", ["url"]).column("url")[0].as_py()
     assert _jobs(spark, lambda: delete_by_ids(spark, store, [url])) == ([], 1)
     # superseded (the update) and tombstoned docs: the deleted set is
     # read on the driver at open and refresh
@@ -339,7 +339,7 @@ def test_update_rewrites_every_match_across_segments(spark, tmp_path):
     for _ in range(3):
         ingest_batch(spark, store, src, store.next_entry_id(), store.committed_offsets(), 5, cfg)
     view = store.view()
-    terms = [set().union(*map(py_tokenize, view.restrict([s]).docs_table(["source"])
+    terms = [set().union(*map(py_tokenize, view.restrict([s]).table("docs", ["source"])
                               .column("source").to_pylist())) for s in view.segments]
     term = sorted((terms[0] & terms[2]) - terms[1])[0]
     want = matched_ids(spark, view, [term])
@@ -426,5 +426,5 @@ def test_last_write_wins_tie_is_deterministic(spark, tmp_path, parts):
     store = IndexStore(str(tmp_path), f"tie{parts}", cfg=IndexConfig(store_source=True)).create()
     res = process_window(spark, store, pages, 0, cfg=IndexConfig(store_source=True))
     assert res.metrics["build_path"] == "driver"
-    src = store.view().docs_table(["url", "source"]).to_pylist()
+    src = store.view().table("docs", ["url", "source"]).to_pylist()
     assert [r["source"] for r in src if r["url"] == TIE_URL] == [win["text"]]

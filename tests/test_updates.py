@@ -275,3 +275,39 @@ def test_update_by_query_rewrite_follows_token_boundaries(spark):
     for r in rows:
         assert r["after"] == ["tensorx" if t == "vector" else t for t in r["before"]]
     assert sum(t == "vector" for r in rows for t in r["before"]) == 6
+
+
+@pytest.mark.parametrize("cap", [10_000, 0], ids=["driver", "spark"])
+def test_update_by_query_on_a_store_routed_by_region(spark, tmp_path, monkeypatch, cap):
+    """On a store routed by a column other than lang, the rewrite window
+    carries each doc's routing value: the new versions stay in their
+    routing partitions, on the driver build and the Spark build."""
+    import engine.ingest as ingest_mod
+
+    pages = webpages(spark, 40, partitions=2).withColumn(
+        "region", F.when(F.col("lang") == "en", F.lit("en:US")).otherwise(F.lit("eu")))
+    cfg = IndexConfig(routing_col="region", store_source=True)
+    store = IndexStore(str(tmp_path), "region", cfg=cfg).create()
+    run_ingest_loop(spark, store, as_partitioned_source(pages, 2), rows_per_partition=20,
+                    start_option=EARLIEST, cfg=cfg)
+    hwm = store.view().doc_id_hwm
+    reader = IndexReader(spark, store)
+    try:
+        monkeypatch.setattr(ingest_mod, "DRIVER_BUILD_MAX_DOCS", cap)
+        res = update_by_query(spark, store, ["spark"], lambda c: F.concat(c, F.lit(" zzupd")),
+                              batch_id=store.next_entry_id())
+        monkeypatch.undo()
+        assert res.n_docs > 0 and res.metrics["build_path"] == ("driver" if cap else "spark")
+        reader.refresh()
+        new = {r.doc_id for r in reader.search(["zzupd"], k=100).collect()}
+    finally:
+        reader.close()
+    docs = store.view().table("docs", ["url", "doc_id", "routing"]).to_pylist()
+    region = {}
+    for d in sorted(docs, key=lambda d: d["doc_id"]):
+        assert region.setdefault(d["url"], d["routing"]) == d["routing"], d
+    assert new == {d["doc_id"] for d in docs if d["doc_id"] >= hwm} and len(new) == res.n_docs
+    for r in ("en:US", "eu"):
+        want = {d["doc_id"] for d in docs if d["doc_id"] >= hwm and d["routing"] == r}
+        assert want
+        assert _ids(search_store(spark, store, ["zzupd"], k=100, routing=r)) == want
