@@ -69,16 +69,25 @@ def varint_decode(data: bytes) -> np.ndarray:
     raw = np.frombuffer(data, dtype=np.uint8)
     if raw[-1] & 0x80:
         raise ValueError("varint corruption: buffer ends mid-value")
-    is_end = (raw & 0x80) == 0
-    # value index of each byte: 0-based running count of terminators before it
-    val_idx = np.concatenate(([0], np.cumsum(is_end)[:-1]))
-    n_vals = int(is_end.sum())
-    starts = np.concatenate(([0], np.nonzero(is_end)[0][:-1] + 1))
-    pos = np.arange(len(raw)) - starts[val_idx]
-    vals = np.zeros(n_vals, dtype=np.uint64)
-    np.bitwise_or.at(
-        vals, val_idx, (raw & np.uint8(0x7F)).astype(np.uint64) << (np.uint64(7) * pos.astype(np.uint64))
-    )
+    ends = np.flatnonzero(raw < 0x80)
+    starts = np.empty_like(ends)
+    starts[0] = 0
+    starts[1:] = ends[:-1] + 1
+    if int((ends - starts).max()) >= 10:
+        # a uint64 takes at most 10 bytes; a longer run of continuation
+        # bytes would also cost one pass per byte below
+        raise ValueError("varint corruption: value longer than 10 bytes")
+    # one pass per byte position, over the values that still have a byte
+    # there: most values are 1-2 bytes, so this touches each byte once
+    # instead of scattering every byte with bitwise_or.at
+    vals = (raw[starts] & np.uint8(0x7F)).astype(np.uint64)
+    idx = np.flatnonzero(ends > starts)
+    b = 1
+    while idx.size:
+        at = starts[idx] + b
+        vals[idx] |= (raw[at] & np.uint8(0x7F)).astype(np.uint64) << np.uint64(7 * b)
+        idx = idx[ends[idx] > at]
+        b += 1
     return vals
 
 

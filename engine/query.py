@@ -559,9 +559,12 @@ class IndexReader:
     as `Hits`, rows on the driver, never a Spark DataFrame. A `search` /
     `search_wand` call makes no Spark or JVM call: it reads its candidate
     blocks (query and must_not terms) on the driver from the pinned
-    segments' postings Parquet files, whose footers were read at open, so
-    row groups whose term min/max excludes every query term are skipped;
-    the read stops past GATHER_MAX_BLOCKS rows. exact_topk_blocks then
+    segments' postings Parquet files through the view's PostingsFiles,
+    which the reader keeps: footers were read at open, so row groups whose
+    term min/max excludes every query term are skipped, and a row group
+    read once stays decoded in the reader's bounded cache, so a repeat
+    query reads nothing from disk; the read returns at most
+    GATHER_MAX_BLOCKS + 1 rows. exact_topk_blocks then
     decodes, scores and ranks the Arrow table in numpy. df comes from the
     read blocks, and superseded docs drop out by a binary search over the
     sorted deleted set. `df_for_terms` sums block `n` from the same kind
@@ -577,8 +580,9 @@ class IndexReader:
     sidecar.
 
     Concurrent callers (bench/soak.py threads) are safe: a call keeps its
-    blocks in locals, the lazy caches are built under a lock, and the only
-    other shared mutable state is the per-term df memo."""
+    blocks in locals, the lazy caches are built under a lock, the
+    row-group cache has its own, and the only other shared mutable state
+    is the per-term df memo."""
 
     def __init__(self, spark: SparkSession, store, cfg: IndexConfig = DEFAULT_CONFIG):
         self.spark = spark
@@ -655,13 +659,14 @@ class IndexReader:
                     c.unpersist()
                     setattr(self, attr, None)
 
-    def _gather(self, terms: set[str]) -> pa.Table | None:
+    def _gather(self, terms: set[str], stats_out: dict | None = None) -> pa.Table | None:
         """The blocks of `terms`, read on the driver, or None when the
         deleted set overflowed or there are more than GATHER_MAX_BLOCKS
-        blocks (the caller then runs the distributed plan)."""
+        blocks (the caller then runs the distributed plan). `stats_out`
+        gets the read's row-group counts (PostingsFiles.read)."""
         if self._deleted_overflow:
             return None
-        tbl = self._postings_files.read(terms, _GATHER_COLS, GATHER_MAX_BLOCKS + 1)
+        tbl = self._postings_files.read(terms, _GATHER_COLS, GATHER_MAX_BLOCKS + 1, stats_out)
         return None if tbl.num_rows > GATHER_MAX_BLOCKS else tbl
 
     def search(
@@ -745,8 +750,9 @@ class IndexReader:
         `stats_out` (evidence/debug) is filled from the same execution. On
         the driver: candidate_blocks = candidate_block_ranges =
         blocks_scored (every block read is scored), num_ranges 1,
-        candidate_postings, and "strategy" = "exact_driver" ("exact_auto"
-        under strategy="auto")."""
+        candidate_postings, "strategy" = "exact_driver" ("exact_auto"
+        under strategy="auto"), and the read's row groups: row_groups_read
+        from disk and row_groups_cached from the reader's memory."""
         if strategy not in ("wand", "auto"):
             raise ValueError(f"strategy must be 'wand' or 'auto', got {strategy!r}")
         st = stats_out if stats_out is not None else {}
@@ -755,7 +761,7 @@ class IndexReader:
             st["fallback_exact"] = True
             st["strategy"] = "exact_fallback"
             return self._search_distributed(q_terms, k)
-        blocks = self._gather(set(q_terms))
+        blocks = self._gather(set(q_terms), st)
         if blocks is None:
             return self._wand_distributed(q_terms, k, stats_out, strategy)
         n = blocks.num_rows

@@ -36,8 +36,13 @@ import json
 import os
 import shutil
 import tempfile
+import threading
+from bisect import bisect_left, bisect_right
+from collections import OrderedDict
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import asdict, dataclass, field, replace
 from functools import cached_property
+from typing import NamedTuple
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -63,6 +68,18 @@ DOCS_SCHEMA_COLS = ["doc_id", "url", "doc_len", "warc_ts", "lang", "part_id", "r
 # row groups instead of 65, +2.3% postings bytes, reader open 7.8 -> 8.9 ms
 # and refresh 6.7 -> 8.6 ms, and a 1-3 term search p50 62 -> 50 ms.
 POSTINGS_ROW_GROUP_BYTES = 1 << 18
+
+# Bytes of decoded postings (columns plus the term lists binary search
+# runs on) that one PostingsFiles, so one IndexReader view, keeps in
+# memory. A perfbench store is ~2 MB decoded and fits whole. On an 80k-doc
+# store (jobs/build_index.py --docs 80000 --merge-factor 2: 13 files, 229
+# row groups), two passes of a perfbench query stream (seed 7001, 720
+# searches) touch 113 row groups (28 MB). At 0 / 8 / 16 / 32 / 64 MB,
+# 0 / 75 / 86 / 97 / 97% of the row groups a search needed were in
+# memory, search p50 was 11.8 / 10.6 / 10.1 / 10.3 / 10.3 ms (17.6 ms with
+# the dataset scan this cache replaced), and the driver's RSS after the
+# stream was 141 / 150 / 155 / 164 / 164 MB (4-core host).
+POSTINGS_CACHE_BYTES = 32 << 20
 
 # Largest store, in docs rows (superseded versions included), whose
 # deleted set StoreView.deleted_doc_ids reads on the driver; a bigger one
@@ -198,67 +215,212 @@ class LedgerEntry:
     metrics: dict = field(default_factory=dict)
 
 
+class _RowGroup(NamedTuple):
+    """A cached postings row group: its decoded columns (`term` always among
+    them), its terms as a list of str, for binary search, and a bound on
+    the bytes that list holds."""
+
+    cols: dict
+    terms: list
+    terms_nbytes: int
+
+    @property
+    def nbytes(self) -> int:
+        return self.terms_nbytes + sum(a.get_total_buffer_size() for a in self.cols.values())
+
+
+def _sorted_terms(term) -> tuple[list, int]:
+    """A postings row group's `term` column as a list of str, for binary
+    search, and a bound on the bytes the list holds. Raises ValueError if
+    the column is not sorted by term (every writer sorts it, and a binary
+    search would miss rows)."""
+    import pyarrow.compute as pc
+
+    n = len(term)
+    if term.null_count:
+        raise ValueError("postings row group has a null term")
+    # Arrow compares strings by UTF-8 bytes: code point order, as str does
+    if n > 1 and pc.any(pc.less(term.slice(1), term.slice(0, n - 1))).as_py():
+        raise ValueError("postings row group is not sorted by term")
+    utf8 = pc.sum(pc.binary_length(term)).as_py() or 0
+    chars = pc.sum(pc.utf8_length(term)).as_py() or 0
+    # a str and its list slot take 57 bytes plus 1 a char when ASCII, and
+    # at most 88 plus 4 a char otherwise
+    nbytes = 56 + (57 * n + utf8 if chars == utf8 else 88 * n + 4 * chars)
+    return term.to_numpy(zero_copy_only=False).tolist(), nbytes
+
+
+# Reads the row groups one query misses in several files concurrently, one
+# file a task. Threads start on first use.
+_FILE_READS = ThreadPoolExecutor(max_workers=4, thread_name_prefix="postings-read")
+
+
 class PostingsFiles:
-    """A fixed set of postings Parquet files, read on the driver. Every
-    footer is read once, here, and the term min/max of every row group is
-    kept: a read opens only the row groups whose term range holds a
-    requested term (postings are written sorted by term, so a merged
+    """A fixed set of postings Parquet files, read on the driver, with the
+    decoded row groups it has read kept in memory.
+
+    Every footer is read once, here, and the term min/max of every row
+    group is kept: a read opens only the row groups whose term range holds
+    a requested term (postings are written sorted by term, so a merged
     segment's files hold disjoint term ranges). A row group with no term
-    statistics is always read. Immutable after construction, so concurrent
-    reads are safe."""
+    statistics (or a bound dropped for its length) is always read. A row
+    group is read from disk once, only the requested columns plus `term`
+    (a later read that needs more columns reads just those), and kept
+    decoded in an LRU of at most POSTINGS_CACHE_BYTES, with its sorted
+    terms as a list of str: a term's rows are found by binary search. A
+    row group that is not sorted by term (no writer makes one) fails the
+    read.
+
+    The files are immutable, so the cache is never stale. Reads from
+    several threads are safe: the cache is guarded by a lock, and each
+    file is opened once, on its first read, and read under its own lock;
+    the files one read misses are read concurrently."""
 
     def __init__(self, paths: list[str]) -> None:
-        import pyarrow.dataset as ds
-        from pyarrow.fs import LocalFileSystem
+        import pyarrow.parquet as pq
 
         if not paths:
             raise ValueError("no postings files to read")
-        self._format = ds.ParquetFileFormat()
-        self._fs = LocalFileSystem()
-        self._frags = [self._format.make_fragment(p, self._fs) for p in paths]
-        rg_frag, rg_ids, lo, hi = [], [], [], []
-        for f, frag in enumerate(self._frags):
-            frag.ensure_complete_metadata()
-            md = frag.metadata
+        self._paths = list(paths)
+        self._meta = [pq.read_metadata(p) for p in self._paths]
+        self._schema = self._meta[0].schema.to_arrow_schema()
+        rg_file, rg_ids, lo, hi = [], [], [], []
+        for f, md in enumerate(self._meta):
             col = md.schema.names.index("term")
             for i in range(md.num_row_groups):
                 st = md.row_group(i).column(col).statistics
                 known = st is not None and st.has_min_max
-                rg_frag.append(f)
+                rg_file.append(f)
                 rg_ids.append(i)
                 lo.append(st.min if known else "")
-                hi.append(st.max if known else "\U0010ffff")
-        self._rg_frag = np.array(rg_frag, dtype=np.int64)
+                # pyarrow writes no min/max value past 4 KB (a long token)
+                # and reads it back as "": an empty max is unknown, and an
+                # empty min prunes nothing already
+                hi.append(st.max if known and st.max else "\U0010ffff")
+        self._rg_file = np.array(rg_file, dtype=np.int64)
         self._rg_ids = np.array(rg_ids, dtype=np.int64)
         self._lo = np.array(lo, dtype=str)
         self._hi = np.array(hi, dtype=str)
+        self._files = [None] * len(self._paths)  # ParquetFile, opened on first read
+        self._file_locks = [threading.Lock() for _ in self._paths]
+        self._lock = threading.Lock()
+        self._cache: OrderedDict[int, _RowGroup] = OrderedDict()  # row group -> columns
+        self._cached_bytes = 0
 
-    def read(self, terms, columns, limit: int | None = None):
+    def read(self, terms, columns, limit: int | None = None, stats_out: dict | None = None):
         """`columns` of the rows whose term is in `terms`, as a pyarrow
-        Table; at most `limit` rows when given. Only columns every file has
-        may be read (the schema is the first file's)."""
+        Table of one chunk, in file, row group and row order; at most
+        `limit` rows when given. Only columns every file has may be read
+        (the types are the first file's). `stats_out` gets row_groups_read
+        (from disk) and row_groups_cached (served from memory)."""
         import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.dataset as ds
 
-        ts = np.array(sorted(set(terms)), dtype=str)
+        q_terms = sorted(set(terms))
+        # numpy's str dtype drops trailing NULs: fine for pruning, which
+        # only widens, but rows are matched on the exact terms
+        ts = np.array(q_terms, dtype=str)
         if ts.size:
             # a row group may hold a term iff the first term >= its min is <= its max
             first = ts[np.minimum(np.searchsorted(ts, self._lo), ts.size - 1)]
-            hit = (first >= self._lo) & (first <= self._hi)
+            hits = np.flatnonzero((first >= self._lo) & (first <= self._hi)).tolist()
         else:
-            hit = np.zeros(self._lo.shape, dtype=bool)
-        hit_frag, hit_ids = self._rg_frag[hit], self._rg_ids[hit]
-        frags = [self._frags[f].subset(row_group_ids=hit_ids[hit_frag == f].tolist())
-                 for f in np.unique(hit_frag)]
-        dataset = ds.FileSystemDataset(frags, self._frags[0].physical_schema,
-                                       self._format, self._fs)
-        # the row groups are pruned already, so is_in only filters rows
-        scanner = dataset.scanner(
-            columns=list(columns),
-            filter=pc.field("term").isin(pa.array(ts.tolist(), type=pa.string())),
-        )
-        return scanner.to_table() if limit is None else scanner.head(limit)
+            hits = []
+        want = ["term", *(c for c in columns if c != "term")]
+        rgs, n_read = self._row_groups(hits, want)
+        if stats_out is not None:
+            stats_out.update(row_groups_read=n_read, row_groups_cached=len(hits) - n_read)
+        pieces: dict[str, list] = {c: [] for c in columns}
+        n = 0
+        for rg in rgs:
+            # the query terms in order: in a row group sorted by term, their
+            # rows come in row order
+            for t in q_terms:
+                s = bisect_left(rg.terms, t)
+                e = bisect_right(rg.terms, t, s)
+                if limit is not None:
+                    e = min(e, s + limit - n)
+                if e > s:
+                    for c in columns:
+                        pieces[c].append(rg.cols[c].slice(s, e - s))
+                    n += e - s
+        return pa.table({
+            c: pa.concat_arrays(p) if p else pa.array([], self._schema.field(c).type)
+            for c, p in pieces.items()
+        })
+
+    def _row_groups(self, hits: list[int], columns: list[str]) -> tuple[list[_RowGroup], int]:
+        """The row groups `hits` with at least `columns` decoded, and how
+        many were read from disk: the cached ones come from memory, the
+        rest are read (one call per file, of the columns the cache lacks,
+        the files concurrently) and cached."""
+        with self._lock:
+            rgs = [self._cache.get(i) for i in hits]
+            for i, rg in zip(hits, rgs):
+                if rg is not None:
+                    self._cache.move_to_end(i)
+
+        def lacks(rg) -> list[str]:
+            return [c for c in columns if rg is None or c not in rg.cols]
+
+        miss = [k for k, rg in enumerate(rgs) if lacks(rg)]
+        reads = []  # (file, positions in hits, row group ids, columns)
+        for f in sorted({int(self._rg_file[hits[k]]) for k in miss}):
+            ks = [k for k in miss if self._rg_file[hits[k]] == f]
+            need = [c for c in columns if any(c in lacks(rgs[k]) for k in ks)]
+            reads.append((f, ks, [int(self._rg_ids[hits[k]]) for k in ks], need))
+        if len(reads) > 1:
+            tables = list(_FILE_READS.map(lambda r: self._read_file(r[0], r[2], r[3]), reads))
+        else:
+            tables = [self._read_file(f, ids, need) for f, _, ids, need in reads]
+        for (f, ks, ids, _), tbl in zip(reads, tables):
+            start = 0
+            for k, rid in zip(ks, ids):
+                rows = self._meta[f].row_group(rid).num_rows
+                rgs[k] = self._insert(hits[k], rgs[k], tbl.slice(start, rows), len(ks) > 1)
+                start += rows
+        return rgs, len(miss)
+
+    def _read_file(self, f: int, ids: list[int], columns: list[str]):
+        """`columns` of row groups `ids` of file `f`, in one call."""
+        import pyarrow.parquet as pq
+
+        with self._file_locks[f]:
+            if self._files[f] is None:
+                self._files[f] = pq.ParquetFile(self._paths[f], metadata=self._meta[f])
+            # one call per file, threaded: on the query_serve store's hit
+            # sets (1.6 row groups a search) it took 0.74 ms p50, against
+            # 0.91 ms unthreaded and 1.08 ms one call per row group (4-core
+            # host)
+            return self._files[f].read_row_groups(ids, columns=columns, use_threads=True)
+
+    def _insert(self, i: int, old: _RowGroup | None, part, shared: bool) -> _RowGroup:
+        """Cache row group `i`: `old`'s columns plus those of `part` (a
+        pyarrow Table of its rows, `shared` when it is a slice of a read of
+        several row groups), evicting the least recently used row groups
+        past POSTINGS_CACHE_BYTES."""
+        import pyarrow as pa
+
+        cols = dict(old.cols) if old is not None else {}
+        for c in part.column_names:
+            chunks = part.column(c).chunks
+            # a shared slice is copied out of the buffers the other row
+            # groups of its read hold, so evicting it frees its bytes
+            arr = chunks[0] if len(chunks) == 1 and not shared else pa.concat_arrays(chunks)
+            want = self._schema.field(c).type
+            cols[c] = arr if arr.type == want else arr.cast(want)
+        if old is not None:
+            rg = old._replace(cols=cols)
+        else:
+            rg = _RowGroup(cols, *_sorted_terms(cols["term"]))
+        with self._lock:
+            prev = self._cache.pop(i, None)
+            if prev is not None:
+                self._cached_bytes -= prev.nbytes
+            self._cache[i] = rg
+            self._cached_bytes += rg.nbytes
+            while self._cached_bytes > POSTINGS_CACHE_BYTES:
+                self._cached_bytes -= self._cache.popitem(last=False)[1].nbytes
+        return rg
 
 
 class IndexStore:

@@ -26,9 +26,34 @@ def test_varint_roundtrip(xs):
 
 
 def test_varint_boundaries():
-    edges = [0, 1, 127, 128, 16383, 16384, 2**21 - 1, 2**21, 2**35, 2**63 - 1]
+    edges = [0, 1, 127, 128, 16383, 16384, 2**21 - 1, 2**21, 2**35, 2**63 - 1,
+             2**63, 2**64 - 1]
     arr = np.array(edges, dtype=np.uint64)
     assert varint_decode(varint_encode(arr)).tolist() == edges
+    # the 10-byte values next to 1-byte ones, in both orders
+    mixed = [0, 2**64 - 1, 127, 2**63, 128, 0]
+    assert varint_decode(varint_encode(np.array(mixed, dtype=np.uint64))).tolist() == mixed
+    assert varint_encode(np.array([2**64 - 1], dtype=np.uint64)) == b"\xff" * 9 + b"\x01"
+
+
+def test_varint_random_multibyte_and_errors():
+    rng = np.random.default_rng(65)
+    # every byte length 1..10, in random order
+    bits = rng.integers(0, 65, size=20_000)
+    v = (rng.integers(0, 2**63, size=bits.size, dtype=np.uint64) << np.uint64(1)
+         | rng.integers(0, 2, size=bits.size, dtype=np.uint64))
+    v = np.where(bits == 64, v, v & ((np.uint64(1) << bits.astype(np.uint64)) - np.uint64(1)))
+    out = varint_decode(varint_encode(v))
+    assert out.dtype == np.uint64 and np.array_equal(out, v)
+    assert varint_decode(b"").dtype == np.uint64 and varint_decode(b"").size == 0
+    cut = varint_encode(np.append(v, np.uint64(2**64 - 1)))[:-1]
+    for bad in (b"\x80", b"\x05\xff", cut):
+        with pytest.raises(ValueError, match="mid-value"):
+            varint_decode(bad)
+    for bad in (b"\x80" * 10 + b"\x00", b"\x01" + b"\x80" * 1_000_000 + b"\x00"):
+        with pytest.raises(ValueError, match="longer than 10 bytes"):
+            varint_decode(bad)
+    assert varint_decode(b"\x80" * 9 + b"\x01").tolist() == [2**63]
 
 
 @given(
