@@ -211,7 +211,6 @@ def phrase_scores_from_positions(
     avgdl: float,
     phrase: list[str],
     cfg: IndexConfig = DEFAULT_CONFIG,
-    excluded_doc_ids=frozenset(),
 ) -> DataFrame:
     """Core match_phrase executor over a positions relation
     (term, doc_id, n_pos, pos_blob[, ...]) -> the UN-truncated, un-rounded
@@ -220,9 +219,8 @@ def phrase_scores_from_positions(
     index term contributions (one expression tree per formula).
 
     `doc_len_df`: (doc_id, doc_len) for the docs allowed in RESULTS (the
-    caller restricts it to live docs as needed). `excluded_doc_ids`: a
-    bounded driver-side superseded set applied as a NOT IN literal (the
-    IndexReader path). Scoring matches engine.phrase.bm25_phrase_topk
+    caller restricts it to live docs as needed: the join on it is the only
+    exclusion of superseded docs). Scoring matches engine.phrase.bm25_phrase_topk
     (tf := phrase frequency, idf := summed member-term idfs) with
     df/n_docs/avgdl from the caller's stored stats.
     """
@@ -298,12 +296,6 @@ def phrase_scores_from_positions(
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).cast("long").alias("ptf"))
     )
-    if excluded_doc_ids:
-        # bounded superseded set as a NOT IN literal (IndexReader path —
-        # same shape as the reader's exact/WAND exclusion)
-        ptf = ptf.where(
-            ~F.col("doc_id").isin([int(d) for d in excluded_doc_ids])
-        )
 
     denom = F.col("ptf") + F.lit(cfg.k1) * (
         F.lit(1.0 - cfg.b) + F.lit(cfg.b) * F.col("doc_len") / F.lit(float(avgdl))
@@ -327,14 +319,12 @@ def phrase_topk_from_positions(
     phrase: list[str],
     k: int = 10,
     cfg: IndexConfig = DEFAULT_CONFIG,
-    excluded_doc_ids=frozenset(),
 ) -> DataFrame:
     """round + top-k by (score desc, doc_id asc) over
     phrase_scores_from_positions (the shared store phrase relation)."""
     return (
         phrase_scores_from_positions(
-            spark, positions, doc_len_df, n_docs, avgdl, phrase,
-            cfg=cfg, excluded_doc_ids=excluded_doc_ids,
+            spark, positions, doc_len_df, n_docs, avgdl, phrase, cfg=cfg,
         )
         .select(
             "doc_id", F.round(F.col("raw_score"), SCORE_DECIMALS).alias("score")
@@ -357,7 +347,8 @@ def search_store_phrase(
     cross-segment semantics: superseded docs are excluded from RESULTS via
     the live-docs join, while df/n_docs/avgdl come from the stored
     per-segment stats (which include superseded docs until a merge expunges
-    them — exactly Lucene/ES deleted-doc behavior)."""
+    them — exactly Lucene/ES deleted-doc behavior). IndexReader.search_phrase
+    runs this plan on the reader's view."""
     view = store.view()
     if not view.has_positions:
         raise ValueError(

@@ -35,12 +35,8 @@ from pyspark.sql import functions as F
 from engine.analysis import tokens
 from engine.codecs import decode_doc_ids_batch, decode_posting_blocks_batch
 from engine.config import SCORE_DECIMALS, TOKEN_PATTERN, IndexConfig, DEFAULT_CONFIG
+from engine.segments import block_dfs
 from engine.wand import _idf, bm25_tf_norm, keep_not_in, sorted_ids, spark_round
-
-# Largest superseded-doc set expressed as a literal NOT IN filter; beyond
-# this the exact path switches to a broadcast anti-join (a plan with 10^5+
-# literals chokes Catalyst long before max_deleted_driver's 10^6 cap).
-MAX_EXCLUDED_LITERALS = 10_000
 
 # Most candidate blocks IndexReader reads to the driver for one query
 # (~7.7M postings at block_size 128); a query with more blocks runs the
@@ -223,7 +219,6 @@ def index_term_contribs(
     query_terms: list[str],
     cfg: IndexConfig = DEFAULT_CONFIG,
     live_docs: DataFrame | None = None,
-    excluded_doc_ids=None,
     codec: str = "varint",
 ) -> DataFrame:
     """Per-(doc, matched term) BM25 contributions from a prebuilt
@@ -241,18 +236,6 @@ def index_term_contribs(
     dfreq = term_stats(cand)  # df(t) = sum of block n per term — exact
     if live_docs is not None:
         tf = tf.join(live_docs.select("doc_id"), "doc_id", "left_semi")
-    elif excluded_doc_ids:
-        # literal NOT IN only for sets small enough to live in the plan; a
-        # big set becomes a broadcast anti-join (same semantics, no
-        # million-literal Catalyst expression)
-        if len(excluded_doc_ids) <= MAX_EXCLUDED_LITERALS:
-            tf = tf.where(~F.col("doc_id").isin(list(excluded_doc_ids)))
-        else:
-            spark = tf.sparkSession
-            dead = spark.createDataFrame(
-                [(int(d),) for d in excluded_doc_ids], "doc_id long"
-            )
-            tf = tf.join(F.broadcast(dead), "doc_id", "left_anti")
 
     matched = tf.join(F.broadcast(dfreq), "term")
     idf = F.log(
@@ -276,7 +259,6 @@ def bm25_topk_from_index(
     cfg: IndexConfig = DEFAULT_CONFIG,
     conjunctive: bool = False,
     live_docs: DataFrame | None = None,
-    excluded_doc_ids=None,
     codec: str = "varint",
     min_should_match: int | None = None,
     must_not_terms: list[str] | None = None,
@@ -292,10 +274,7 @@ def bm25_topk_from_index(
     `postings`: POSTINGS_SCHEMA block rows (engine.postings); doc lengths
     travel inside the blocks (dl_bytes), so scoring needs NO doc-table join.
     n_docs/avgdl come from index stats. `live_docs` (doc_id) optionally
-    restricts results to non-superseded docs (multi-segment upsert, D10);
-    `excluded_doc_ids` (a bounded driver-side set of superseded ids) is the
-    cheap complement — a NOT IN literal filter instead of a semi-join, the
-    same mechanism the WAND executor uses. Pass one or the other.
+    restricts results to non-superseded docs (multi-segment upsert, D10).
 
     The term filter uses isin() so a Parquet-backed postings table gets
     predicate pushdown + row-group skipping (postings are written sorted by
@@ -303,7 +282,7 @@ def bm25_topk_from_index(
     """
     per_doc = index_term_contribs(
         postings, n_docs, avgdl, query_terms, cfg=cfg, live_docs=live_docs,
-        excluded_doc_ids=excluded_doc_ids, codec=codec,
+        codec=codec,
     ).groupBy("doc_id").agg(
         F.sum("contrib").alias("raw_score"),
         F.count(F.lit(1)).alias("n_terms_matched"),
@@ -377,20 +356,9 @@ def search_store(
         # e.g. "bigint"), or the derived shard silently misses
         routing = routing_for(spark, routing_key, num_shards,
                               dtype=routing_key_dtype)
-    view = store.view()
-    stats = view.stats(routing)
-    return bm25_topk_from_index(
-        view.postings(spark, routing),
-        stats["n_docs"],
-        stats["avgdl"],
-        query_terms,
-        k=k,
-        cfg=cfg,
-        conjunctive=conjunctive,
-        live_docs=view.live_docs(spark, view.docs(spark, routing)),
-        codec=view.codec,
-        min_should_match=min_should_match,
-        must_not_terms=must_not_terms,
+    return _store_topk(
+        spark, store.view(), routing, query_terms, k, cfg, conjunctive,
+        min_should_match=min_should_match, must_not_terms=must_not_terms,
     )
 
 
@@ -416,15 +384,34 @@ def search_via_alias(
     side, never on the stats."""
     view = store.view()
     spec = view.store.alias_spec(alias)
-    routing = spec.get("routing")
+    col = spec.get("filter_col")
+    return _store_topk(
+        spark, view, spec.get("routing"), query_terms, k, cfg, conjunctive,
+        doc_filter=None if col is None else F.col(col) == F.lit(spec["filter_val"]),
+    )
+
+
+def _store_topk(
+    spark: SparkSession,
+    view,
+    routing: str | None,
+    query_terms: list[str],
+    k: int,
+    cfg: IndexConfig,
+    conjunctive: bool,
+    min_should_match: int | None = None,
+    must_not_terms: list[str] | None = None,
+    doc_filter=None,
+) -> DataFrame:
+    """bm25_topk_from_index over `view`'s segments (one routing partition
+    with `routing`): that partition's stats and postings, results
+    restricted to its live docs and, with `doc_filter` (a Column over the
+    docs), to the docs it accepts — a non-scoring filter."""
     stats = view.stats(routing)
     docs = view.docs(spark, routing)
-    restrict = view.live_docs(spark, docs)
-    if spec.get("filter_col") is not None:
-        base = restrict if restrict is not None else docs
-        restrict = base.where(
-            F.col(spec["filter_col"]) == F.lit(spec["filter_val"])
-        )
+    live = view.live_docs(spark, docs)
+    if doc_filter is not None:
+        live = (docs if live is None else live).where(doc_filter)
     return bm25_topk_from_index(
         view.postings(spark, routing),
         stats["n_docs"],
@@ -433,8 +420,10 @@ def search_via_alias(
         k=k,
         cfg=cfg,
         conjunctive=conjunctive,
-        live_docs=restrict,
+        live_docs=live,
         codec=view.codec,
+        min_should_match=min_should_match,
+        must_not_terms=must_not_terms,
     )
 
 
@@ -550,37 +539,37 @@ def exact_topk_blocks(
 class IndexReader:
     """Query server over a persisted index: a StoreView plus reads on the
     driver. The reader holds the view taken at open (one ledger read), and
-    stats, the deleted-doc set, the postings files and every lazily cached
-    relation come from it. A commit after the open stays invisible until
-    `refresh()`, which takes a new view.
+    stats, the deleted-doc set, the postings files and every search come
+    from it. A commit after the open stays invisible until `refresh()`,
+    which takes a new view.
 
     This is the searcher/reader split Lucene makes (ES holds an
     IndexSearcher open across requests). Every search returns its top-k
     as `Hits`, rows on the driver, never a Spark DataFrame. A `search` /
     `search_wand` call makes no Spark or JVM call: it reads its candidate
     blocks (query and must_not terms) on the driver from the pinned
-    segments' postings Parquet files through the view's PostingsFiles,
-    which the reader keeps: footers were read at open, so row groups whose
-    term min/max excludes every query term are skipped, and a row group
-    read once stays decoded in the reader's bounded cache, so a repeat
-    query reads nothing from disk; the read returns at most
-    GATHER_MAX_BLOCKS + 1 rows. exact_topk_blocks then
-    decodes, scores and ranks the Arrow table in numpy. df comes from the
-    read blocks, and superseded docs drop out by a binary search over the
-    sorted deleted set. `df_for_terms` sums block `n` from the same kind
-    of read.
+    segments' postings Parquet files through the view's PostingsFiles:
+    footers were read at open, so row groups whose term min/max excludes
+    every query term are skipped, and a row group read once stays decoded
+    in the view's bounded cache, so a repeat query reads nothing from
+    disk; the read returns at most GATHER_MAX_BLOCKS + 1 rows.
+    exact_topk_blocks then decodes, scores and ranks the Arrow table in
+    numpy. df comes from the read blocks, and superseded docs drop out by
+    a binary search over the sorted deleted set. `df_for_terms` sums
+    block `n` from the same kind of read (engine.segments.block_dfs).
 
-    Two cases keep the distributed plans (bm25_topk_from_index /
-    wand_topk, as search_store* run them), collected into `Hits` inside
-    the call: a query with more than GATHER_MAX_BLOCKS blocks, and a
-    deleted set that overflowed cfg.max_deleted_driver (a live-docs join).
-    `search_phrase` collects its phrase plan the same way. The Spark
-    relations they need (postings, live docs) are cached on first use, as
-    are the term stats behind `search_fuzzy` / `suggest` and the phrase
-    sidecar.
+    Every other search runs the store plan of its shape on the reader's
+    view and collects it into `Hits` inside the call: search_store /
+    search_store_wand for a query with more than GATHER_MAX_BLOCKS blocks
+    or a deleted set that overflowed cfg.max_deleted_driver (superseded
+    docs then drop out by the plans' live-docs join), and
+    search_store_phrase for `search_phrase`. The view computes its
+    deleted set and postings files once, so these plans reuse the
+    reader's. The term stats behind `search_fuzzy` / `suggest` are the one
+    Spark relation the reader caches, on first use.
 
     Concurrent callers (bench/soak.py threads) are safe: a call keeps its
-    blocks in locals, the lazy caches are built under a lock, the
+    blocks in locals, the term-stats cache is built under a lock, the
     row-group cache has its own, and the only other shared mutable state
     is the per-term df memo."""
 
@@ -594,56 +583,33 @@ class IndexReader:
     def _open(self) -> None:
         self._view = self.store.view()
         self.stats = self._view.stats()
-        self._postings_files = self._view.postings_files()
         self._df_memo: dict[str, int] = {}
-        # Spark relations, cached on first use (see _cached)
-        self._postings_cache = None  # distributed fallbacks
         self._term_stats_cache = None  # search_fuzzy / suggest
-        self._live_cache = None  # overflow fallback
-        self._positions_cache = None  # search_phrase
-        self._doc_len_cache = None  # search_phrase
         # superseded/tombstoned ids; too many to hold on the driver ->
-        # queries run the distributed plans until a merge shrinks the set
+        # queries run the store plans until a merge shrinks the set
         deleted = self._view.deleted_doc_ids(self.spark, self.cfg.max_deleted_driver)
         self._deleted_overflow = deleted is None
         self.deleted = deleted or frozenset()
         self._deleted_sorted = sorted_ids(self.deleted)
 
-    def _cached(self, attr: str, build) -> DataFrame:
-        """The relation in `attr`, or `build()` cached, materialized and
-        stored there on first use. The lock keeps concurrent callers from
-        building it twice."""
-        with self._lock:
-            df = getattr(self, attr)
-            if df is None:
-                df = build().cache()
-                df.count()
-                setattr(self, attr, df)
-            return df
-
-    def _postings_df(self) -> DataFrame:
-        return self._cached(
-            "_postings_cache", lambda: self._view.postings(self.spark)
-        )
-
     def _term_stats_df(self) -> DataFrame:
         # a DataFrame, never collected whole: a web-scale vocabulary is
-        # 10^8+ terms and would OOM the driver
-        return self._cached(
-            "_term_stats_cache",
-            lambda: self._view.term_stats_df(self.spark),
-        )
+        # 10^8+ terms and would OOM the driver. Cached and materialized on
+        # first use; the lock keeps concurrent callers from building it twice
+        with self._lock:
+            if self._term_stats_cache is None:
+                df = self._view.term_stats_df(self.spark).cache()
+                df.count()
+                self._term_stats_cache = df
+            return self._term_stats_cache
 
     def df_for_terms(self, terms: list[str]) -> dict[str, int]:
         """Per-term document frequencies: block `n` summed per term (what
         term_stats persists), read on the driver and memoized."""
         missing = {t for t in terms if t not in self._df_memo}
         if missing:
-            tbl = self._postings_files.read(missing, ("term", "n"))
-            sums = tbl.group_by("term").aggregate([("n", "sum")])
-            found = dict(zip(sums["term"].to_pylist(), sums["n_sum"].to_pylist()))
-            for t in missing:
-                self._df_memo[t] = int(found.get(t, 0))
+            self._df_memo.update(
+                block_dfs(self._view.postings_files.read(missing, ("term", "n")), missing))
         return {t: self._df_memo[t] for t in set(terms)}
 
     def refresh(self) -> None:
@@ -652,21 +618,19 @@ class IndexReader:
 
     def close(self) -> None:
         with self._lock:
-            for attr in ("_postings_cache", "_term_stats_cache", "_live_cache",
-                         "_positions_cache", "_doc_len_cache"):
-                c = getattr(self, attr)
-                if c is not None:
-                    c.unpersist()
-                    setattr(self, attr, None)
+            if self._term_stats_cache is not None:
+                self._term_stats_cache.unpersist()
+                self._term_stats_cache = None
 
     def _gather(self, terms: set[str], stats_out: dict | None = None) -> pa.Table | None:
         """The blocks of `terms`, read on the driver, or None when the
         deleted set overflowed or there are more than GATHER_MAX_BLOCKS
-        blocks (the caller then runs the distributed plan). `stats_out`
-        gets the read's row-group counts (PostingsFiles.read)."""
+        blocks (the caller then runs the store plan). `stats_out` gets the
+        read's row-group counts (PostingsFiles.read)."""
         if self._deleted_overflow:
             return None
-        tbl = self._postings_files.read(terms, _GATHER_COLS, GATHER_MAX_BLOCKS + 1, stats_out)
+        tbl = self._view.postings_files.read(
+            terms, _GATHER_COLS, GATHER_MAX_BLOCKS + 1, stats_out)
         return None if tbl.num_rows > GATHER_MAX_BLOCKS else tbl
 
     def search(
@@ -679,15 +643,18 @@ class IndexReader:
     ) -> Hits:
         """Exact BM25 top-k as driver rows: one driver read of the query's
         (and must_not) blocks, scored on the driver (exact_topk_blocks),
-        with no Spark or JVM call. `min_should_match` / `must_not_terms`:
+        with no Spark or JVM call; search_store on the reader's view past
+        the driver read's limits. `min_should_match` / `must_not_terms`:
         ES bool semantics (see bm25_topk)."""
         q_terms = sorted(set(query_terms))
         neg = sorted(set(must_not_terms or ()))
         blocks = self._gather(set(q_terms) | set(neg))
         if blocks is None:
-            return self._search_distributed(
-                q_terms, k, conjunctive, min_should_match, neg
-            )
+            return Hits(search_store(
+                self.spark, self._view, q_terms, k=k, cfg=self.cfg,
+                conjunctive=conjunctive, min_should_match=min_should_match,
+                must_not_terms=neg or None,
+            ).collect())
         return self._exact_blocks(
             blocks, q_terms, k, conjunctive, min_should_match, neg
         )
@@ -703,34 +670,6 @@ class IndexReader:
             must_not_terms=must_not_terms,
         )
 
-    def _search_distributed(
-        self, q_terms, k, conjunctive=False, min_should_match=None,
-        must_not_terms=None,
-    ) -> Hits:
-        """bm25_topk_from_index on the postings cache, collected. Superseded
-        docs are excluded via the bounded driver-side set (a NOT IN literal)
-        or, when it overflowed, by a live-docs join built once and cached."""
-        return Hits(bm25_topk_from_index(
-            self._postings_df(),
-            self.stats["n_docs"],
-            self.stats["avgdl"],
-            q_terms,
-            k=k,
-            cfg=self.cfg,
-            conjunctive=conjunctive,
-            live_docs=self._live_docs_df(),
-            excluded_doc_ids=None if self._deleted_overflow else self.deleted,
-            codec=self._view.codec,
-            min_should_match=min_should_match,
-            must_not_terms=must_not_terms or None,
-        ).collect())
-
-    def _live_docs_df(self):
-        if not self._deleted_overflow:
-            return None  # bounded set rides excluded_doc_ids instead
-        return self._cached(
-            "_live_cache", lambda: self._view.live_docs(self.spark).select("doc_id"))
-
     def search_wand(
         self,
         query_terms: list[str],
@@ -745,25 +684,27 @@ class IndexReader:
         beat the block-max scan at every block count measured (see
         GATHER_MAX_BLOCKS), so the scan (wand_topk) and the
         `strategy="auto"` cost model (engine.wand.wand_is_cheaper) run
-        only in the distributed fallbacks (see the class docstring).
+        only in search_store_wand, the fallback (see the class docstring).
 
         `stats_out` (evidence/debug) is filled from the same execution. On
         the driver: candidate_blocks = candidate_block_ranges =
         blocks_scored (every block read is scored), num_ranges 1,
         candidate_postings, "strategy" = "exact_driver" ("exact_auto"
         under strategy="auto"), and the read's row groups: row_groups_read
-        from disk and row_groups_cached from the reader's memory."""
+        from disk and row_groups_cached from the reader's memory. In the
+        fallback: what search_store_wand reports."""
         if strategy not in ("wand", "auto"):
             raise ValueError(f"strategy must be 'wand' or 'auto', got {strategy!r}")
         st = stats_out if stats_out is not None else {}
         q_terms = sorted(set(query_terms))
-        if self._deleted_overflow:
-            st["fallback_exact"] = True
-            st["strategy"] = "exact_fallback"
-            return self._search_distributed(q_terms, k)
         blocks = self._gather(set(q_terms), st)
         if blocks is None:
-            return self._wand_distributed(q_terms, k, stats_out, strategy)
+            from engine.wand import search_store_wand
+
+            return Hits(search_store_wand(
+                self.spark, self._view, q_terms, k=k, cfg=self.cfg,
+                stats_out=stats_out, strategy=strategy,
+            ).collect())
         n = blocks.num_rows
         # on the driver the cost-based choice is always the exact scorer
         st.update(
@@ -773,34 +714,6 @@ class IndexReader:
             candidate_postings=int(blocks.column("n").to_numpy().sum()),
         )
         return self._exact_blocks(blocks, q_terms, k)
-
-    def _wand_distributed(self, q_terms, k, stats_out, strategy) -> Hits:
-        """wand_topk over the postings cache, collected, with dfs from
-        df_for_terms (the auto choice too)."""
-        from engine.wand import wand_is_cheaper, wand_topk
-
-        st = stats_out if stats_out is not None else {}
-        df_map = self.df_for_terms(q_terms)
-        if strategy == "auto":
-            st["candidate_postings"] = int(sum(df_map.values()))
-            if not wand_is_cheaper(df_map, self.cfg):
-                st["strategy"] = "exact_auto"
-                return self._search_distributed(q_terms, k)
-            st["strategy"] = "wand_auto"
-        return Hits(wand_topk(
-            self.spark,
-            self._postings_df(),
-            self.stats["n_docs"],
-            self.stats["avgdl"],
-            df_map,
-            q_terms,
-            k=k,
-            cfg=self.cfg,
-            doc_id_hwm=self._view.doc_id_hwm,
-            excluded_doc_ids=self.deleted or None,
-            codec=self._view.codec,
-            stats_out=stats_out,
-        ).collect())
 
     def search_fuzzy(
         self,
@@ -845,41 +758,14 @@ class IndexReader:
         )
 
     def search_phrase(self, phrase: list[str], k: int = 10) -> Hits:
-        """ES match_phrase from the held-open reader (query-server mode).
+        """ES match_phrase from the held-open reader (query-server mode):
+        engine.positions.search_store_phrase on the reader's view,
+        collected — the pinned segments' positions sidecars, superseded
+        docs dropped by the live-docs join."""
+        from engine.positions import search_store_phrase
 
-        First phrase query lazily caches the positions sidecar union and a
-        (doc_id, doc_len) projection of the pinned segments, so repeat
-        phrase queries never re-read parquet footers. Result-identical to
-        engine.positions.search_store_phrase: superseded docs are excluded
-        via the bounded driver-side set (NOT IN literal) or, on overflow,
-        by restricting the cached doc-len projection to live docs."""
-        from engine.positions import phrase_topk_from_positions
-
-        if not self._view.has_positions:
-            raise ValueError(
-                f"index {self.store.name}: no positions sidecar on every "
-                "live segment (build with IndexConfig(store_positions=True) "
-                "to serve phrase queries)"
-            )
-        def doc_lens():
-            docs = self._view.docs(self.spark)
-            if self._deleted_overflow:
-                docs = self._view.live_docs(self.spark, docs)
-            return docs.select("doc_id", "doc_len")
-
-        return Hits(phrase_topk_from_positions(
-            self.spark,
-            self._cached("_positions_cache",
-                         lambda: self._view.positions(self.spark)),
-            self._cached("_doc_len_cache", doc_lens),
-            int(self.stats["n_docs"]),
-            float(self.stats["avgdl"]),
-            phrase,
-            k=k,
-            cfg=self.cfg,
-            excluded_doc_ids=frozenset()
-            if self._deleted_overflow
-            else self.deleted,
+        return Hits(search_store_phrase(
+            self.spark, self._view, phrase, k=k, cfg=self.cfg
         ).collect())
 
 

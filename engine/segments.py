@@ -423,6 +423,15 @@ class PostingsFiles:
         return rg
 
 
+def block_dfs(blocks, terms) -> dict[str, int]:
+    """Document frequency of each of `terms`: block `n` summed per term
+    over `blocks` (a PostingsFiles.read of at least term and n), 0 for a
+    term with no block. Equal to the df term_stats persists."""
+    sums = blocks.group_by("term").aggregate([("n", "sum")])
+    found = dict(zip(sums["term"].to_pylist(), sums["n_sum"].to_pylist()))
+    return {t: int(found.get(t, 0)) for t in set(terms)}
+
+
 class IndexStore:
     """One named index on disk. All mutation goes through ledger commits."""
 
@@ -785,8 +794,9 @@ class StoreView:
     view to what it calls (`StoreView.view()` returns the view itself).
 
     `restrict(segments)` narrows the segments, keeping the entries (merge
-    inputs). Properties that read segment stats or the filesystem are
-    computed once per view."""
+    inputs). Properties that read segment stats or the filesystem, the
+    deleted set (per cap) and the postings files are computed once per
+    view."""
 
     store: IndexStore
     entries: tuple[LedgerEntry, ...]
@@ -935,13 +945,22 @@ class StoreView:
                                      [docs.column("warc_ts"), docs.column("doc_id")])]
         return latest[~np.isin(latest, self.tombstoned_ids)]
 
+    @cached_property
+    def _deleted_by_cap(self) -> dict:
+        return {}
+
     def deleted_doc_ids(self, spark: SparkSession, cap: int) -> frozenset | None:
         """Ids of the docs that are not live (superseded or tombstoned), for
         exclusion on the driver; None when there are more than `cap`. Up to
         DELETED_DRIVER_MAX_DOCS docs rows it is read on the driver from the
         docs files' (url, warc_ts, doc_id) and the tombstone files, with no
         Spark job; a bigger store runs the live-docs anti-join in Spark and
-        collects at most cap + 1 ids."""
+        collects at most cap + 1 ids. Computed once per view and cap."""
+        if cap not in self._deleted_by_cap:
+            self._deleted_by_cap[cap] = self._deleted_doc_ids(spark, cap)
+        return self._deleted_by_cap[cap]
+
+    def _deleted_doc_ids(self, spark: SparkSession, cap: int) -> frozenset | None:
         if len(self.segments) < 2 and not self.active_deletes:
             return frozenset()
         if self.stats()["n_docs"] > DELETED_DRIVER_MAX_DOCS:
@@ -1050,9 +1069,11 @@ class StoreView:
         df = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
         return df.groupBy("term").agg(F.sum("df").cast("long").alias("df"))
 
+    @cached_property
     def postings_files(self) -> PostingsFiles:
         """The postings Parquet files of the segments, for reads on the
-        driver with no Spark job."""
+        driver with no Spark job; one per view, so every read through the
+        view shares its footers and row-group cache."""
         if not self.segments:
             raise ValueError(f"index {self.store.name} has no live segments")
         return PostingsFiles(parquet_files(

@@ -83,7 +83,7 @@ def matched_ids(spark: SparkSession, view: StoreView, query_terms: list[str],
 
     q_terms = sorted(set(query_terms))
     deleted = view.deleted_doc_ids(spark, view.store.cfg.max_deleted_driver)
-    blocks = view.postings_files().read(q_terms, ("n", "doc_bytes"), GATHER_MAX_BLOCKS + 1)
+    blocks = view.postings_files.read(q_terms, ("n", "doc_bytes"), GATHER_MAX_BLOCKS + 1)
     if deleted is None or blocks.num_rows > GATHER_MAX_BLOCKS:
         ids = _match_distributed(spark, view, q_terms, conjunctive).toArrow().column(0)
         return np.sort(np.asarray(ids.to_numpy(), dtype=np.int64))

@@ -255,8 +255,8 @@ def wand_topk(
 ) -> DataFrame:
     """Block-max top-k over POSTINGS_SCHEMA blocks.
 
-    `df_by_term`: per-term document frequencies for the query terms (from the
-    index's term_stats — a driver-side dict; query terms are few).
+    `df_by_term`: per-term document frequencies for the query terms (a
+    driver-side dict; query terms are few).
     `excluded_doc_ids`: superseded docs to skip (Lucene live-docs analog;
     see search_store_wand). Rank-identical to the exact path (tested) but
     decodes only the blocks that can still enter the top-k.
@@ -334,7 +334,6 @@ def wand_topk(
     if stats_out is not None:
         # evidence/debug path (tools/wand_skip_stats.py): extra actions that
         # re-run the scan — never taken by queries (stats_out=None default)
-        stats_out["candidate_blocks"] = cand.count()
         stats_out["candidate_block_ranges"] = with_rng.count()
         stats_out["blocks_scored"] = int(
             local.groupBy("rng")
@@ -389,39 +388,39 @@ def search_store_wand(
     `strategy`: "wand" always runs the block-max scan; "auto" is the
     cost-based choice (wand_is_cheaper): WAND runs only for queries of at
     most cfg.wand_auto_max_terms terms whose per-term candidate postings
-    (df from term_stats, known before any scan) reach
-    cfg.wand_auto_min_postings_per_term; otherwise the fully vectorized
-    exact path is cheaper and is taken instead. Both paths are
-    rank-identical (tested), so the switch is invisible in results;
-    stats_out["strategy"] records which plan actually ran.
+    (df, known before any scan) reach cfg.wand_auto_min_postings_per_term;
+    otherwise the fully vectorized exact path is cheaper and is taken
+    instead. Both paths are rank-identical (tested), so the switch is
+    invisible in results; stats_out["strategy"] records which plan
+    actually ran.
+
+    df comes from the view's postings files, read on the driver (block
+    `n` summed per term, engine.segments.block_dfs), with no Spark job;
+    the same read gives stats_out its candidate_blocks and
+    candidate_postings.
     """
     from engine.query import search_store
+    from engine.segments import block_dfs
 
     if strategy not in ("wand", "auto"):
         raise ValueError(f"strategy must be 'wand' or 'auto', got {strategy!r}")
     view = store.view()
     q_terms = sorted(set(query_terms))
-    df_map = {
-        r["term"]: r["df"]
-        for r in view.term_stats_df(spark).where(F.col("term").isin(q_terms)).collect()
-    }
-    df_map = {t: df_map.get(t, 0) for t in q_terms}
+    st = stats_out if stats_out is not None else {}
+    blocks = view.postings_files.read(q_terms, ("term", "n"))
+    df_map = block_dfs(blocks, q_terms)
+    st.update(candidate_blocks=blocks.num_rows,
+              candidate_postings=sum(df_map.values()))
     if strategy == "auto":
-        if stats_out is not None:
-            stats_out["candidate_postings"] = int(sum(df_map.values()))
         if not wand_is_cheaper(df_map, cfg):
-            if stats_out is not None:
-                stats_out["strategy"] = "exact_auto"
+            st["strategy"] = "exact_auto"
             return search_store(spark, view, q_terms, k=k, cfg=cfg)
-        if stats_out is not None:
-            stats_out["strategy"] = "wand_auto"
+        st["strategy"] = "wand_auto"
     excluded = view.deleted_doc_ids(spark, cfg.max_deleted_driver)
     if excluded is None:
         # superseded set too big to ship to every task — fall back to the
         # fully distributed exact path (same results) until a merge runs
-        if stats_out is not None:
-            stats_out["fallback_exact"] = True
-            stats_out["strategy"] = "exact_fallback"
+        st.update(fallback_exact=True, strategy="exact_fallback")
         return search_store(spark, view, q_terms, k=k, cfg=cfg)
     stats = view.stats()
     return wand_topk(

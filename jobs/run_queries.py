@@ -145,8 +145,8 @@ def main() -> None:
             ap.error("--routing-key requires --num-shards")
         args.routing = routing_for(spark, args.routing_key, args.num_shards,
                                    dtype=args.routing_key_type)
-    # query-server mode: open the index once (cached postings, resolved
-    # stats/live-docs), serve all queries from the held-open reader
+    # query-server mode: open the index once (one view: stats, deleted
+    # set, postings footers), serve all queries from the held-open reader
     direct = args.routing is None and args.alias is None
     reader = IndexReader(spark, store) if direct else None
 
@@ -176,8 +176,8 @@ def main() -> None:
         for _ in range(args.repeat):
             t0 = time.perf_counter()
             # phrase forbids --routing/--alias (checked above), so the
-            # held-open reader always exists here: repeat queries hit the
-            # cached positions/doc-len projections, not parquet footers
+            # held-open reader always exists here: its pinned view answers
+            # every repeat
             rows = reader.search_phrase(phrase, k=args.k).collect()
             lats.append((time.perf_counter() - t0) * 1000)
         print(json.dumps({

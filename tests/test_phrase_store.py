@@ -135,11 +135,10 @@ def test_store_phrase_excludes_superseded(spark, tmp_path):
 
 
 def test_reader_phrase_matches_store_path(spark, tmp_path):
-    """IndexReader.search_phrase (held-open reader: cached positions +
-    doc-len projections) is result-identical to search_store_phrase —
-    including superseded-doc exclusion via the reader's bounded NOT IN
-    set, the overflow fallback (live-docs-restricted doc-len cache), and
-    refresh() after a merge."""
+    """IndexReader.search_phrase (search_store_phrase on the held-open
+    reader's view) is result-identical to search_store_phrase — with a
+    bounded deleted set, an overflowed one, and after refresh() past a
+    merge."""
     from engine.query import IndexReader
 
     cfg = IndexConfig(store_positions=True)
@@ -162,17 +161,17 @@ def test_reader_phrase_matches_store_path(spark, tmp_path):
 
     reader = IndexReader(spark, store, cfg=cfg)
     try:
-        assert not reader._deleted_overflow  # bounded NOT IN path
+        assert not reader._deleted_overflow  # bounded deleted set
         got = [(r["doc_id"], r["score"]) for r in
                reader.search_phrase(PH, k=10).collect()]
         assert got == ref
-        # repeat query serves from the cached projections: same result
+        # a repeat query gives the same result
         assert [(r["doc_id"], r["score"]) for r in
                 reader.search_phrase(PH, k=10).collect()] == ref
     finally:
         reader.close()
 
-    # overflow path: cap=0 forces the distributed live-docs restriction
+    # overflow: cap=0 leaves the deleted set off the driver
     cfg0 = IndexConfig(store_positions=True, max_deleted_driver=0)
     reader0 = IndexReader(spark, store, cfg=cfg0)
     try:

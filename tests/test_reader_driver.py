@@ -11,6 +11,7 @@ import itertools
 import json
 import math
 import os
+from dataclasses import replace
 
 import pytest
 from pyspark.sql import functions as F
@@ -280,42 +281,57 @@ def test_df_for_terms_matches_term_stats_without_spark_caches(
         assert reader.df_for_terms(terms[:2]) == {t: want[t] for t in terms[:2]}
         reader.search(terms, k=10).collect()
         reader.search_wand(terms, k=10).collect()
-        assert reader._postings_cache is None
         assert reader._term_stats_cache is None
         reader.suggest("engin").collect()
         assert reader._term_stats_cache is not None
-        assert reader._postings_cache is None
         monkeypatch.setattr(query_mod, "GATHER_MAX_BLOCKS", 1)
         reader.search(terms, k=10).collect()  # the distributed fallback
-        assert reader._postings_cache is not None
     finally:
         reader.close()
-    assert reader._term_stats_cache is None and reader._postings_cache is None
+    assert reader._term_stats_cache is None
 
 
-def test_reader_pins_its_ledger_state_until_refresh(spark, tmp_path):
-    store = IndexStore(str(tmp_path), "pin").create()
+@pytest.mark.parametrize("plan", ["driver", "gather_cap", "overflow"])
+def test_reader_pins_its_ledger_state_until_refresh(spark, tmp_path, monkeypatch, plan):
+    """The driver path, and the store plans the fallbacks run on the
+    reader's view (past GATHER_MAX_BLOCKS, or with an overflowed deleted
+    set), answer from the state the reader opened on until refresh()."""
+    cfg = IndexConfig(store_positions=True)
+    if plan == "overflow":
+        cfg = replace(cfg, max_deleted_driver=0)
+    if plan == "gather_cap":
+        monkeypatch.setattr(query_mod, "GATHER_MAX_BLOCKS", 1)
+    store = IndexStore(str(tmp_path), "pin", cfg=cfg).create()
     first = ["alpha beta", "beta gamma", "alpha alpha delta", "gamma"]
-    run_ingest_loop(spark, store, as_partitioned_source(
-        _pages(spark, first), num_partitions=2), rows_per_partition=4)
-    terms = ["alpha", "omega"]
+    # ingested twice: the first copies are superseded, so the deleted set
+    # is not empty (and overflows a cap of 0)
+    for _ in range(2):
+        run_ingest_loop(spark, store, as_partitioned_source(
+            _pages(spark, first), num_partitions=2), rows_per_partition=4,
+            start_option=EARLIEST, cfg=cfg)
+    terms, phrase = ["alpha", "omega"], ["alpha", "omega"]
     before = _rows(search_store(spark, store, terms, k=10))
-    reader = IndexReader(spark, store)
+    reader = IndexReader(spark, store, cfg=cfg)
     try:
+        assert reader._deleted_overflow == (plan == "overflow")
         assert _rows(reader.search(terms, k=10)) == before
+        assert _rows(reader.search_phrase(phrase, k=10)) == []
         # a commit after the open, with new docs holding the query terms
         more = ["alpha omega", "omega omega beta", "alpha"]
         run_ingest_loop(spark, store, as_partitioned_source(
             _pages(spark, more, url_base=100), num_partitions=2),
-            rows_per_partition=4, start_option=EARLIEST)
+            rows_per_partition=4, start_option=EARLIEST, cfg=cfg)
         after = _rows(search_store(spark, store, terms, k=10))
-        assert after != before
+        after_phrase = _rows(search_store_phrase(spark, store, phrase, k=10))
+        assert after != before and after_phrase
         assert _rows(reader.search(terms, k=10)) == before
         assert _rows(reader.search_wand(terms, k=10)) == before
+        assert _rows(reader.search_phrase(phrase, k=10)) == []
         assert reader.df_for_terms(["omega"]) == {"omega": 0}
         reader.refresh()
         assert _rows(reader.search(terms, k=10)) == after
         assert _rows(reader.search_wand(terms, k=10)) == after
+        assert _rows(reader.search_phrase(phrase, k=10)) == after_phrase
         assert reader.df_for_terms(["omega"]) == {"omega": 2}
     finally:
         reader.close()
@@ -353,6 +369,56 @@ def test_gather_cap_falls_back_to_distributed_plans(spark, tmp_path, monkeypatch
         assert len(calls) == 5
     finally:
         overflow.close()
+
+
+def test_reader_phrase_runs_the_store_phrase_plan(spark, tmp_path, monkeypatch):
+    """search_phrase is search_store_phrase on the reader's view: the
+    superseded docs drop out by its live-docs join, never by a literal of
+    the deleted set in the plan."""
+    import engine.positions as positions_mod
+
+    store = _build(spark, str(tmp_path), "varint", merged=False)
+    phrase = ["index", "spark"]
+    want = search_store_phrase(spark, store, phrase, k=10).collect()
+    calls = []
+    real = positions_mod.search_store_phrase
+    monkeypatch.setattr(positions_mod, "search_store_phrase",
+                        lambda *a, **kw: calls.append(a[1]) or real(*a, **kw))
+    reader = IndexReader(spark, store)
+    try:
+        assert reader.deleted and _hit_rows(reader.search_phrase(phrase, k=10)) == want
+        assert calls == [reader._view]
+    finally:
+        reader.close()
+
+
+def test_store_wand_stats_out_takes_candidates_from_the_driver_read(
+        spark, tmp_path, monkeypatch):
+    """search_store_wand reads df and the candidate counts on the driver:
+    building its plan runs no Spark job but Parquet schema reads, and
+    stats_out adds only the scan's two actions (block-range replicas and
+    blocks scored), not a count of the candidate blocks."""
+    def plan_jobs(fn):
+        return [names for _, names in _jobs(spark, fn)
+                if not all(n.startswith("parquet at") for n in names)]
+
+    store = _build(spark, str(tmp_path), "varint", merged=True)
+    terms = ["engine", "spark"]
+    assert plan_jobs(lambda: search_store_wand(spark, store, terms, k=10)) == []
+    actions = []
+    frame = type(spark.range(1))
+    for name in ("count", "collect"):
+        real = getattr(frame, name)
+        monkeypatch.setattr(frame, name, lambda self, _n=name, _f=real:
+                            actions.append(_n) or _f(self))
+    st: dict = {}
+    scan_jobs = plan_jobs(lambda: search_store_wand(spark, store, terms, k=10, stats_out=st))
+    monkeypatch.undo()
+    assert sorted(actions) == ["collect", "count"] and scan_jobs
+    blocks = store.postings(spark).where(F.col("term").isin(terms)).select("n").collect()
+    assert st["candidate_blocks"] == len(blocks)
+    assert st["candidate_postings"] == sum(r["n"] for r in blocks)
+    assert st["candidate_block_ranges"] >= len(blocks) and st["blocks_scored"] >= 1
 
 
 def test_concurrent_searches_match_sequential(spark, store):

@@ -308,58 +308,6 @@ def test_create_and_alias_one_call(tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# IndexReader exact path: superseded docs excluded via the bounded driver-side
-# set (no per-query live-docs window); overflow builds ONE cached live-docs DF
-# ---------------------------------------------------------------------------
-
-
-def test_reader_exact_path_deleted_set_and_overflow_cache(spark, tmp_path):
-    from engine.config import IndexConfig
-    from engine.query import IndexReader, search_store
-
-    src = as_partitioned_source(webpages(spark, 80, partitions=2), 2)
-    store = IndexStore(str(tmp_path), "rd").create()
-    run_ingest_loop(spark, store, src, rows_per_partition=20,
-                    start_option=EARLIEST)
-    # re-ingest from EARLIEST: every doc re-indexed into new segments with
-    # higher doc_ids -> the first copies become superseded (cross-segment
-    # upsert, D10), so the reader actually has a non-empty deleted set
-    run_ingest_loop(spark, store, src, rows_per_partition=20,
-                    start_option=EARLIEST)
-    assert len(store.live_segments()) > 1
-    terms = ["engine", "spark"]
-    want = [(r["doc_id"], r["score"])
-            for r in search_store(spark, store, terms, k=10).collect()]
-
-    # bounded set: exact search uses excluded_doc_ids, never a live-docs DF
-    reader = IndexReader(spark, store)
-    try:
-        assert reader.deleted and not reader._deleted_overflow
-        assert reader._live_docs_df() is None
-        got = [(r["doc_id"], r["score"])
-               for r in reader.search(terms, k=10).collect()]
-        assert got == want
-        assert reader._live_cache is None  # never built on this path
-    finally:
-        reader.close()
-
-    # overflow: distributed live-docs join, built once and cached
-    reader = IndexReader(spark, store, cfg=IndexConfig(max_deleted_driver=0))
-    try:
-        assert reader._deleted_overflow
-        got = [(r["doc_id"], r["score"])
-               for r in reader.search(terms, k=10).collect()]
-        assert got == want
-        first = reader._live_cache
-        assert first is not None
-        reader.search(terms, k=10).collect()
-        assert reader._live_cache is first  # reused, not re-derived
-    finally:
-        reader.close()
-    assert reader._live_cache is None  # close() released it
-
-
-# ---------------------------------------------------------------------------
 # pfor codec: store-level rank-identity with varint across every query path
 # ---------------------------------------------------------------------------
 
@@ -411,41 +359,6 @@ def test_ingest_resolves_codec_from_store_meta(spark, tmp_path):
     # decoding the blocks as pfor works (i.e. they WERE written as pfor)
     n = decode_postings(store.postings(spark), codec="pfor").count()
     assert n > 0
-
-
-def test_reader_big_deleted_set_uses_anti_join_not_literals(spark):
-    # a deleted set past MAX_EXCLUDED_LITERALS must not become a 10^5-literal
-    # Catalyst expression — same results via broadcast anti-join
-    from engine.postings import build_posting_blocks_local
-    from engine.query import MAX_EXCLUDED_LITERALS, bm25_topk_from_index
-
-    docs = webpages(spark, 120, partitions=2).select(
-        F.col("row_id").alias("doc_id"), "text"
-    )
-    blocks = build_posting_blocks_local(docs).cache()
-    terms = ["engine", "spark"]
-    small = frozenset(range(5))
-    # same LIVE exclusions as `small`, padded past the literal threshold
-    # with ids that do not exist in the index (>= 120)
-    big = small | frozenset(range(1000, 1000 + MAX_EXCLUDED_LITERALS + 50))
-    assert len(big) > MAX_EXCLUDED_LITERALS
-    kw = dict(n_docs=120, avgdl=60.0, query_terms=terms, k=10)
-    via_literals = [
-        (r["doc_id"], r["score"])
-        for r in bm25_topk_from_index(
-            blocks, excluded_doc_ids=small, **kw
-        ).collect()
-    ]
-    via_join = [
-        (r["doc_id"], r["score"])
-        for r in bm25_topk_from_index(blocks, excluded_doc_ids=big, **kw).collect()
-    ]
-    assert via_literals and via_join == via_literals
-    assert all(d not in small for d, _ in via_join)
-    plan = bm25_topk_from_index(
-        blocks, excluded_doc_ids=big, **kw
-    )._jdf.queryExecution().optimizedPlan().toString()
-    assert "LeftAnti" in plan  # big set became a join, not 10^4+ literals
 
 
 def test_default_custom_reaches_unledgered_partitions(spark, source, store):
