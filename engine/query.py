@@ -25,29 +25,33 @@ Plan shape / scale notes:
 
 from __future__ import annotations
 
+import sys
 import threading
+from collections import OrderedDict
+from typing import NamedTuple
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from engine.analysis import tokens
-from engine.codecs import decode_doc_ids_batch, decode_posting_blocks_batch
+from engine import segments
+from engine.codecs import decode_posting_blocks_batch
 from engine.config import SCORE_DECIMALS, TOKEN_PATTERN, IndexConfig, DEFAULT_CONFIG
-from engine.segments import block_dfs
 from engine.wand import _idf, bm25_tf_norm, keep_not_in, sorted_ids, spark_round
 
-# Most candidate blocks IndexReader reads to the driver for one query
-# (~7.7M postings at block_size 128); a query with more blocks runs the
-# distributed exact / WAND plans instead. Re-timed with the driver read on
-# a 1M-doc store (2 merged segments, local[4], 4-core host), medians of 3,
-# read / whole search: 8 / 39 ms at 64 blocks, 15 / 408 ms at 7,809, 65 /
-# 1,243 ms at 29,963 and 142 / 2,960 ms at 59,946, where the distributed
-# exact plan took 6,319 ms. Scoring, not the read, dominates past ~1k
-# blocks, the crossover is still not reached, and the cap stays at the
-# largest size measured. It also bounds what one query holds on the
-# driver: peak driver RSS was ~0.95 GB after the 59,946-block queries.
+# Most candidate blocks IndexReader scores on the driver for one query,
+# counted over its terms whether their memo entries hold them or a read
+# brings them (~7.7M postings at block_size 128); a query with more blocks
+# runs the distributed exact / WAND plans instead. Re-timed with the
+# driver read on a 1M-doc store (2 merged segments, local[4], 4-core
+# host), medians of 3, read / whole search: 8 / 39 ms at 64 blocks, 15 /
+# 408 ms at 7,809, 65 / 1,243 ms at 29,963 and 142 / 2,960 ms at 59,946,
+# where the distributed exact plan took 6,319 ms. Scoring, not the read,
+# dominates past ~1k blocks, the crossover is still not reached, and the
+# cap stays at the largest size measured. It also bounds what one query
+# holds on the driver: peak driver RSS was ~0.95 GB after the 59,946-block
+# queries.
 GATHER_MAX_BLOCKS = 60_000
 
 # block columns the driver scorer reads
@@ -473,65 +477,144 @@ def topk_rounded(doc_ids: np.ndarray, raw: np.ndarray, k: int) -> Hits:
     return Hits(zip(doc_ids[order].tolist(), scores[order].tolist()))
 
 
-def _term_codes(block_terms: np.ndarray, terms: list[str]) -> np.ndarray:
-    """Each block's index into sorted(set(terms)), or -1 where the block's
-    term is not one of them."""
-    ts = np.array(sorted(set(terms)), dtype=object)
-    if not len(ts):
-        return np.full(len(block_terms), -1, dtype=np.int64)
-    code = np.searchsorted(ts, block_terms)
-    code[code == len(ts)] = 0
-    return np.where(ts[code] == block_terms, code, -1)
+class _Scored(NamedTuple):
+    """One term scored over a reader view: its block count, its df (block
+    `n` summed, superseded and tombstoned docs included, as term_stats
+    counts), the ids of its live postings (int64) with their BM25
+    contributions (float64), and the footer-pruned row groups a read of
+    the term opens."""
+
+    blocks: int
+    df: int
+    ids: np.ndarray
+    contrib: np.ndarray
+    row_groups: np.ndarray
+
+    @property
+    def nbytes(self) -> int:
+        return sum(sys.getsizeof(a) for a in (self.ids, self.contrib, self.row_groups))
 
 
-def exact_topk_blocks(
-    blocks: pa.Table,
-    n_docs: int,
-    avgdl: float,
-    query_terms: list[str],
-    k: int = 10,
-    cfg: IndexConfig = DEFAULT_CONFIG,
-    excluded: np.ndarray | None = None,
-    codec: str = "varint",
+class _TermMemo:
+    """The scored terms of one reader view: an LRU of _Scored entries of at
+    most POSTINGS_CACHE_BYTES bytes (an entry alone past the bound is
+    scored but not kept). A lookup reads, decodes and scores only the
+    terms it lacks, in one PostingsFiles.read. The entries are guarded by
+    a lock and a fill runs outside it: two callers may score one term
+    twice, to equal entries."""
+
+    def __init__(self, view, stats: dict, deleted: np.ndarray | None, cfg: IndexConfig):
+        self._view = view
+        self._n_docs = float(stats["n_docs"])
+        self._avgdl = float(stats["avgdl"])
+        self._deleted = deleted
+        self._cfg = cfg
+        self._lock = threading.Lock()
+        self._entries: OrderedDict[str, _Scored] = OrderedDict()
+        self.nbytes = 0
+
+    def get(self, terms: list[str], stats_out: dict | None = None) -> dict[str, _Scored] | None:
+        """`terms` (distinct) scored, or None when they hold more than
+        GATHER_MAX_BLOCKS blocks. `stats_out` gets row_groups_read (from
+        disk, by this call) and row_groups_cached (the rest of the row
+        groups the terms' reads open)."""
+        got = {}
+        with self._lock:
+            for t in terms:
+                e = self._entries.get(t)
+                if e is not None:
+                    self._entries.move_to_end(t)
+                    got[t] = e
+        room = GATHER_MAX_BLOCKS - sum(e.blocks for e in got.values())
+        if room < 0:
+            return None
+        missing = [t for t in terms if t not in got]
+        st = {"row_groups_read": 0}
+        if missing:
+            new = self._score(missing, room, st)
+            if new is None:
+                return None
+            got.update(new)
+            self._keep(new)
+        if stats_out is not None:
+            rgs = np.unique(np.concatenate([got[t].row_groups for t in terms])) if terms else ()
+            n_read = st["row_groups_read"]
+            stats_out.update(row_groups_read=n_read, row_groups_cached=len(rgs) - n_read)
+        return got
+
+    def _score(self, terms: list[str], room: int, stats_out: dict) -> dict[str, _Scored] | None:
+        """`terms` read, decoded and scored, or None past `room` blocks:
+        the same df, formula and operation order as the Spark plan, so
+        each contribution equals the plan's bit for bit."""
+        terms = sorted(terms)
+        pf = self._view.postings_files
+        blocks = pf.read(terms, _GATHER_COLS, room + 1, stats_out)
+        if blocks.num_rows > room:
+            return None
+        code = np.searchsorted(np.array(terms, dtype=object),
+                               blocks.column("term").to_numpy(zero_copy_only=False))
+        ns = blocks.column("n").to_numpy().astype(np.int64)
+        docs, tfs, dls = decode_posting_blocks_batch(
+            *(blocks.column(c).to_pylist() for c in ("doc_bytes", "tf_bytes", "dl_bytes")),
+            ns, codec=self._view.codec,
+        )
+        n_blocks = np.bincount(code, minlength=len(terms))
+        # df = summed block n: the same pre-live-filter count as term_stats
+        df = np.bincount(code, weights=ns, minlength=len(terms))
+        idf = np.array([_idf(self._n_docs, float(d)) for d in df], dtype=np.float64)
+        post = np.repeat(code, ns)
+        contrib = idf[post] * bm25_tf_norm(
+            tfs, dls.astype(np.float64), self._cfg.k1, self._cfg.b, self._avgdl)
+        keep = keep_not_in(docs, self._deleted)
+        post, docs, contrib = post[keep], docs[keep], contrib[keep]
+        # each term's postings together, in read (file, row group) order
+        order = np.argsort(post, kind="stable")
+        ends = np.cumsum(np.bincount(post, minlength=len(terms))).tolist()
+        out = {}
+        for i, (t, rgs) in enumerate(zip(terms, pf.term_row_groups(terms))):
+            sel = order[ends[i - 1] if i else 0:ends[i]]
+            out[t] = _Scored(int(n_blocks[i]), int(df[i]), docs[sel], contrib[sel], rgs)
+        return out
+
+    def _keep(self, new: dict[str, _Scored]) -> None:
+        bound = segments.POSTINGS_CACHE_BYTES
+        with self._lock:
+            for t, e in new.items():
+                if e.nbytes > bound:
+                    continue
+                old = self._entries.pop(t, None)
+                if old is not None:
+                    self.nbytes -= old.nbytes
+                self._entries[t] = e
+                self.nbytes += e.nbytes
+            while self.nbytes > bound:
+                self.nbytes -= self._entries.popitem(last=False)[1].nbytes
+
+
+def _topk_scored(
+    scored: dict[str, _Scored],
+    q_terms: list[str],
+    k: int,
     min_should_match: int | None = None,
-    must_not_terms: list[str] | None = None,
+    must_not_terms: list[str] = (),
 ) -> Hits:
-    """bm25_topk_from_index over block rows already on the driver, in
-    numpy: decode, score, drop `excluded` (sorted superseded ids), sum per
-    doc, apply min_should_match and must_not, rank. Same df, formula,
-    rounding and tie-break as the Spark plan, so results are identical.
-    `blocks` must hold every block of the query and must_not terms."""
-    block_terms = blocks.column("term").to_numpy(zero_copy_only=False)
-    ns = blocks.column("n").to_numpy().astype(np.int64)
-    code = _term_codes(block_terms, query_terms)
-    pos = code >= 0
-    code, pos_ns = code[pos], ns[pos]
-    pos_blocks = blocks.filter(pa.array(pos))
-    docs, tfs, dls = decode_posting_blocks_batch(
-        *(pos_blocks.column(c).to_pylist() for c in ("doc_bytes", "tf_bytes", "dl_bytes")),
-        pos_ns, codec=codec,
-    )
-    # df = summed block n: the same pre-live-filter count as term_stats
-    # over the candidate blocks
-    df = np.bincount(code, weights=pos_ns)
-    idf = np.array([_idf(float(n_docs), float(d)) for d in df], dtype=np.float64)
-    contrib = np.repeat(idf[code], pos_ns) * bm25_tf_norm(
-        tfs, dls.astype(np.float64), cfg.k1, cfg.b, float(avgdl)
-    )
-    keep = keep_not_in(docs, excluded)
-    uids, inv = np.unique(docs[keep], return_inverse=True)
-    raw = np.bincount(inv, weights=contrib[keep], minlength=len(uids))
+    """bm25_topk_from_index from scored terms: each doc's contributions
+    summed in sorted term order (np.bincount adds in array order), the
+    order a doc's blocks come in the term-sorted files, then
+    min_should_match, must_not and the rank. Same df, formula, rounding
+    and tie-break as the Spark plan, so results are identical."""
+    if not q_terms:
+        return Hits()
+    pos = [scored[t] for t in q_terms]
+    uids, inv = np.unique(np.concatenate([e.ids for e in pos]), return_inverse=True)
+    raw = np.bincount(inv, weights=np.concatenate([e.contrib for e in pos]), minlength=len(uids))
     # doc ids are unique per term, so postings per doc = distinct terms matched
     if min_should_match:
         hit = np.bincount(inv, minlength=len(uids)) >= int(min_should_match)
         uids, raw = uids[hit], raw[hit]
     if must_not_terms:
-        neg = _term_codes(block_terms, must_not_terms) >= 0
-        neg_ids = decode_doc_ids_batch(
-            blocks.filter(pa.array(neg)).column("doc_bytes").to_pylist(),
-            ns[neg], codec=codec,
-        )
-        hit = keep_not_in(uids, np.unique(neg_ids))
+        neg = np.unique(np.concatenate([scored[t].ids for t in must_not_terms]))
+        hit = keep_not_in(uids, neg)
         uids, raw = uids[hit], raw[hit]
     return topk_rounded(uids, raw, k)
 
@@ -546,17 +629,21 @@ class IndexReader:
     This is the searcher/reader split Lucene makes (ES holds an
     IndexSearcher open across requests). Every search returns its top-k
     as `Hits`, rows on the driver, never a Spark DataFrame. A `search` /
-    `search_wand` call makes no Spark or JVM call: it reads its candidate
-    blocks (query and must_not terms) on the driver from the pinned
-    segments' postings Parquet files through the view's PostingsFiles:
-    footers were read at open, so row groups whose term min/max excludes
-    every query term are skipped, and a row group read once stays decoded
-    in the view's bounded cache, so a repeat query reads nothing from
-    disk; the read returns at most GATHER_MAX_BLOCKS + 1 rows.
-    exact_topk_blocks then decodes, scores and ranks the Arrow table in
-    numpy. df comes from the read blocks, and superseded docs drop out by
-    a binary search over the sorted deleted set. `df_for_terms` sums
-    block `n` from the same kind of read (engine.segments.block_dfs).
+    `search_wand` call makes no Spark or JVM call: it scores from the
+    view's term memo, which keeps, for every term a search of the view
+    needed, its block count, its df (summed block `n`), and the doc ids of
+    its live postings with their BM25 contributions. A term the memo
+    lacks is read on the driver from the pinned segments' postings Parquet
+    files through the view's PostingsFiles (footers read at open prune
+    the row groups; a row group read once stays decoded in the view's
+    bounded cache), decoded and scored once, all the lacking terms of a
+    search in one read; superseded and tombstoned docs drop out by a
+    binary search over the sorted deleted set. A repeat term reads,
+    decodes and scores nothing. The memo lives as long as the view
+    (`refresh()` empties it) and is an LRU of at most
+    POSTINGS_CACHE_BYTES bytes; a term whose entry alone is larger is
+    scored but not kept. `df_for_terms` sums block `n` from the same kind
+    of read (engine.segments.block_dfs).
 
     Every other search runs the store plan of its shape on the reader's
     view and collects it into `Hits` inside the call: search_store /
@@ -569,9 +656,9 @@ class IndexReader:
     Spark relation the reader caches, on first use.
 
     Concurrent callers (bench/soak.py threads) are safe: a call keeps its
-    blocks in locals, the term-stats cache is built under a lock, the
-    row-group cache has its own, and the only other shared mutable state
-    is the per-term df memo."""
+    arrays in locals, the term-stats cache is built under a lock, the
+    term memo and the row-group cache each have their own, and the only
+    other shared mutable state is the per-term df memo."""
 
     def __init__(self, spark: SparkSession, store, cfg: IndexConfig = DEFAULT_CONFIG):
         self.spark = spark
@@ -586,11 +673,13 @@ class IndexReader:
         self._df_memo: dict[str, int] = {}
         self._term_stats_cache = None  # search_fuzzy / suggest
         # superseded/tombstoned ids; too many to hold on the driver ->
-        # queries run the store plans until a merge shrinks the set
+        # queries run the store plans (and keep no memo) until a merge
+        # shrinks the set
         deleted = self._view.deleted_doc_ids(self.spark, self.cfg.max_deleted_driver)
         self._deleted_overflow = deleted is None
         self.deleted = deleted or frozenset()
-        self._deleted_sorted = sorted_ids(self.deleted)
+        self._memo = None if self._deleted_overflow else _TermMemo(
+            self._view, self.stats, sorted_ids(self.deleted), self.cfg)
 
     def _term_stats_df(self) -> DataFrame:
         # a DataFrame, never collected whole: a web-scale vocabulary is
@@ -609,7 +698,7 @@ class IndexReader:
         missing = {t for t in terms if t not in self._df_memo}
         if missing:
             self._df_memo.update(
-                block_dfs(self._view.postings_files.read(missing, ("term", "n")), missing))
+                segments.block_dfs(self._view.postings_files.read(missing, ("term", "n")), missing))
         return {t: self._df_memo[t] for t in set(terms)}
 
     def refresh(self) -> None:
@@ -622,16 +711,12 @@ class IndexReader:
                 self._term_stats_cache.unpersist()
                 self._term_stats_cache = None
 
-    def _gather(self, terms: set[str], stats_out: dict | None = None) -> pa.Table | None:
-        """The blocks of `terms`, read on the driver, or None when the
-        deleted set overflowed or there are more than GATHER_MAX_BLOCKS
-        blocks (the caller then runs the store plan). `stats_out` gets the
-        read's row-group counts (PostingsFiles.read)."""
-        if self._deleted_overflow:
-            return None
-        tbl = self._view.postings_files.read(
-            terms, _GATHER_COLS, GATHER_MAX_BLOCKS + 1, stats_out)
-        return None if tbl.num_rows > GATHER_MAX_BLOCKS else tbl
+    def _scored(self, terms: list[str], stats_out: dict | None = None) -> dict | None:
+        """`terms` scored from the view's memo, or None when the deleted
+        set overflowed or they hold more than GATHER_MAX_BLOCKS blocks
+        (the caller then runs the store plan)."""
+        memo = self._memo
+        return None if memo is None else memo.get(terms, stats_out)
 
     def search(
         self,
@@ -641,34 +726,23 @@ class IndexReader:
         min_should_match: int | None = None,
         must_not_terms: list[str] | None = None,
     ) -> Hits:
-        """Exact BM25 top-k as driver rows: one driver read of the query's
-        (and must_not) blocks, scored on the driver (exact_topk_blocks),
-        with no Spark or JVM call; search_store on the reader's view past
-        the driver read's limits. `min_should_match` / `must_not_terms`:
-        ES bool semantics (see bm25_topk)."""
+        """Exact BM25 top-k as driver rows, scored from the view's term
+        memo (query and must_not terms; the ones it lacks are read and
+        scored on the driver first), with no Spark or JVM call;
+        search_store on the reader's view past the driver's limits.
+        `min_should_match` / `must_not_terms`: ES bool semantics (see
+        bm25_topk)."""
         q_terms = sorted(set(query_terms))
         neg = sorted(set(must_not_terms or ()))
-        blocks = self._gather(set(q_terms) | set(neg))
-        if blocks is None:
+        scored = self._scored(sorted(set(q_terms) | set(neg)))
+        if scored is None:
             return Hits(search_store(
                 self.spark, self._view, q_terms, k=k, cfg=self.cfg,
                 conjunctive=conjunctive, min_should_match=min_should_match,
                 must_not_terms=neg or None,
             ).collect())
-        return self._exact_blocks(
-            blocks, q_terms, k, conjunctive, min_should_match, neg
-        )
-
-    def _exact_blocks(
-        self, blocks, q_terms, k, conjunctive=False, min_should_match=None,
-        must_not_terms=None,
-    ) -> Hits:
-        return exact_topk_blocks(
-            blocks, self.stats["n_docs"], self.stats["avgdl"], q_terms, k=k,
-            cfg=self.cfg, excluded=self._deleted_sorted, codec=self._view.codec,
-            min_should_match=len(q_terms) if conjunctive else min_should_match,
-            must_not_terms=must_not_terms,
-        )
+        return _topk_scored(scored, q_terms, k,
+                            len(q_terms) if conjunctive else min_should_match, neg)
 
     def search_wand(
         self,
@@ -678,42 +752,43 @@ class IndexReader:
         strategy: str = "wand",
     ) -> Hits:
         """BM25 top-k as driver rows, rank-identical to `search`. Below
-        GATHER_MAX_BLOCKS it scores like `search`: one driver read, exact
-        numpy scoring on the driver, no Spark or JVM call. With every
-        candidate block already on the driver, the vectorized exact scorer
-        beat the block-max scan at every block count measured (see
-        GATHER_MAX_BLOCKS), so the scan (wand_topk) and the
-        `strategy="auto"` cost model (engine.wand.wand_is_cheaper) run
-        only in search_store_wand, the fallback (see the class docstring).
+        GATHER_MAX_BLOCKS it scores like `search`, from the view's term
+        memo, with no Spark or JVM call. With every candidate block on the
+        driver, the vectorized exact scorer beat the block-max scan at
+        every block count measured (see GATHER_MAX_BLOCKS), so the scan
+        (wand_topk) and the `strategy="auto"` cost model
+        (engine.wand.wand_is_cheaper) run only in search_store_wand, the
+        fallback (see the class docstring).
 
         `stats_out` (evidence/debug) is filled from the same execution. On
-        the driver: candidate_blocks = candidate_block_ranges =
-        blocks_scored (every block read is scored), num_ranges 1,
-        candidate_postings, "strategy" = "exact_driver" ("exact_auto"
-        under strategy="auto"), and the read's row groups: row_groups_read
-        from disk and row_groups_cached from the reader's memory. In the
-        fallback: what search_store_wand reports."""
+        the driver, from the memo entries: candidate_blocks =
+        candidate_block_ranges = blocks_scored (the query terms' blocks,
+        all scored), num_ranges 1, candidate_postings, "strategy" =
+        "exact_driver" ("exact_auto" under strategy="auto"), and the row
+        groups: row_groups_read from disk by this call (0 when every term
+        was in the memo) and row_groups_cached, the rest of the row groups
+        the terms' footer ranges select. In the fallback: what
+        search_store_wand reports."""
         if strategy not in ("wand", "auto"):
             raise ValueError(f"strategy must be 'wand' or 'auto', got {strategy!r}")
-        st = stats_out if stats_out is not None else {}
         q_terms = sorted(set(query_terms))
-        blocks = self._gather(set(q_terms), st)
-        if blocks is None:
+        scored = self._scored(q_terms, stats_out)
+        if scored is None:
             from engine.wand import search_store_wand
 
             return Hits(search_store_wand(
                 self.spark, self._view, q_terms, k=k, cfg=self.cfg,
                 stats_out=stats_out, strategy=strategy,
             ).collect())
-        n = blocks.num_rows
-        # on the driver the cost-based choice is always the exact scorer
-        st.update(
-            strategy="exact_auto" if strategy == "auto" else "exact_driver",
-            candidate_blocks=n, candidate_block_ranges=n, blocks_scored=n,
-            num_ranges=1,
-            candidate_postings=int(blocks.column("n").to_numpy().sum()),
-        )
-        return self._exact_blocks(blocks, q_terms, k)
+        if stats_out is not None:
+            n = sum(scored[t].blocks for t in q_terms)
+            # on the driver the cost-based choice is always the exact scorer
+            stats_out.update(
+                strategy="exact_auto" if strategy == "auto" else "exact_driver",
+                candidate_blocks=n, candidate_block_ranges=n, blocks_scored=n,
+                num_ranges=1, candidate_postings=sum(scored[t].df for t in q_terms),
+            )
+        return _topk_scored(scored, q_terms, k)
 
     def search_fuzzy(
         self,

@@ -69,16 +69,18 @@ DOCS_SCHEMA_COLS = ["doc_id", "url", "doc_len", "warc_ts", "lang", "part_id", "r
 # and refresh 6.7 -> 8.6 ms, and a 1-3 term search p50 62 -> 50 ms.
 POSTINGS_ROW_GROUP_BYTES = 1 << 18
 
-# Bytes of decoded postings (columns plus the term lists binary search
+# Bytes of decoded postings (columns plus the term bytes binary search
 # runs on) that one PostingsFiles, so one IndexReader view, keeps in
-# memory. A perfbench store is ~2 MB decoded and fits whole. On an 80k-doc
-# store (jobs/build_index.py --docs 80000 --merge-factor 2: 13 files, 229
-# row groups), two passes of a perfbench query stream (seed 7001, 720
-# searches) touch 113 row groups (28 MB). At 0 / 8 / 16 / 32 / 64 MB,
-# 0 / 75 / 86 / 97 / 97% of the row groups a search needed were in
-# memory, search p50 was 11.8 / 10.6 / 10.1 / 10.3 / 10.3 ms (17.6 ms with
-# the dataset scan this cache replaced), and the driver's RSS after the
-# stream was 141 / 150 / 155 / 164 / 164 MB (4-core host).
+# memory; the view's term memo (engine.query) is held to the same bound,
+# so a reader keeps at most twice this. A perfbench store is ~2 MB
+# decoded and fits whole. On an 80k-doc store (jobs/build_index.py
+# --docs 80000 --merge-factor 2: 13 files, 229 row groups), two passes of
+# a perfbench query stream (seed 7001, 720 searches) touch 113 row groups
+# (28 MB). At 0 / 8 / 16 / 32 / 64 MB, 0 / 75 / 86 / 97 / 97% of the row
+# groups a search needed were in memory, search p50 was 11.8 / 10.6 /
+# 10.1 / 10.3 / 10.3 ms (17.6 ms with the dataset scan this cache
+# replaced), and the driver's RSS after the stream was 141 / 150 / 155 /
+# 164 / 164 MB (4-core host).
 POSTINGS_CACHE_BYTES = 32 << 20
 
 # Largest store, in docs rows (superseded versions included), whose
@@ -130,6 +132,23 @@ def parquet_files(dirs) -> list[str]:
             paths += [os.path.join(d, n) for n in sorted(names)
                       if n.endswith(".parquet") and not n.startswith((".", "_"))]
     return paths
+
+
+def parquet_schema(dirs):
+    """The union of the footer schemas of the Parquet files under `dirs`
+    as a Spark StructType (the columns in first-seen order; a column
+    whose type differs between files fails, as under Spark's
+    mergeSchema), or None when there is no file. The footers are
+    read with pyarrow on the driver. Timestamps read as TimestampType, as
+    Spark reads the INT96 every writer here writes."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    files = parquet_files(dirs)
+    if not files:
+        return None
+    return from_arrow_schema(pa.unify_schemas([pq.read_schema(f) for f in files]))
 
 
 def read_parquet_files(paths: list[str], columns: list[str] | None, filter=None):
@@ -217,37 +236,51 @@ class LedgerEntry:
 
 class _RowGroup(NamedTuple):
     """A cached postings row group: its decoded columns (`term` always among
-    them), its terms as a list of str, for binary search, and a bound on
-    the bytes that list holds."""
+    them) and its terms as _TermKeys, for binary search."""
 
     cols: dict
-    terms: list
-    terms_nbytes: int
+    terms: "_TermKeys"
 
     @property
     def nbytes(self) -> int:
-        return self.terms_nbytes + sum(a.get_total_buffer_size() for a in self.cols.values())
+        return self.terms.nbytes + sum(a.get_total_buffer_size() for a in self.cols.values())
 
 
-def _sorted_terms(term) -> tuple[list, int]:
-    """A postings row group's `term` column as a list of str, for binary
-    search, and a bound on the bytes the list holds. Raises ValueError if
-    the column is not sorted by term (every writer sorts it, and a binary
-    search would miss rows)."""
-    import pyarrow.compute as pc
+class _TermKeys:
+    """A postings row group's sorted `term` column as a sequence of UTF-8
+    bytes, for bisect: the column's data buffer copied once into one bytes
+    object, sliced by its offsets on each probe. UTF-8 bytes order as the
+    code points do, so as str and as Arrow sort. Raises ValueError if the
+    column holds a null or is not sorted by term (every writer sorts it,
+    and a binary search would miss rows)."""
 
-    n = len(term)
-    if term.null_count:
-        raise ValueError("postings row group has a null term")
-    # Arrow compares strings by UTF-8 bytes: code point order, as str does
-    if n > 1 and pc.any(pc.less(term.slice(1), term.slice(0, n - 1))).as_py():
-        raise ValueError("postings row group is not sorted by term")
-    utf8 = pc.sum(pc.binary_length(term)).as_py() or 0
-    chars = pc.sum(pc.utf8_length(term)).as_py() or 0
-    # a str and its list slot take 57 bytes plus 1 a char when ASCII, and
-    # at most 88 plus 4 a char otherwise
-    nbytes = 56 + (57 * n + utf8 if chars == utf8 else 88 * n + 4 * chars)
-    return term.to_numpy(zero_copy_only=False).tolist(), nbytes
+    __slots__ = ("_data", "_off")
+
+    def __init__(self, term) -> None:
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        n = len(term)
+        if term.null_count:
+            raise ValueError("postings row group has a null term")
+        # Arrow compares strings by UTF-8 bytes: code point order, as str does
+        if n > 1 and pc.any(pc.less(term.slice(1), term.slice(0, n - 1))).as_py():
+            raise ValueError("postings row group is not sorted by term")
+        _, offsets, data = term.buffers()
+        # a memoryview indexes to Python ints with no per-row objects kept
+        width = "q" if pa.types.is_large_string(term.type) else "i"
+        self._off = memoryview(offsets).cast(width)[term.offset:term.offset + n + 1]
+        self._data = b"" if data is None else data.to_pybytes()
+
+    def __len__(self) -> int:
+        return len(self._off) - 1
+
+    def __getitem__(self, i: int) -> bytes:
+        return self._data[self._off[i]:self._off[i + 1]]
+
+    @property
+    def nbytes(self) -> int:
+        return len(self._data) + self._off.nbytes
 
 
 # Reads the row groups one query misses in several files concurrently, one
@@ -266,9 +299,9 @@ class PostingsFiles:
     statistics (or a bound dropped for its length) is always read. A row
     group is read from disk once, only the requested columns plus `term`
     (a later read that needs more columns reads just those), and kept
-    decoded in an LRU of at most POSTINGS_CACHE_BYTES, with its sorted
-    terms as a list of str: a term's rows are found by binary search. A
-    row group that is not sorted by term (no writer makes one) fails the
+    decoded in an LRU of at most POSTINGS_CACHE_BYTES; a term's rows are
+    found by binary search on the term column's bytes (_TermKeys). A row
+    group that is not sorted by term (no writer makes one) fails the
     read.
 
     The files are immutable, so the cache is never stale. Reads from
@@ -331,10 +364,11 @@ class PostingsFiles:
             stats_out.update(row_groups_read=n_read, row_groups_cached=len(hits) - n_read)
         pieces: dict[str, list] = {c: [] for c in columns}
         n = 0
+        keys = [t.encode("utf-8", "surrogatepass") for t in q_terms]
         for rg in rgs:
             # the query terms in order: in a row group sorted by term, their
             # rows come in row order
-            for t in q_terms:
+            for t in keys:
                 s = bisect_left(rg.terms, t)
                 e = bisect_right(rg.terms, t, s)
                 if limit is not None:
@@ -347,6 +381,12 @@ class PostingsFiles:
             c: pa.concat_arrays(p) if p else pa.array([], self._schema.field(c).type)
             for c, p in pieces.items()
         })
+
+    def term_row_groups(self, terms: list[str]) -> list[np.ndarray]:
+        """For each of `terms`, the row groups (indices, ascending) whose
+        footer term range holds it: the ones a read of it opens."""
+        ts = np.array(terms, dtype=str).reshape(-1, 1)
+        return list(map(np.flatnonzero, (ts >= self._lo) & (ts <= self._hi)))
 
     def _row_groups(self, hits: list[int], columns: list[str]) -> tuple[list[_RowGroup], int]:
         """The row groups `hits` with at least `columns` decoded, and how
@@ -411,7 +451,7 @@ class PostingsFiles:
         if old is not None:
             rg = old._replace(cols=cols)
         else:
-            rg = _RowGroup(cols, *_sorted_terms(cols["term"]))
+            rg = _RowGroup(cols, _TermKeys(cols["term"]))
         with self._lock:
             prev = self._cache.pop(i, None)
             if prev is not None:
@@ -699,13 +739,17 @@ class IndexStore:
         """Parquet read that keeps hive partition values as strings (a
         routing value like "7" must not come back as an int column).
 
-        mergeSchema=true so a store whose segments straddle a schema
+        The schema is the union of the files' footers (parquet_schema),
+        handed to the reader: a store whose segments straddle a schema
         addition (e.g. the round-5 imp_tf/imp_dl impacts columns) reads as
-        the UNION schema with nulls for old segments — with the default
-        single-footer sampling, which segment "wins" would be arbitrary
-        (new columns silently dropped, or present-with-nulls), breaking the
-        reader's documented legacy fallback."""
-        df = spark.read.option("mergeSchema", "true").parquet(*paths)
+        the UNION schema with nulls for old segments, as the reader's
+        legacy fallback expects, and building the plan runs no Spark job
+        (Spark's own inference runs one, with or without mergeSchema)."""
+        schema = parquet_schema(paths)
+        if schema is None:  # no data file: Spark's inference reports it
+            df = spark.read.option("mergeSchema", "true").parquet(*paths)
+        else:
+            df = spark.read.schema(schema).parquet(*paths)
         if "routing" in df.columns:
             df = df.withColumn("routing", F.col("routing").cast("string"))
         return df
@@ -1010,10 +1054,10 @@ class StoreView:
                     by_routing.setdefault(rv, []).append(os.path.join(p, d))
         out = None
         for rv in sorted(by_routing, key=lambda v: (v is None, v)):
-            # mergeSchema + allowMissingColumns: routing groups may straddle
-            # a schema addition (the impacts columns); missing columns
-            # become the nulls the readers' legacy fallbacks expect
-            df = spark.read.option("mergeSchema", "true").parquet(*by_routing[rv])
+            # union schemas + allowMissingColumns: routing groups may
+            # straddle a schema addition (the impacts columns); missing
+            # columns become the nulls the readers' legacy fallbacks expect
+            df = IndexStore._read_parquet(spark, *by_routing[rv])
             df = df.withColumn("routing", F.lit(rv).cast("string"))
             out = df if out is None else out.unionByName(
                 df, allowMissingColumns=True

@@ -252,7 +252,7 @@ def test_unknown_docid_strategy_is_rejected_on_both_paths(spark, source, tmp_pat
 
 def test_mixed_store_reads_through_spark_and_duckdb(spark, source, tmp_path, monkeypatch):
     """A Spark-built segment and a driver-built one in one store read
-    through _read_union (mergeSchema) and through DuckDB."""
+    through _read_union (the footers' union schema) and through DuckDB."""
     import duckdb
 
     cfg = IndexConfig(routing_col="region", store_source=True)

@@ -1,9 +1,10 @@
-"""IndexReader's driver path (a driver-side read of the query's blocks
-from the pinned segments' postings files, numpy scoring on the driver):
-rank identity with the distributed search_store / search_store_wand plans,
-the zero-job pin, df_for_terms, the pinned ledger state, the fallbacks, and
-stats_out from the same execution, and the driver-side `Hits` every
-reader search returns."""
+"""IndexReader's driver path (each term read once from the pinned
+segments' postings files, scored in numpy on the driver and kept in the
+view's term memo): rank identity with the distributed search_store /
+search_store_wand plans, cold and from the memo, the memo's reads, bound
+and lifetime, the zero-job pin, df_for_terms, the pinned ledger state, the
+fallbacks, and stats_out from the same execution, and the driver-side
+`Hits` every reader search returns."""
 
 from __future__ import annotations
 
@@ -17,6 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import engine.query as query_mod
+import engine.segments as segments_mod
 from engine.config import SCORE_DECIMALS, IndexConfig
 from engine.corpus import webpages
 from engine.fuzzy import search_store_fuzzy
@@ -25,27 +27,38 @@ from engine.merge import merge_segments
 from engine.positions import search_store_phrase
 from engine.query import Hits, IndexReader, search_store, spark_round
 from engine.segments import IndexStore
+from engine.updates import delete_by_ids
 from engine.wand import search_store_wand
 
 # (query terms, kwargs) — disjunctive, duplicate terms, absent term, bool
-# clauses; k=500 is larger than any hit count here
+# clauses, k from 0 to 500 (larger than any hit count here)
 EXACT_CASES = [
     (["engine", "spark"], {"k": 10}),
     (["engine", "engine", "spark"], {"k": 7}),
+    (["engine", "spark"], {"k": 0}),
     (["crawl"], {"k": 500}),
+    (["crawl"], {"k": 1}),
     (["zzqxnotaword"], {"k": 10}),
     (["engine", "zzqxnotaword"], {"k": 10}),
     (["index", "rank", "page"], {"k": 10, "conjunctive": True}),
+    (["index", "rank", "page"], {"k": 1, "conjunctive": True}),
+    (["index", "rank", "zzqxnotaword"], {"k": 100, "conjunctive": True}),
     (["index", "rank", "page", "spark"], {"k": 10, "min_should_match": 2}),
+    (["index", "rank", "page", "zzqxnotaword"], {"k": 100, "min_should_match": 2}),
     (["engine", "spark", "index"], {"k": 10, "must_not_terms": ["crawl"]}),
     (["engine", "spark"], {"k": 500, "must_not_terms": ["spark"]}),
+    (["page", "crawl"], {"k": 100, "must_not_terms": ["zzqxnotaword", "rank"]}),
+    (["index", "spark", "page"], {"k": 1, "min_should_match": 2,
+                                  "must_not_terms": ["engine"]}),
 ]
 WAND_CASES = [
     (["engine", "spark"], 10),
     (["engine", "engine"], 5),
+    (["engine", "spark"], 0),
     (["crawl"], 500),
     (["zzqxnotaword"], 10),
     (["index", "rank", "page"], 1),
+    (["page", "rank", "zzqxnotaword"], 100),
 ]
 # phrase and fuzzy searches, one of each matching nothing
 PHRASE_CASES = [(["index", "spark"], 10), (["merge", "index"], 500),
@@ -85,13 +98,19 @@ def _build(spark, root, codec, merged, routing_col=None):
 
 
 @pytest.fixture(scope="module", params=list(itertools.product(
-    ("varint", "pfor"), ("merged", "superseded", "routed"))),
+    ("varint", "pfor"), ("merged", "superseded", "routed", "tombstoned"))),
     ids=lambda p: "-".join(p))
 def store(request, spark, tmp_path_factory):
+    """The store shapes every rank-identity test runs on; "tombstoned" is
+    the superseded store with every 7th url deleted by id."""
     codec, shape = request.param
     root = str(tmp_path_factory.mktemp(f"rd-{codec}-{shape}"))
     st = _build(spark, root, codec, merged=shape == "merged",
                 routing_col="lang" if shape == "routed" else None)
+    if shape == "tombstoned":
+        urls = sorted({r["url"] for r in st.docs(spark).select("url").collect()})
+        assert delete_by_ids(spark, st, urls[::7]) > 0
+        assert len(st.view().tombstoned_ids)
     if shape == "merged":
         assert len(st.live_segments()) == 1
     else:
@@ -107,9 +126,13 @@ def test_reader_exact_matches_search_store(spark, store):
     try:
         if len(store.live_segments()) > 1:
             assert reader.deleted and not reader._deleted_overflow
-        for terms, kw in EXACT_CASES:
-            want = search_store(spark, store, terms, **kw).collect()
-            assert _hit_rows(reader.search(terms, **kw)) == want, (terms, kw)
+        assert set(store.view().tombstoned_ids.tolist()) <= reader.deleted
+        wants = [search_store(spark, store, terms, **kw).collect() for terms, kw in EXACT_CASES]
+        # the first pass scores each case from a memo that lacks some of
+        # its terms (misses and hits mixed), the second from the memo alone
+        for _ in range(2):
+            for (terms, kw), want in zip(EXACT_CASES, wants):
+                assert _hit_rows(reader.search(terms, **kw)) == want, (terms, kw)
         for phrase, k in PHRASE_CASES:
             want = search_store_phrase(spark, store, phrase, k=k).collect()
             assert _hit_rows(reader.search_phrase(phrase, k=k)) == want, phrase
@@ -125,12 +148,77 @@ def test_reader_exact_matches_search_store(spark, store):
 def test_reader_wand_matches_search_store_wand(spark, store):
     reader = IndexReader(spark, store)
     try:
-        for terms, k in WAND_CASES:
-            want = search_store_wand(spark, store, terms, k=k).collect()
+        wants = [search_store_wand(spark, store, terms, k=k).collect() for terms, k in WAND_CASES]
+        for (terms, k), want in zip(WAND_CASES, wants):
             assert want == search_store(spark, store, terms, k=k).collect()
-            assert _hit_rows(reader.search_wand(terms, k=k)) == want, (terms, k)
-            got = _hit_rows(reader.search_wand(terms, k=k, strategy="auto"))
-            assert got == want, (terms, k)
+        for _ in range(2):  # misses and hits, then the memo alone
+            for (terms, k), want in zip(WAND_CASES, wants):
+                assert _hit_rows(reader.search_wand(terms, k=k)) == want, (terms, k)
+                got = _hit_rows(reader.search_wand(terms, k=k, strategy="auto"))
+                assert got == want, (terms, k)
+    finally:
+        reader.close()
+
+
+def test_memoized_search_reads_and_decodes_nothing(spark, store, monkeypatch):
+    """A search whose terms earlier searches of the view scored makes no
+    PostingsFiles.read and no decode: it scores from the term memo. A term
+    the memo lacks is read, decoded and scored once, alone."""
+    reader = IndexReader(spark, store)
+    terms = ["engine", "index", "spark", "zzqxnotaword"]
+    calls = [
+        lambda: reader.search(terms, k=10),
+        lambda: reader.search(terms[:2], k=3, must_not_terms=["spark"]),
+        lambda: reader.search(terms, k=100, min_should_match=2),
+        lambda: reader.search(terms[1:3], k=10, conjunctive=True),
+        lambda: reader.search_wand(["spark", "engine"], k=10),
+    ]
+    try:
+        reader.search(terms, k=1)
+        want = [_hit_rows(fn()) for fn in calls]
+        reads, decodes = [], []
+        read = segments_mod.PostingsFiles.read
+        monkeypatch.setattr(segments_mod.PostingsFiles, "read",
+                            lambda self, *a, **kw: reads.append(a[0]) or read(self, *a, **kw))
+        decode = query_mod.decode_posting_blocks_batch
+        monkeypatch.setattr(query_mod, "decode_posting_blocks_batch",
+                            lambda *a, **kw: decodes.append(1) or decode(*a, **kw))
+        assert [_hit_rows(fn()) for fn in calls] == want
+        assert reads == [] and decodes == []
+        got = _hit_rows(reader.search(["crawl", "engine"], k=10))
+        assert reads == [["crawl"]] and decodes == [1]
+        assert got == search_store(spark, store, ["crawl", "engine"], k=10).collect()
+    finally:
+        reader.close()
+
+
+def test_term_memo_stays_within_its_bound(spark, store, monkeypatch):
+    """The memo is an LRU of at most POSTINGS_CACHE_BYTES; evicting an
+    entry, or not keeping one past the bound, changes no result."""
+    full = IndexReader(spark, store)
+    try:
+        want = [_rows(full.search(terms, **kw)) for terms, kw in EXACT_CASES]
+        sizes = sorted(e.nbytes for e in full._memo._entries.values())
+        assert full._memo.nbytes == sum(sizes)
+    finally:
+        full.close()
+    # holds the largest entry, never the two largest
+    budget = sizes[-1] + sizes[-2] - 1
+    monkeypatch.setattr(segments_mod, "POSTINGS_CACHE_BYTES", budget)
+    reader = IndexReader(spark, store)
+    try:
+        memo = reader._memo
+        for _ in range(2):
+            for (terms, kw), w in zip(EXACT_CASES, want):
+                assert _rows(reader.search(terms, **kw)) == w, (terms, kw)
+                assert memo.nbytes == sum(e.nbytes for e in memo._entries.values()) <= budget
+        assert 0 < len(memo._entries) < len(sizes)
+        # below the smallest entry nothing is kept
+        monkeypatch.setattr(segments_mod, "POSTINGS_CACHE_BYTES", sizes[0] - 1)
+        reader.refresh()
+        for (terms, kw), w in zip(EXACT_CASES, want):
+            assert _rows(reader.search(terms, **kw)) == w, (terms, kw)
+        assert not reader._memo._entries and reader._memo.nbytes == 0
     finally:
         reader.close()
 
@@ -316,6 +404,11 @@ def test_reader_pins_its_ledger_state_until_refresh(spark, tmp_path, monkeypatch
         assert reader._deleted_overflow == (plan == "overflow")
         assert _rows(reader.search(terms, k=10)) == before
         assert _rows(reader.search_phrase(phrase, k=10)) == []
+        memo = reader._memo
+        # the driver path scored both terms into the view's memo (the
+        # fallbacks keep nothing in it)
+        assert (memo is None) == (plan == "overflow")
+        assert plan != "driver" or set(memo._entries) == set(terms)
         # a commit after the open, with new docs holding the query terms
         more = ["alpha omega", "omega omega beta", "alpha"]
         run_ingest_loop(spark, store, as_partitioned_source(
@@ -329,6 +422,9 @@ def test_reader_pins_its_ledger_state_until_refresh(spark, tmp_path, monkeypatch
         assert _rows(reader.search_phrase(phrase, k=10)) == []
         assert reader.df_for_terms(["omega"]) == {"omega": 0}
         reader.refresh()
+        # a new view, with an empty memo
+        assert (reader._memo is None) == (plan == "overflow")
+        assert plan == "overflow" or (reader._memo is not memo and not reader._memo._entries)
         assert _rows(reader.search(terms, k=10)) == after
         assert _rows(reader.search_wand(terms, k=10)) == after
         assert _rows(reader.search_phrase(phrase, k=10)) == after_phrase
@@ -395,16 +491,17 @@ def test_reader_phrase_runs_the_store_phrase_plan(spark, tmp_path, monkeypatch):
 def test_store_wand_stats_out_takes_candidates_from_the_driver_read(
         spark, tmp_path, monkeypatch):
     """search_store_wand reads df and the candidate counts on the driver:
-    building its plan runs no Spark job but Parquet schema reads, and
-    stats_out adds only the scan's two actions (block-range replicas and
-    blocks scored), not a count of the candidate blocks."""
+    building its plan runs no Spark job, not even a Parquet schema read
+    (the schema comes from the footers, read on the driver), and stats_out
+    adds only the scan's two actions (block-range replicas and blocks
+    scored), not a count of the candidate blocks."""
     def plan_jobs(fn):
-        return [names for _, names in _jobs(spark, fn)
-                if not all(n.startswith("parquet at") for n in names)]
+        return [names for _, names in _jobs(spark, fn)]
 
     store = _build(spark, str(tmp_path), "varint", merged=True)
     terms = ["engine", "spark"]
     assert plan_jobs(lambda: search_store_wand(spark, store, terms, k=10)) == []
+    assert plan_jobs(lambda: search_store(spark, store, terms, k=10)) == []
     actions = []
     frame = type(spark.range(1))
     for name in ("count", "collect"):
@@ -431,6 +528,8 @@ def test_concurrent_searches_match_sequential(spark, store):
     calls = [(fn, terms, k) for terms, k in WAND_CASES for fn in ("search", "search_wand")]
     try:
         want = [_rows(getattr(reader, fn)(terms, k=k)) for fn, terms, k in calls]
+        # an empty memo: the threads race to fill it
+        reader.refresh()
         got = [None] * len(calls)
 
         def run(i):
@@ -449,6 +548,9 @@ def test_concurrent_searches_match_sequential(spark, store):
         finally:
             sys.setswitchinterval(old)
         assert got == want
+        memo = reader._memo
+        assert memo.nbytes == sum(e.nbytes for e in memo._entries.values())
+        assert set(memo._entries) == {t for _, terms, _ in calls for t in terms}
     finally:
         reader.close()
 

@@ -221,3 +221,37 @@ def test_partial_merge_does_not_resurrect_deleted_docs(spark, source, tmp_path):
     # a full merge afterwards expunges the shielded versions and agrees
     merge_segments(spark, store, cfg=cfg)
     assert _live_urls(spark, store) == live_before
+
+
+@pytest.mark.parametrize("routing_col", [None, "lang"])
+def test_segments_straddling_a_schema_addition_read_the_union(spark, source, tmp_path,
+                                                              routing_col):
+    """A store whose segments' postings footers differ (one segment written
+    before the impacts columns existed) reads as the union schema, with
+    nulls for the old segment's blocks, on the one-root and the
+    per-routing-value read; the WAND plan then takes its legacy bound for
+    those blocks and still ranks as search_store does."""
+    import pyarrow.parquet as pq
+
+    from engine.segments import parquet_files
+
+    cfg = IndexConfig(routing_col=routing_col)
+    store = IndexStore(str(tmp_path), "straddle", cfg=cfg).create()
+    run_ingest_loop(spark, store, source, rows_per_partition=25,
+                    start_option=EARLIEST, cfg=cfg)
+    segs = store.live_segments()
+    assert len(segs) > 1
+    old = parquet_files([os.path.join(store.segment_path(segs[0]), "postings")])
+    n_old = 0
+    for f in old:
+        tbl = pq.read_table(f, partitioning=None).drop_columns(["imp_tf", "imp_dl"])
+        pq.write_table(tbl, f)
+        n_old += tbl.num_rows
+    post = store.view().postings(spark)
+    assert {"imp_tf", "imp_dl"} <= set(post.columns)
+    assert post.where(F.col("imp_tf").isNull()).count() == n_old > 0
+    assert post.count() > n_old
+    if routing_col:
+        assert post.where(F.col("routing").isNull()).count() == 0
+    want = _rows(search_store(spark, store, TERMS, k=10))
+    assert want and _rows(search_store_wand(spark, store, TERMS, k=10)) == want
