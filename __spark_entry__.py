@@ -13,6 +13,10 @@ delegated (the implicit layer) — SURVEY.md §0.
 
 from __future__ import annotations
 
+import atexit
+import functools
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -30,6 +34,19 @@ from engine.query import (
 )
 
 FLAGSHIP_TERMS = ["spark", "vector", "merge", "table"]
+
+
+@functools.cache
+def _tmp_root() -> str:
+    """This process's one temp root for the stores the queries build,
+    removed when the process exits."""
+    root = tempfile.mkdtemp(prefix="sparkgraft_")
+    atexit.register(shutil.rmtree, root, True)
+    return root
+
+
+def _tmpdir(prefix: str) -> str:
+    return tempfile.mkdtemp(prefix=prefix, dir=_tmp_root())
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -224,7 +241,6 @@ def _phrase_store(spark: SparkSession, sf_dir: str):
     if sf_dir in _PHRASE_STORE_CACHE:
         return _PHRASE_STORE_CACHE[sf_dir]
     import math
-    import tempfile
 
     from engine.config import IndexConfig
     from engine.ingest import as_partitioned_source, run_ingest_loop
@@ -237,7 +253,7 @@ def _phrase_store(spark: SparkSession, sf_dir: str):
     src = as_partitioned_source(
         _pages_from_documents(docs), num_partitions=4, id_col="row_id"
     )
-    root = tempfile.mkdtemp(prefix="sparkgraft_posstore_")
+    root = _tmpdir("sparkgraft_posstore_")
     store = IndexStore(root, "phrase_idx", cfg=cfg).create()
     rpp = max(1, math.ceil(n / (4 * 2)))  # ~2 ingest batches
     run_ingest_loop(spark, store, src, rows_per_partition=rpp, cfg=cfg)
@@ -506,7 +522,6 @@ def _shared_store(spark: SparkSession, sf_dir: str):
     if sf_dir in _STORE_CACHE:
         return _STORE_CACHE[sf_dir]
     import math
-    import tempfile
 
     from engine.config import IndexConfig
     from engine.ingest import as_partitioned_source, run_ingest_loop
@@ -519,7 +534,7 @@ def _shared_store(spark: SparkSession, sf_dir: str):
     src = as_partitioned_source(
         _pages_from_documents(docs), num_partitions=4, id_col="row_id"
     )
-    root = tempfile.mkdtemp(prefix="sparkgraft_store_")
+    root = _tmpdir("sparkgraft_store_")
     store = IndexStore(root, "docs_idx", cfg=cfg).create()
     rpp = max(1, math.ceil(n / (4 * 3)))  # ~3 ingest batches
     run_ingest_loop(spark, store, src, rows_per_partition=rpp, cfg=cfg)
@@ -564,15 +579,13 @@ def _reindexed_store(spark: SparkSession, sf_dir: str):
     like the source store."""
     if sf_dir in _REINDEX_CACHE:
         return _REINDEX_CACHE[sf_dir]
-    import tempfile
-
     from engine.config import IndexConfig
     from engine.reindex import reindex
     from engine.segments import IndexStore
 
     src = _shared_store(spark, sf_dir)
     dst_cfg = IndexConfig(codec="pfor")
-    root = tempfile.mkdtemp(prefix="sparkgraft_reindex_")
+    root = _tmpdir("sparkgraft_reindex_")
     dst = IndexStore(root, "docs_idx_v2", cfg=dst_cfg).create()
     reindex(spark, src, dst, cfg=dst_cfg)
     _REINDEX_CACHE[sf_dir] = dst
@@ -605,15 +618,13 @@ def _q_snapshot_restore_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from engine.query import search_store
 
     if sf_dir not in _SNAPSHOT_CACHE:
-        import tempfile
-
         from engine.snapshot import restore, snapshot
 
         src = _shared_store(spark, sf_dir)
-        repo = tempfile.mkdtemp(prefix="sparkgraft_snaprepo_")
+        repo = _tmpdir("sparkgraft_snaprepo_")
         snapshot(src, repo, "bench")
         _SNAPSHOT_CACHE[sf_dir] = restore(
-            repo, "bench", tempfile.mkdtemp(prefix="sparkgraft_restored_")
+            repo, "bench", _tmpdir("sparkgraft_restored_")
         )
     store = _SNAPSHOT_CACHE[sf_dir]
     hits = search_store(spark, store, FLAGSHIP_TERMS, k=20)
@@ -670,7 +681,6 @@ def _q_multi_index_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     ElasticSearchBatchService.java:34,57-66). Returns per-index corpus
     stats read back from the stores."""
     import math
-    import tempfile
 
     from engine.assign import RecordAssigner
     from engine.fanout import discover_indexes, run_fanout_loop
@@ -682,7 +692,7 @@ def _q_multi_index_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = as_partitioned_source(
         _pages_from_documents(docs), num_partitions=4, id_col="row_id"
     )
-    root = tempfile.mkdtemp(prefix="sparkgraft_fanout_")
+    root = _tmpdir("sparkgraft_fanout_")
     assigner = RecordAssigner(
         index_name=lambda df: F.when(F.col("lang") == "en", "idx_en").otherwise("idx_other")
     )
@@ -931,13 +941,11 @@ def _cloned_store(spark: SparkSession, sf_dir: str, tag: str):
     key = (sf_dir, tag)
     if key in _MUTATED_CACHE:
         return _MUTATED_CACHE[key]
-    import tempfile
-
     from engine.snapshot import restore, snapshot
 
     src = _shared_store(spark, sf_dir)
-    repo = tempfile.mkdtemp(prefix=f"sparkgraft_{tag}_repo_")
-    root = tempfile.mkdtemp(prefix=f"sparkgraft_{tag}_")
+    repo = _tmpdir(f"sparkgraft_{tag}_repo_")
+    root = _tmpdir(f"sparkgraft_{tag}_")
     snapshot(src, repo, tag)
     store = restore(repo, tag, root)
     _MUTATED_CACHE[key] = store
@@ -1158,13 +1166,11 @@ def _q_ann_lsh_topk(spark, sf_dir):
     """ANN over a PERSISTED bucket-partitioned LSH index: built once per
     process, each query probes pruned bucket groups (no full-table
     signature recompute)."""
-    import tempfile
-
     from engine.similarity import AnnIndex
 
     if sf_dir not in _ANN_CACHE:
         _ANN_CACHE[sf_dir] = AnnIndex.build(
-            _emb(spark, sf_dir), tempfile.mkdtemp(prefix="sparkgraft_ann_"),
+            _emb(spark, sf_dir), _tmpdir("sparkgraft_ann_"),
             dim=64, n_bits=12, n_groups=64,
         )
     return _ANN_CACHE[sf_dir].topk(spark, _ann_query_vec(), k=15, n_probes=12)

@@ -52,7 +52,7 @@ from engine.docids import (
     literal_long_map,
 )
 from engine.postings import build_posting_blocks_local
-from engine.segments import IndexStore, LedgerEntry, StoreView
+from engine.segments import IndexStore, LedgerEntry, StoreView, store_writer
 
 EARLIEST = "EARLIEST"
 LATEST = "LATEST"
@@ -565,7 +565,7 @@ def _build_with_spark(spark: SparkSession, view: StoreView, window: DataFrame,
                     .join(F.broadcast(failed_keys), ["url", "part_id", "row_offset"])
                     .select("url", "part_id", "row_offset", "extract_error", "payload")
                 )
-            quarantine_df.write.mode("overwrite").parquet(
+            store_writer(quarantine_df).parquet(
                 os.path.join(store.path, "quarantine", segment_id)
             )
 

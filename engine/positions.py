@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from engine.analysis import tokens
 from engine.codecs import decode_doc_ids_batch, varint_encode
 from engine.config import DEFAULT_CONFIG, SCORE_DECIMALS, IndexConfig
+from engine.segments import store_writer
 
 POSITIONS_SUBDIR = "positions"
 
@@ -191,8 +192,10 @@ def write_segment_positions(store, segment_id: str, positions: DataFrame) -> Non
     import os
 
     routed = "routing" in positions.columns
+    if routed:  # one sort key for the directory "" and null share
+        positions = positions.withColumn("routing", F.expr("nullif(routing, '')"))
     sort_cols = (["routing"] if routed else []) + ["term", "doc_id"]
-    writer = positions.sortWithinPartitions(*sort_cols).write.mode("overwrite")
+    writer = store_writer(positions.sortWithinPartitions(*sort_cols))
     if routed:
         writer = writer.partitionBy("routing")
     writer.parquet(os.path.join(store.segment_path(segment_id), POSITIONS_SUBDIR))

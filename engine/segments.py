@@ -45,7 +45,7 @@ from functools import cached_property
 from typing import NamedTuple
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession, Window
 from pyspark.sql import functions as F
 
 from engine.config import DEFAULT_CONFIG, IndexConfig
@@ -68,6 +68,19 @@ DOCS_SCHEMA_COLS = ["doc_id", "url", "doc_len", "warc_ts", "lang", "part_id", "r
 # row groups instead of 65, +2.3% postings bytes, reader open 7.8 -> 8.9 ms
 # and refresh 6.7 -> 8.6 ms, and a 1-3 term search p50 62 -> 50 ms.
 POSTINGS_ROW_GROUP_BYTES = 1 << 18
+
+# Page codec (and its level) of every Parquet file a store holds, for both
+# writers: write_parquet on the driver, store_writer for Spark. Set per
+# write, never as a session conf, so a store's format does not depend on
+# which session wrote it. Readers take any codec, so a store that still
+# holds snappy segments reads as before and its merges rewrite them in
+# this one. Against snappy, on an 80k-doc store (jobs/build_index.py
+# --docs 80000 --merge-factor 2, 4-core host): postings 42.8 -> 30.8 MB,
+# docs 1.69 -> 0.98 MB, the same 228 row groups, and one postings row
+# group read from disk p50 0.49 -> 0.72 ms, which a view pays once per
+# row group (POSTINGS_CACHE_BYTES).
+PARQUET_CODEC = "zstd"
+PARQUET_CODEC_LEVEL = 3
 
 # Bytes of decoded postings (columns plus the term bytes binary search
 # runs on) that one PostingsFiles, so one IndexReader view, keeps in
@@ -175,15 +188,15 @@ def read_parquet_files(paths: list[str], columns: list[str] | None, filter=None)
 
 def write_parquet(table, directory: str, plain_cols=(), row_group_bytes: int | None = None,
                   partition_col: str | None = None) -> None:
-    """Write a pyarrow Table as Spark writes a DataFrame: one snappy file
-    in `directory` (which must not exist yet), or with `partition_col` one
-    file per value under hive `<col>=<escaped value>` directories, the
-    column itself left out of the files; INT96 timestamps; every column
-    nullable. Every column except `plain_cols` is dictionary-encoded —
-    parquet-mr drops the dictionary where it does not pay, which for these
-    tables is the near-unique columns the caller names. With
-    `row_group_bytes`, row groups hold about that many bytes of Arrow data
-    (Spark's `parquet.block.size`)."""
+    """Write a pyarrow Table as Spark's store_writer writes a DataFrame:
+    one PARQUET_CODEC file in `directory` (which must not exist yet), or
+    with `partition_col` one file per value under hive `<col>=<escaped
+    value>` directories, the column itself left out of the files; INT96
+    timestamps; every column nullable. Every column except `plain_cols`
+    is dictionary-encoded — parquet-mr drops the dictionary where it does
+    not pay, which for these tables is the near-unique columns the caller
+    names. With `row_group_bytes`, row groups hold about that many bytes
+    of Arrow data (Spark's `parquet.block.size`)."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -208,10 +221,20 @@ def write_parquet(table, directory: str, plain_cols=(), row_group_bytes: int | N
         rows = max(1, table.num_rows * row_group_bytes // max(1, table.nbytes))
     os.makedirs(directory, exist_ok=True)
     pq.write_table(
-        table, os.path.join(directory, "part-00000.snappy.parquet"),
-        row_group_size=rows, compression="snappy", use_dictionary=dict_cols,
+        table, os.path.join(directory, f"part-00000.{PARQUET_CODEC}.parquet"),
+        row_group_size=rows, compression=PARQUET_CODEC,
+        compression_level=PARQUET_CODEC_LEVEL, use_dictionary=dict_cols,
         use_deprecated_int96_timestamps=True, store_schema=False,
     )
+
+
+def store_writer(df: DataFrame) -> DataFrameWriter:
+    """`df.write` in overwrite mode with the store's Parquet codec: how
+    Spark writes every table of a store."""
+    # parquet-mr's zstd codec reads its level from the write's Hadoop conf,
+    # which holds the write's options (as parquet.block.size reaches it)
+    return (df.write.mode("overwrite").option("compression", PARQUET_CODEC)
+            .option("parquet.compression.codec.zstd.level", PARQUET_CODEC_LEVEL))
 
 
 def _atomic_write_json(path: str, obj: dict) -> None:
@@ -668,6 +691,10 @@ class IndexStore:
         sp = self.segment_path(segment_id)
         spark = postings.sparkSession
         routed = "routing" in postings.columns
+        if routed:
+            # "" and null share Spark's __HIVE_DEFAULT_PARTITION__ directory:
+            # sorted as two keys, its file held two term-sorted runs
+            postings = postings.withColumn("routing", F.expr("nullif(routing, '')"))
         sort_cols = (["routing"] if routed else []) + ["term", "min_doc"]
         to_write = postings.sortWithinPartitions(*sort_cols)
         obs = None
@@ -680,9 +707,7 @@ class IndexStore:
                 F.max("n").alias("max_df"),
                 F.expr("percentile_approx(n, 0.5)").alias("median_df"),
             )
-        writer = to_write.write.mode("overwrite").option(
-            "parquet.block.size", POSTINGS_ROW_GROUP_BYTES
-        )
+        writer = store_writer(to_write).option("parquet.block.size", POSTINGS_ROW_GROUP_BYTES)
         if routed:
             writer = writer.partitionBy("routing")
         writer.parquet(os.path.join(sp, "postings"))
@@ -692,10 +717,8 @@ class IndexStore:
         if ranged:
             from engine.postings import term_stats as _ts
 
-            _ts(written).write.mode("overwrite").parquet(
-                os.path.join(sp, "term_stats")
-            )
-        doc_writer = docs.write.mode("overwrite")
+            store_writer(_ts(written)).parquet(os.path.join(sp, "term_stats"))
+        doc_writer = store_writer(docs)
         if routed and "routing" in docs.columns:
             doc_writer = doc_writer.partitionBy("routing")
         doc_writer.parquet(os.path.join(sp, "docs"))

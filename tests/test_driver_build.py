@@ -400,7 +400,7 @@ def test_fail_before_commit_then_rerun_overwrites_orphan(spark, source, tmp_path
     assert res.committed and res.metrics["build_path"] == "driver"
     files = set(parquet_files([seg]))
     assert not files & orphan
-    assert {os.path.basename(f) for f in files} == {"part-00000.snappy.parquet"}
+    assert {os.path.basename(f) for f in files} == {"part-00000.zstd.parquet"}
     assert store.view().docs(spark).count() == res.n_docs
 
 

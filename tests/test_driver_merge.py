@@ -1,6 +1,8 @@
 """Append-only merges on the driver (engine/merge.py _merge_on_driver):
 parity with the Spark merge on every store shape, the Spark job counts of
-each merge shape, and crash and race safety of the driver path."""
+each merge shape, crash and race safety of the driver path, and the
+Parquet codec every store writer uses (PARQUET_CODEC), on stores that
+still hold segments of another codec too."""
 
 from __future__ import annotations
 
@@ -16,12 +18,14 @@ from pyspark.sql import functions as F
 from test_driver_build import N, _contents, _jobs, _pages, _read_sub, _rows
 
 import engine.ingest as ingest_mod
+import engine.segments as segments_mod
 from engine.config import IndexConfig
 from engine.ingest import as_partitioned_source, ingest_batch
 from engine.merge import merge_segments
-from engine.query import IndexReader, search_store
+from engine.query import IndexReader, bm25_topk_oracle_sql, search_store
 from engine.segments import IndexStore, parquet_files
-from engine.updates import delete_by_ids, update_by_query
+from engine.updates import delete_by_ids, delete_by_query, update_by_query
+from engine.wand import search_store_wand
 
 EXACT = [(["engine", "spark", "index"], 100), (["héllo"], 10), (["crawl", "page"], 5),
          (["zzqxnotaword"], 10)]
@@ -221,7 +225,7 @@ def test_crashed_driver_merge_keeps_inputs_and_retry_converges(spark, source, tm
         assert store.live_segments() == [s for e in before for s in e.segments_added]
         if cap == 0:
             orphan = set(parquet_files([store.segment_path(seg)]))
-            assert any(os.path.basename(f) != "part-00000.snappy.parquet" for f in orphan)
+            assert any(os.path.basename(f) != "part-00000.zstd.parquet" for f in orphan)
     monkeypatch.undo()
     assert _merge(spark, store, cfg, 10_000) == seg
     assert not set(parquet_files([store.segment_path(seg)])) & orphan
@@ -255,3 +259,101 @@ def test_commit_during_driver_merge_fails_the_merge(spark, source, tmp_path, mon
     assert store.live_segments() == [out]
     urls = store.view().table("docs", ["url"]).column("url").to_pylist()
     assert url not in urls and len(urls) == store.global_stats()["n_docs"]
+
+
+def _codecs(*dirs) -> dict[str, set[str]]:
+    """Parquet file under `dirs` -> the codecs of its column chunks."""
+    out = {}
+    for f in parquet_files(dirs):
+        md = pq.ParquetFile(f).metadata
+        out[f] = {md.row_group(i).column(j).compression
+                  for i in range(md.num_row_groups) for j in range(md.num_columns)}
+    return out
+
+
+@pytest.mark.parametrize("routed", [False, True], ids=["unrouted", "routed"])
+def test_every_store_writer_writes_zstd(spark, source, tmp_path, routed):
+    """Driver and Spark ingests (with their quarantine rows), an update, a
+    delete, a driver (append-only) merge and a Spark (expunge) merge on a
+    store with positions and `_source`: every Parquet file under the store
+    has zstd pages only. The update reads the Spark-written segment on the
+    driver, which takes term-sorted row groups."""
+    cfg = IndexConfig(routing_col="region" if routed else None, store_positions=True,
+                      store_source=True)
+    store = IndexStore(str(tmp_path), "zstd", cfg=cfg).create()
+    _ingest(spark, store, source, cfg, 2)
+    _merge(spark, store, cfg, 10_000)
+    _ingest(spark, store, source, cfg, 1, cap=0)
+    assert update_by_query(spark, store, ["spark"], lambda c: F.concat(c, F.lit(" zzupd")),
+                           batch_id=store.next_entry_id()).n_docs > 0
+    assert delete_by_query(spark, store, ["engine"]) > 0
+    _merge(spark, store, cfg, 10_000)
+    assert [(e.kind, e.metrics.get("build_path")) for e in store.ledger_entries()] == [
+        ("ingest", "driver"), ("ingest", "driver"), ("merge", "driver"), ("ingest", "spark"),
+        ("ingest", "driver"), ("delete", None), ("merge", "spark")]
+    codecs = _codecs(store.path)
+    rel = [os.path.relpath(f, store.path).split(os.sep) for f in codecs]
+    assert {p[2] if p[0] == "segments" else p[0] for p in rel} == {
+        "postings", "docs", "positions", "term_stats", "deletes", "quarantine"}
+    assert {c for cs in codecs.values() for c in cs} == {"ZSTD"}
+    assert all(f.endswith(".zstd.parquet") for f in codecs)
+    # every postings file is sorted by term, also the Spark-written one of
+    # the directory that "" and null routing values share
+    for f, p in zip(codecs, rel):
+        if p[0] == "segments" and p[2] == "postings":
+            terms = pq.read_table(f, columns=["term"]).column("term").to_pylist()
+            assert terms == sorted(terms), f
+
+
+def test_store_with_a_snappy_segment_reads_and_merges_as_zstd(spark, source, tmp_path):
+    """A store whose first two segments (one Spark-written, one
+    driver-written) have snappy pages, as a store written before the codec
+    changed does, answers every read path as its all-zstd twin does, and
+    both merge paths rewrite it to zstd with the same contents."""
+    cfg = IndexConfig(store_positions=True, store_source=True)
+    mixed, twin = (IndexStore(str(tmp_path), n, cfg=cfg).create() for n in ("mixed", "twin"))
+    for store in (mixed, twin):
+        with pytest.MonkeyPatch.context() as mp:
+            if store is mixed:
+                mp.setattr(segments_mod, "PARQUET_CODEC", "snappy")
+                mp.setattr(segments_mod, "PARQUET_CODEC_LEVEL", None)
+            _ingest(spark, store, source, cfg, 1, cap=0)
+            _ingest(spark, store, source, cfg, 1)
+        _ingest(spark, store, source, cfg, 1)
+    segs = mixed.live_segments()
+    assert [set().union(*_codecs(mixed.segment_path(s)).values()) for s in segs] == [
+        {"SNAPPY"}, {"SNAPPY"}, {"ZSTD"}]
+    assert [e.metrics["build_path"] for e in mixed.ledger_entries()] == [
+        "spark", "driver", "driver"]
+
+    import duckdb
+
+    def oracle(store, terms, k):
+        files = parquet_files(os.path.join(store.segment_path(s), "docs")
+                              for s in store.live_segments())
+        table = f"read_parquet({files!r}, union_by_name=true)"
+        return duckdb.connect().execute(
+            bm25_topk_oracle_sql(terms, k=k, table=table, text_col="source")).fetchall()
+
+    readers = [IndexReader(spark, s) for s in (mixed, twin)]
+    try:
+        for terms, k in EXACT:
+            for run in (lambda r: r.search(terms, k=k), lambda r: r.search_wand(terms, k=k)):
+                got, want = (run(r).collect() for r in readers)
+                assert got == want, terms
+            for plan in (search_store, search_store_wand):
+                got, want = (plan(spark, s, terms, k=k).collect() for s in (mixed, twin))
+                assert got == want, (plan.__name__, terms)
+            got, want = (oracle(s, terms, k) for s in (mixed, twin))
+            assert got == want and bool(want) == ("zzqxnotaword" not in terms), terms
+    finally:
+        for r in readers:
+            r.close()
+
+    for cap in (0, 10_000):
+        m, t = (_copy(s, f"{s.name}-{cap}") for s in (mixed, twin))
+        seg = _merge(spark, m, cfg, cap)
+        assert _merge(spark, t, cfg, cap) == seg
+        assert m.ledger_entries()[-1].metrics["build_path"] == ("spark" if cap == 0 else "driver")
+        assert set().union(*_codecs(m.segment_path(seg)).values()) == {"ZSTD"}
+        assert _contents(m, seg, "varint") == _contents(t, seg, "varint")

@@ -295,10 +295,15 @@ def _jobs(spark, fn):
     finally:
         sc.setJobGroup("reader-pin-done", "after the pin")
     tracker = sc.statusTracker()
-    return [
-        (j, [tracker.getStageInfo(s).name for s in tracker.getJobInfo(j).stageIds])
-        for j in sorted(tracker.getJobIdsForGroup(group))
-    ]
+    out = []
+    for j in sorted(tracker.getJobIdsForGroup(group)):
+        job = tracker.getJobInfo(j)
+        stages = [tracker.getStageInfo(s) for s in (job.stageIds if job else ())]
+        if job is None or None in stages:
+            raise AssertionError(f"the status tracker dropped job {j} or one of its stages "
+                                 "(spark.ui.retainedJobs / retainedStages)")
+        out.append((j, [s.name for s in stages]))
+    return out
 
 
 _GROUPS = itertools.count()
