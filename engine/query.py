@@ -25,6 +25,7 @@ Plan shape / scale notes:
 
 from __future__ import annotations
 
+import functools
 import sys
 import threading
 from collections import OrderedDict
@@ -431,20 +432,26 @@ def _store_topk(
     )
 
 
-_HIT = Row("doc_id", "score")
+class _Hit(Row):
+    __fields__ = ["doc_id", "score"]  # on the class: hits are built by tuple.__new__
+
+
+# a raw score more than one rounding quantum (plus float slack) below the
+# k-th raw score rounds below the k-th rounded score
+_RANK_MARGIN = 10.0**-SCORE_DECIMALS + 1e-9
 
 
 class Hits:
-    """An IndexReader search's top-k, on the driver: an immutable tuple of
-    Row(doc_id, score) with Python int / float fields, in rank order
-    (score desc, doc_id asc). It answers the calls a search's callers make
-    of a result (`collect()`, `columns`, `count()`); the search_store*
-    functions return Spark plans instead."""
+    """An IndexReader search's top-k from (doc_id, score) pairs, on the
+    driver: an immutable tuple of pyspark Rows with Python int / float
+    fields, in rank order (score desc, doc_id asc). It answers the calls a
+    search's callers make of a result (`collect()`, `columns`, `count()`);
+    the search_store* functions return Spark plans instead."""
 
     __slots__ = ("_rows",)
 
     def __init__(self, rows=()):
-        self._rows = tuple(_HIT(d, s) for d, s in rows)
+        self._rows = tuple(map(functools.partial(tuple.__new__, _Hit), rows))
 
     @property
     def columns(self) -> list[str]:
@@ -462,18 +469,17 @@ class Hits:
 
 def topk_rounded(doc_ids: np.ndarray, raw: np.ndarray, k: int) -> Hits:
     """(doc_id, score) top-k by (rounded score desc, doc_id asc), the order
-    the Spark plans produce. `doc_ids` must be ascending (np.unique order),
-    so of the docs tied at the k-th rounded score the first ones win."""
+    the Spark plans produce, for distinct `doc_ids` in any order. Rounding
+    is monotone, so only the docs within _RANK_MARGIN of the k-th raw
+    score can rank: those are rounded and sorted, the rest never are."""
+    n = len(raw)
+    if k <= 0 or not n:
+        return Hits()
+    if n > k:
+        sel = np.flatnonzero(raw >= np.partition(raw, n - k)[n - k] - _RANK_MARGIN)
+        doc_ids, raw = doc_ids[sel], raw[sel]
     scores = spark_round(raw)
-    if k <= 0:
-        doc_ids, scores = doc_ids[:0], scores[:0]
-    elif len(scores) > k:
-        kth = np.partition(scores, len(scores) - k)[len(scores) - k]
-        above = np.flatnonzero(scores > kth)
-        ties = np.flatnonzero(scores == kth)[: k - len(above)]
-        sel = np.concatenate([above, ties])
-        doc_ids, scores = doc_ids[sel], scores[sel]
-    order = np.lexsort((doc_ids, -scores))
+    order = np.lexsort((doc_ids, -scores))[:k]
     return Hits(zip(doc_ids[order].tolist(), scores[order].tolist()))
 
 
@@ -598,67 +604,67 @@ def _topk_scored(
     min_should_match: int | None = None,
     must_not_terms: list[str] = (),
 ) -> Hits:
-    """bm25_topk_from_index from scored terms: each doc's contributions
-    summed in sorted term order (np.bincount adds in array order), the
-    order a doc's blocks come in the term-sorted files, then
-    min_should_match, must_not and the rank. Same df, formula, rounding
-    and tie-break as the Spark plan, so results are identical."""
-    if not q_terms:
-        return Hits()
+    """bm25_topk_from_index from scored terms: the same df, formula,
+    summation order, rounding and tie-break as the Spark plan, so results
+    are identical. Several terms' postings are stably sorted by doc id and
+    summed per doc run (np.bincount adds in array order), so a doc's
+    contributions add in sorted term order, as its blocks come in the
+    term-sorted files. Then min_should_match, must_not and the rank."""
     pos = [scored[t] for t in q_terms]
-    uids, inv = np.unique(np.concatenate([e.ids for e in pos]), return_inverse=True)
-    raw = np.bincount(inv, weights=np.concatenate([e.contrib for e in pos]), minlength=len(uids))
-    # doc ids are unique per term, so postings per doc = distinct terms matched
-    if min_should_match:
-        hit = np.bincount(inv, minlength=len(uids)) >= int(min_should_match)
-        uids, raw = uids[hit], raw[hit]
+    msm = int(min_should_match or 0)
+    if len(pos) == 1 and msm <= 1:
+        ids, raw = pos[0].ids, pos[0].contrib  # a term's doc ids are distinct
+    else:
+        ids = np.concatenate([e.ids for e in pos] or [np.zeros(0, np.int64)])
+        if not len(ids):
+            return Hits()
+        order = np.argsort(ids, kind="stable")
+        ids = ids[order]
+        first = np.concatenate(([True], ids[1:] != ids[:-1]))
+        run = np.cumsum(first) - 1
+        raw = np.bincount(run, weights=np.concatenate([e.contrib for e in pos])[order])
+        ids = ids[first]
+        if msm > 1:  # a run's length is the number of terms its doc matched
+            hit = np.bincount(run) >= msm
+            ids, raw = ids[hit], raw[hit]
     if must_not_terms:
-        neg = np.unique(np.concatenate([scored[t].ids for t in must_not_terms]))
-        hit = keep_not_in(uids, neg)
-        uids, raw = uids[hit], raw[hit]
-    return topk_rounded(uids, raw, k)
+        hit = keep_not_in(ids, np.sort(np.concatenate([scored[t].ids for t in must_not_terms])))
+        ids, raw = ids[hit], raw[hit]
+    return topk_rounded(ids, raw, k)
 
 
 class IndexReader:
-    """Query server over a persisted index: a StoreView plus reads on the
-    driver. The reader holds the view taken at open (one ledger read), and
-    stats, the deleted-doc set, the postings files and every search come
-    from it. A commit after the open stays invisible until `refresh()`,
-    which takes a new view.
+    """Query server over a persisted index (Lucene's searcher/reader
+    split): a StoreView taken at open (one ledger read) plus reads on the
+    driver. Stats, the deleted-doc set, the postings files and every search
+    come from the view, and a later commit stays invisible until
+    `refresh()` takes a new one. Every search returns `Hits`.
 
-    This is the searcher/reader split Lucene makes (ES holds an
-    IndexSearcher open across requests). Every search returns its top-k
-    as `Hits`, rows on the driver, never a Spark DataFrame. A `search` /
-    `search_wand` call makes no Spark or JVM call: it scores from the
-    view's term memo, which keeps, for every term a search of the view
-    needed, its block count, its df (summed block `n`), and the doc ids of
-    its live postings with their BM25 contributions. A term the memo
-    lacks is read on the driver from the pinned segments' postings Parquet
-    files through the view's PostingsFiles (footers read at open prune
-    the row groups; a row group read once stays decoded in the view's
-    bounded cache), decoded and scored once, all the lacking terms of a
-    search in one read; superseded and tombstoned docs drop out by a
-    binary search over the sorted deleted set. A repeat term reads,
-    decodes and scores nothing. The memo lives as long as the view
-    (`refresh()` empties it) and is an LRU of at most
-    POSTINGS_CACHE_BYTES bytes; a term whose entry alone is larger is
-    scored but not kept. `df_for_terms` sums block `n` from the same kind
-    of read (engine.segments.block_dfs).
+    `search` / `search_wand` make no Spark or JVM call. They score from
+    the view's term memo: for every term a search of the view needed, its
+    block count, its df (summed block `n`) and the doc ids of its live
+    postings with their BM25 contributions. The terms a search lacks are
+    read in one driver read from the pinned segments' postings files
+    (footers read at open prune the row groups, decoded row groups stay in
+    the view's bounded cache), decoded and scored once, with superseded
+    and tombstoned docs dropped by binary search over the sorted deleted
+    set. A memo hit then only sums, filters and ranks (_topk_scored). The
+    memo is an LRU of at most POSTINGS_CACHE_BYTES bytes that lives as
+    long as the view; a term whose entry alone is larger is scored but not
+    kept. `df_for_terms` sums block `n` from the same kind of read.
 
     Every other search runs the store plan of its shape on the reader's
-    view and collects it into `Hits` inside the call: search_store /
-    search_store_wand for a query with more than GATHER_MAX_BLOCKS blocks
-    or a deleted set that overflowed cfg.max_deleted_driver (superseded
-    docs then drop out by the plans' live-docs join), and
-    search_store_phrase for `search_phrase`. The view computes its
-    deleted set and postings files once, so these plans reuse the
-    reader's. The term stats behind `search_fuzzy` / `suggest` are the one
-    Spark relation the reader caches, on first use.
+    view, collected into `Hits` inside the call: search_store /
+    search_store_wand past GATHER_MAX_BLOCKS blocks or with a deleted set
+    past cfg.max_deleted_driver (superseded docs then leave by the plans'
+    live-docs join), and search_store_phrase for `search_phrase`. The term
+    stats behind `search_fuzzy` / `suggest` are the one Spark relation the
+    reader caches, on first use.
 
     Concurrent callers (bench/soak.py threads) are safe: a call keeps its
-    arrays in locals, the term-stats cache is built under a lock, the
-    term memo and the row-group cache each have their own, and the only
-    other shared mutable state is the per-term df memo."""
+    arrays in locals, the term-stats cache, the term memo and the
+    row-group cache are built under locks, and the only other shared
+    mutable state is the per-term df memo."""
 
     def __init__(self, spark: SparkSession, store, cfg: IndexConfig = DEFAULT_CONFIG):
         self.spark = spark
@@ -711,13 +717,6 @@ class IndexReader:
                 self._term_stats_cache.unpersist()
                 self._term_stats_cache = None
 
-    def _scored(self, terms: list[str], stats_out: dict | None = None) -> dict | None:
-        """`terms` scored from the view's memo, or None when the deleted
-        set overflowed or they hold more than GATHER_MAX_BLOCKS blocks
-        (the caller then runs the store plan)."""
-        memo = self._memo
-        return None if memo is None else memo.get(terms, stats_out)
-
     def search(
         self,
         query_terms: list[str],
@@ -734,7 +733,8 @@ class IndexReader:
         bm25_topk)."""
         q_terms = sorted(set(query_terms))
         neg = sorted(set(must_not_terms or ()))
-        scored = self._scored(sorted(set(q_terms) | set(neg)))
+        memo = self._memo  # None past max_deleted_driver
+        scored = memo and memo.get(sorted(set(q_terms) | set(neg)))
         if scored is None:
             return Hits(search_store(
                 self.spark, self._view, q_terms, k=k, cfg=self.cfg,
@@ -751,14 +751,13 @@ class IndexReader:
         stats_out: dict | None = None,
         strategy: str = "wand",
     ) -> Hits:
-        """BM25 top-k as driver rows, rank-identical to `search`. Below
-        GATHER_MAX_BLOCKS it scores like `search`, from the view's term
-        memo, with no Spark or JVM call. With every candidate block on the
-        driver, the vectorized exact scorer beat the block-max scan at
+        """BM25 top-k as driver rows, rank-identical to `search`, and
+        scored like it below GATHER_MAX_BLOCKS. With every candidate block
+        on the driver the vectorized exact scorer beat the block-max scan at
         every block count measured (see GATHER_MAX_BLOCKS), so the scan
         (wand_topk) and the `strategy="auto"` cost model
-        (engine.wand.wand_is_cheaper) run only in search_store_wand, the
-        fallback (see the class docstring).
+        (engine.wand.wand_is_cheaper) run only in the search_store_wand
+        fallback.
 
         `stats_out` (evidence/debug) is filled from the same execution. On
         the driver, from the memo entries: candidate_blocks =
@@ -772,7 +771,8 @@ class IndexReader:
         if strategy not in ("wand", "auto"):
             raise ValueError(f"strategy must be 'wand' or 'auto', got {strategy!r}")
         q_terms = sorted(set(query_terms))
-        scored = self._scored(q_terms, stats_out)
+        memo = self._memo
+        scored = memo and memo.get(q_terms, stats_out)
         if scored is None:
             from engine.wand import search_store_wand
 

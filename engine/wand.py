@@ -84,9 +84,10 @@ def spark_round(x) -> np.ndarray:
     binary value, may differ) takes the Decimal path."""
     x = np.array(x, dtype=np.float64, ndmin=1)
     y = x * _SCALE
-    out = np.rint(y) / _SCALE
-    ay = np.abs(y)
-    for i in np.flatnonzero(np.abs(ay - np.floor(ay) - 0.5) <= 1e-3):
+    r = np.rint(y)
+    out = r / _SCALE
+    # |y - rint(y)| is y's distance to the nearest integer, ~0.5 at a half
+    for i in np.flatnonzero(np.abs(y - r) >= 0.5 - 1e-3):
         out.flat[i] = float(
             Decimal(repr(float(x.flat[i]))).quantize(_QUANTUM, rounding=ROUND_HALF_UP)
         )

@@ -4,7 +4,8 @@ view's term memo): rank identity with the distributed search_store /
 search_store_wand plans, cold and from the memo, the memo's reads, bound
 and lifetime, the zero-job pin, df_for_terms, the pinned ledger state, the
 fallbacks, and stats_out from the same execution, and the driver-side
-`Hits` every reader search returns."""
+`Hits` every reader search returns, and the driver scorer's summation
+order and top-k cut against brute-force references."""
 
 from __future__ import annotations
 
@@ -12,9 +13,12 @@ import itertools
 import json
 import math
 import os
+import pickle
 from dataclasses import replace
 
+import numpy as np
 import pytest
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 import engine.query as query_mod
@@ -25,7 +29,7 @@ from engine.fuzzy import search_store_fuzzy
 from engine.ingest import EARLIEST, as_partitioned_source, run_ingest_loop
 from engine.merge import merge_segments
 from engine.positions import search_store_phrase
-from engine.query import Hits, IndexReader, search_store, spark_round
+from engine.query import Hits, IndexReader, search_store, spark_round, topk_rounded
 from engine.segments import IndexStore
 from engine.updates import delete_by_ids
 from engine.wand import search_store_wand
@@ -77,7 +81,8 @@ def _hit_rows(hits):
     assert isinstance(hits, Hits) and hits.columns == ["doc_id", "score"]
     rows = hits.collect()
     assert hits.count() == len(rows)
-    assert all(type(r.doc_id) is int and type(r.score) is float for r in rows), rows
+    assert all(isinstance(r, Row) and type(r.doc_id) is int and type(r.score) is float
+               for r in rows), rows
     assert json.loads(json.dumps(rows)) == [[d, s] for d, s in rows]
     return rows
 
@@ -567,3 +572,121 @@ def test_spark_round_matches_spark(spark):
     df = spark.createDataFrame([(float(v),) for v in vals], "x double")
     got = [r[0] for r in df.select(F.round("x", SCORE_DECIMALS)).collect()]
     assert spark_round(vals).tolist() == got
+
+
+def _brute_topk(ids, raw, k):
+    """The top-k by definition: every score rounded, sorted by (score
+    desc, doc_id asc), cut at k."""
+    scores = spark_round(raw)
+    order = np.lexsort((ids, -scores))[:max(k, 0)]
+    return list(zip(ids[order].tolist(), scores[order].tolist()))
+
+
+def _five_decimals(rng, n):
+    """`n` scores of five decimals over a few rounded values: many ties
+    after rounding, exact halves (fifth decimal 5, Spark's HALF_UP on the
+    Decimal path) and scores 0.6 to 0.9 of a quantum below others they
+    round level with."""
+    whole = int(rng.choice([0, 1, 7, 123]))
+    quanta = rng.integers(0, 4, size=n)
+    fifth = rng.integers(0, 10, size=n)
+    return np.array([float(f"{whole}.{q:04d}{f}") for q, f in zip(quanta, fifth)])
+
+
+# k-th raw score 1.23454 (rounds down to 1.2345); docs 1 and 5 sit 0.7 and
+# 0.8 of a quantum below it and round up into the tie, which their lower
+# doc ids win
+TIE_BELOW_KTH = (np.array([9, 3, 7, 1, 5, 2]),
+                 np.array([1.23454, 1.23454, 1.2346, 1.23447, 1.23446, 1.2343]))
+
+
+@pytest.mark.parametrize("seed", [None, *range(60)])
+def test_topk_rounded_matches_brute_force(seed):
+    if seed is None:
+        ids, raw = TIE_BELOW_KTH
+        assert _brute_topk(ids, raw, 3) == [(7, 1.2346), (1, 1.2345), (3, 1.2345)]
+    else:
+        rng = np.random.default_rng(seed)
+        n = int(rng.integers(2, 40))
+        raw = _five_decimals(rng, n)
+        ids = rng.choice(10 * n, size=n, replace=False)  # distinct, unsorted
+    n = len(raw)
+    for k in (0, 1, 2, 3, n - 1, n, n + 5):
+        hits = topk_rounded(ids, raw, k)
+        assert [tuple(r) for r in hits.collect()] == _brute_topk(ids, raw, k), (seed, k)
+
+
+def test_driver_sums_a_docs_contributions_in_sorted_term_order():
+    """Nine contributions whose left-to-right sum is a decimal half, 1.23455
+    (rounds up), while numpy's pairwise sum and the sum in reverse term
+    order fall an ulp short (round down): a doc's score is the sum in
+    sorted term order, the Spark plan's."""
+    rng = np.random.default_rng(0)
+    target = 1.23455
+
+    def left_to_right(vals):
+        total = 0.0
+        for v in vals:
+            total += v
+        return total
+
+    for _ in range(10_000):
+        c = rng.uniform(0.05, 0.14, size=9)
+        c[-1] = target - left_to_right(c[:-1])
+        if (left_to_right(c) == target and np.add.reduce(c) < target
+                and left_to_right(c[::-1]) < target):
+            break
+    else:
+        pytest.fail("no contributions found")
+    assert spark_round(target)[0] == 1.2346 != spark_round(np.add.reduce(c))[0]
+    terms = [f"t{i}" for i in range(9)]
+    # doc 5 holds every term; docs 2 and 8 some, so the union interleaves
+    scored = {t: query_mod._Scored(1, 2, np.array([8, 5] if i % 2 else [5, 2]),
+                                   np.array([0.5, c[i]] if i % 2 else [c[i], 0.25]),
+                                   np.zeros(0, np.int64))
+              for i, t in enumerate(terms)}
+    got = [tuple(r) for r in query_mod._topk_scored(scored, terms, k=3).collect()]
+    assert got == _brute_topk(np.array([5, 8, 2]), np.array([target, 2.0, 1.25]), 3)
+    assert got[2] == (5, 1.2346)
+
+
+def test_reader_hits_are_pyspark_rows():
+    hits = topk_rounded(np.array([7, 3, 4]), np.array([0.25, 0.5, 0.125]), 2)
+    assert hits.collect() == [Row(doc_id=3, score=0.5), Row(doc_id=7, score=0.25)]
+    for r in hits.collect() + Hits([(11, 2.0)]).collect():
+        d, s = r
+        assert isinstance(r, Row) and r.doc_id == r[0] == d and r["score"] == r[1] == s
+        assert r.asDict() == {"doc_id": d, "score": s} and "score" in r
+        assert r == Row(doc_id=d, score=s)
+        back = pickle.loads(pickle.dumps(r))
+        assert back == r and isinstance(back, Row) and back.score == s
+        assert repr(r) == repr(Row(doc_id=d, score=s)) == f"Row(doc_id={d}, score={s!r})"
+    assert repr(hits) == "Hits([Row(doc_id=3, score=0.5), Row(doc_id=7, score=0.25)])"
+
+
+def test_many_term_sums_equal_search_store(spark, tmp_path):
+    """Ten query terms, passed unsorted, over docs that each hold all of
+    them with varied tf: every reader score is == (not approx) to
+    search_store's, from a sum of ten contributions per doc."""
+    rng = np.random.default_rng(7)
+    terms = ["alpha", "bravo", "charlie", "delta", "echo", "foxtrot", "golf",
+             "hotel", "india", "juliet"]
+    texts = [" ".join([t for t in terms for _ in range(int(rng.integers(1, 5)))]
+                      + ["filler"] * int(rng.integers(0, 6))) for _ in range(40)]
+    texts += ["kilo lima", "alpha mike"]
+    store = IndexStore(str(tmp_path), "sums").create()
+    run_ingest_loop(spark, store, as_partitioned_source(_pages(spark, texts), num_partitions=2),
+                    rows_per_partition=11)
+    query = [terms[i] for i in rng.permutation(len(terms))]
+    assert query != sorted(query)
+    want = _rows(search_store(spark, store, query, k=100))
+    conj = _rows(search_store(spark, store, query, k=100, conjunctive=True))
+    assert len(want) == 41 and len(conj) == 40
+    reader = IndexReader(spark, store)
+    try:
+        for _ in range(2):  # scored on the read, then from the memo
+            assert _rows(reader.search(query, k=100)) == want
+            assert _rows(reader.search_wand(query, k=100)) == want
+            assert _rows(reader.search(query, k=100, conjunctive=True)) == conj
+    finally:
+        reader.close()

@@ -26,6 +26,29 @@ def plan_of(df) -> str:
     return buf.getvalue()
 
 
+# a store directory of __spark_entry__.py: a tempfile.mkdtemp name (its
+# prefix plus 8 random characters) under the per-process temp root
+_TMP_DIR = re.compile(r"(?:/[\w.-]+)*/(sparkgraft_\w*?)\w{8}\b")
+# Spark's session-wide counters: expression ids and exchange plan ids
+_IDS = re.compile(r"(#|plan_id=)(\d+)")
+
+
+def mask_plan(plan: str) -> str:
+    """`plan` with what changes from run to run masked, so an unchanged
+    plan prints the same text every run: a store's temp path up to its
+    own directory becomes `<tmp>/sparkgraft_store_*`, and expression and
+    plan ids are renumbered in order of first appearance (`url#4776` ->
+    `url#1`)."""
+    plan = _TMP_DIR.sub(r"<tmp>/\1*", plan)
+    seen: dict[str, dict[str, int]] = {"#": {}, "plan_id=": {}}
+
+    def renumber(m: re.Match) -> str:
+        ids = seen[m[1]]
+        return f"{m[1]}{ids.setdefault(m[2], len(ids) + 1)}"
+
+    return _IDS.sub(renumber, plan)
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
@@ -396,6 +419,8 @@ def main() -> None:
         "physical plan and the scale-critical properties checked (predicate\n"
         "pushdown into parquet, broadcast of small sides, whole-stage codegen,\n"
         "no unnecessary shuffles). Re-generate after plan-shape changes.\n"
+        "Expression / plan ids and temp paths are masked, so a re-run over\n"
+        "unchanged plans leaves this file as it is.\n"
     )
     warns = []
     for name, (must, must_not) in audit.items():
@@ -412,7 +437,9 @@ def main() -> None:
             checks.append(f"  - MUST NOT `{rx}`: {'OK' if ok else '**PRESENT**'}")
             if not ok:
                 warns.append(f"WARN {name}: unexpected {rx}")
-        out.append(f"\n## {name}\n\n" + "\n".join(checks) + "\n\n```\n" + p.strip() + "\n```\n")
+        # checks run on the raw plan, the file gets the masked one
+        out.append(f"\n## {name}\n\n" + "\n".join(checks) + "\n\n```\n"
+                   + mask_plan(p).strip() + "\n```\n")
 
     with open("PLANS.md", "w") as f:
         f.write("\n".join(out))
